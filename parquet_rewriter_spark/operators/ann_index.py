@@ -239,7 +239,7 @@ class IVFVectorIndex:
             if not distributed:
                 ids = sorted({r[0] for r in head})
         elif not distributed:
-            ids = sorted({r[0] for r in df.select(id_col).collect()})
+            ids = sorted(r[0] for r in df.select(id_col).distinct().collect())
 
         if not distributed:
             # A re-added vector that STAYS in its cell keeps the same

@@ -43,11 +43,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 if TYPE_CHECKING:
-    from parquet_rewriter_spark.table import ManifestEntry, SortedTable
+    from parquet_rewriter_spark.table import Manifest, ManifestEntry, SortedTable
 
-from parquet_rewriter_spark.operators.sidecar import register_sidecar
+from parquet_rewriter_spark.operators.sidecar import SIDECARS, have_files
 
-BLOOM_DIR = register_sidecar("_blooms")
+BLOOM_DIR = SIDECARS["bloom"].dirname
 BLOOM_K = 7
 BLOOM_BITS_PER_KEY = 10
 
@@ -94,15 +94,18 @@ def _hashed_values_rel(spark: SparkSession, col_type, values: Sequence[Any]):
 
 
 def build_blooms(
-    table: "SortedTable", entries: list["ManifestEntry"], cols: list[str]
+    table: "SortedTable", entries: list["ManifestEntry"], m: "Manifest"
 ) -> int:
-    """Build and append sidecar bloom rows for ``entries`` (new files).
+    """Build and append sidecar bloom rows for ``entries`` (new files)
+    over every column in ``m.bloom_cols`` — the commit-time upkeep
+    (operators/sidecar.py).
 
     One job: scan only those files, project (file, k hashes per col),
     fold into per-(file, col) bitmaps in mapInPandas (each task sees
     one file's rows in practice — file-sized input splits — so partials
     are few), OR partials per file, append to the sidecar.
     """
+    cols = list(m.bloom_cols or [])
     if not entries or not cols:
         return 0
     spark = table.spark
@@ -154,6 +157,20 @@ def build_blooms(
     final.write.mode("append").parquet(out_dir)
     bc.unpersist()
     return len(entries)
+
+
+def heal_blooms(table: "SortedTable", m: "Manifest") -> int:
+    """Bloom rows for live files of ``m`` missing one for any
+    registered column (``maintain()``'s heal step). Returns files
+    built."""
+    if not m.bloom_cols:
+        return 0
+    have = have_files(table, BLOOM_DIR, cols=("file", "col"))
+    todo = [
+        e for e in m.files
+        if any((e.name, c) not in have for c in m.bloom_cols)
+    ]
+    return build_blooms(table, todo, m)
 
 
 def candidate_files(

@@ -37,12 +37,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from parquet_rewriter_spark.operators.sidecar import (
+    SIDECARS,
     have_files,
-    register_sidecar,
     semi_join_files,
 )
 
-COV_DIR = register_sidecar("_covstats")
+COV_DIR = SIDECARS["covstats"].dirname
 
 
 def _sidecar(table) -> str:
@@ -109,8 +109,8 @@ def covariance_from_stats(
     """(n, mean, cov) of the current snapshot — or a key range at FILE
     grain (boundary files contribute all their rows, same grain as
     approx_distinct_range) — from sidecar triples only. Self-heals
-    missing rows (compact/DV-rewrite paths have no build hook) before
-    summing. No data file is read when the sidecar is complete."""
+    missing rows (covstats registers nothing in the manifest, so no
+    commit builds them) before summing. No data file is read when the sidecar is complete."""
     m = table.manifest()
     pcol = table.to_physical(vec_col, m)
     keep = [

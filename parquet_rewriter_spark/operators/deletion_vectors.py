@@ -121,7 +121,6 @@ def delete_keys_mor(table: SortedTable, keys: DataFrame) -> dict:
             files=files,
             schema_json=m.schema_json,
             stats_cols=m.stats_cols,
-            bloom_cols=m.bloom_cols,
             dv_files=m.dv_files + [rel],
             operation="delete (merge-on-read)",
         )
@@ -211,7 +210,6 @@ def materialize_deletes(table: SortedTable, max_records_per_file: int | None = N
             files=sorted(clean + new_entries, key=lambda e: (e.key_min, e.name)),
             schema_json=m.schema_json,
             stats_cols=m.stats_cols,
-            bloom_cols=m.bloom_cols,
             dv_files=[],  # every tombstone is now physical
             operation="materialize-deletes",
         )

@@ -11,11 +11,12 @@ count of ANY file subset — e.g. a manifest key range — is one union
 over a handful of kilobyte sidecar rows instead of a table scan.
 
 Incremental by construction: data files are immutable and sketch rows
-key by file name, so ``build_distinct_sketches`` computes sketches
-only for live files that lack one — a merge that rewrote 1% of files
-re-sketches 1%. Stale rows of retired files are ignored at query time
-(live-file filter, same pattern as the bloom sidecar) and cleaned by
-bloom-style vacuum of the sidecar if it ever accretes.
+key by file name, so every commit of a table with registered columns
+(``enable_distinct_sketches``) sketches only the files it wrote — a
+merge that rewrote 1% of files re-sketches 1% — and
+``build_distinct_sketches`` only live files that lack a row. Stale rows
+of retired files are ignored at query time (live-file filter, same
+pattern as the bloom sidecar) and swept by vacuum.
 
 All sketch math is JVM-side (`hll_sketch_agg` / `hll_union_agg` /
 `hll_sketch_estimate` — Apache DataSketches inside Spark); default
@@ -30,12 +31,12 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from parquet_rewriter_spark.operators.sidecar import (
+    SIDECARS,
     have_files,
-    register_sidecar,
     semi_join_files,
 )
 
-SKETCH_DIR = register_sidecar("_distinct")
+SKETCH_DIR = SIDECARS["distinct_sketch"].dirname
 DEFAULT_LGK = 12
 
 
@@ -84,6 +85,10 @@ def build_distinct_sketches(
     (logical names). Returns files sketched."""
     m = table.manifest()
     pcols = [table.to_physical(c, m) for c in cols]
+    return _build_missing(table, m, pcols, lgk)
+
+
+def _build_missing(table, m, pcols: list[str], lgk: int) -> int:
     have = _have_rows(table, pcols)
     todo = [
         e.name for e in m.files
@@ -92,14 +97,24 @@ def build_distinct_sketches(
     return _build_for(table, todo, pcols, lgk)
 
 
-def build_sketches_for(
-    table, entries, pcols: list[str], lgk: int = DEFAULT_LGK
-) -> int:
-    """Sketch the given manifest entries (PHYSICAL cols) — the hook
-    merge_into_table calls for its newly-written files, mirroring
-    build_blooms: the incremental cost of a merge's sketch upkeep is
-    proportional to the files the merge rewrote, never the table."""
-    return _build_for(table, [e.name for e in entries], list(pcols), lgk)
+def build_sketches_for(table, entries, m) -> int:
+    """Sketch the given manifest entries under every registered column
+    of ``m`` — the commit-time upkeep (operators/sidecar.py): its cost
+    is proportional to the files the commit wrote, never the table."""
+    return _build_for(
+        table, [e.name for e in entries], list(m.sketch_cols or []),
+        DEFAULT_LGK,
+    )
+
+
+def heal_sketches(table, m) -> int:
+    """Sketch live files of ``m`` missing a row for any registered
+    column or any column the sidecar already holds (tables sketched
+    before registration existed) — ``maintain()``'s heal step. Returns
+    files sketched."""
+    pcols = list(m.sketch_cols or [])
+    pcols += sorted(have_files(table, SKETCH_DIR, cols=("col",)) - set(pcols))
+    return _build_missing(table, m, pcols, DEFAULT_LGK) if pcols else 0
 
 
 def enable_distinct_sketches(
@@ -107,8 +122,8 @@ def enable_distinct_sketches(
 ) -> int:
     """Register ``cols`` (logical names) for distinct sketching in the
     table manifest — a metadata-only commit — then backfill sketches
-    for every live file. From here on merges auto-refresh rows for the
-    files they rewrite and ``maintain()`` heals any gaps, so
+    for every live file. From here on every commit sketches the files
+    it writes and ``maintain()`` heals any gaps, so
     ``approx_distinct_range`` stays scan-free and current without
     explicit refresh calls."""
     from parquet_rewriter_spark.table import Manifest
@@ -124,7 +139,6 @@ def enable_distinct_sketches(
                 files=list(m.files),
                 schema_json=m.schema_json,
                 stats_cols=m.stats_cols,
-                bloom_cols=m.bloom_cols,
                 sketch_cols=want,
                 dv_files=list(m.dv_files),
                 operation=f"enable-distinct-sketches {','.join(cols)}",
@@ -146,12 +160,11 @@ def approx_distinct_range(
     boundary file outside the range are included (document the grain;
     exact range cuts need the scan path).
 
-    Self-healing: files in range that lack a sidecar row (written by an
-    operation that predates registration, or by a path without the
-    merge hook — compact, DV rewrite) are sketched on demand before the
-    union. A missing row would otherwise contribute NOTHING and the
-    estimate would silently undercount — the one failure mode a
-    mergeable sketch can't tolerate."""
+    Self-healing: files in range that lack a sidecar row (the column
+    is not registered, or the files predate its registration) are
+    sketched on demand before the union. A missing row would otherwise
+    contribute NOTHING and the estimate would silently undercount — the
+    one failure mode a mergeable sketch can't tolerate."""
     spark = table.spark
     m = table.manifest()
     pcol = table.to_physical(col, m)

@@ -42,12 +42,12 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from parquet_rewriter_spark.operators.sidecar import (
+    SIDECARS,
     have_files,
-    register_sidecar,
     semi_join_files,
 )
 
-DRIFT_DIR = register_sidecar("_driftstats")
+DRIFT_DIR = SIDECARS["driftstats"].dirname
 
 
 def _sidecar(table) -> str:
@@ -107,22 +107,27 @@ def build_drift_stats(
     registration. Returns the number of files built — after a merge
     this is the churn, never the table."""
     m = table.manifest()
-    pv = table.to_physical(value_col, m)
-    pg = table.to_physical(group_col, m)
+    spec = {"value": table.to_physical(value_col, m),
+            "group": table.to_physical(group_col, m), "edges": edges}
+    return _build_missing(table, m, spec)
+
+
+def _build_missing(table, m, spec: dict) -> int:
+    pv, pg, edges = spec["value"], spec["group"], spec["edges"]
     sid = _spec_id(pv, pg, edges)
     have = _have_files(table, sid)
     todo = [e.name for e in m.files if e.name not in have]
     return _build_for(table, todo, pv, pg, edges, sid)
 
 
-def build_drift_for(table, entries, specs: Sequence[dict]) -> int:
+def build_drift_for(table, entries, m) -> int:
     """Count matrices for the given manifest entries under every
-    REGISTERED monitor spec — the hook merge_into_table calls for its
-    newly-written files (mirroring build_sketches_for): upkeep cost is
-    proportional to the files the merge rewrote, never the table."""
+    monitor spec registered in ``m`` — the commit-time upkeep
+    (operators/sidecar.py): its cost is proportional to the files the
+    commit wrote, never the table."""
     total = 0
     names = [e.name for e in entries]
-    for spec in specs:
+    for spec in m.drift_specs or []:
         pv, pg, edges = spec["value"], spec["group"], spec["edges"]
         total += _build_for(
             table, names, pv, pg, edges, _spec_id(pv, pg, edges)
@@ -130,15 +135,22 @@ def build_drift_for(table, entries, specs: Sequence[dict]) -> int:
     return total
 
 
+def heal_drift(table, m) -> int:
+    """Count matrices for live files of ``m`` missing one under any
+    registered monitor — ``maintain()``'s heal step. Returns files
+    counted."""
+    return sum(_build_missing(table, m, s) for s in m.drift_specs or [])
+
+
 def enable_drift_monitor(
     table, value_col: str, group_col: str, edges: Sequence[Any]
 ) -> int:
     """Register a drift monitor in the table manifest — a metadata-only
     commit — then backfill count matrices for every live file. From
-    here on merges auto-refresh matrices for the files they rewrite and
-    ``maintain()`` heals any gaps, so the from-stats statistics (PSI,
-    binned KS/W1, chi-square, the timelines) stay scan-free and current
-    without explicit ``build_drift_stats`` calls. Edges must be
+    here on every commit counts the files it writes and ``maintain()``
+    heals any gaps, so the from-stats statistics (PSI, binned KS/W1,
+    chi-square, the timelines) stay scan-free and current without
+    explicit ``build_drift_stats`` calls. Edges must be
     JSON-native (numbers or strings) — they persist in the manifest.
     The spec stores PHYSICAL column names (rename-safe, like
     sketch_cols)."""
@@ -164,8 +176,6 @@ def enable_drift_monitor(
                 files=list(m.files),
                 schema_json=m.schema_json,
                 stats_cols=m.stats_cols,
-                bloom_cols=m.bloom_cols,
-                sketch_cols=m.sketch_cols,
                 drift_specs=have + [spec],
                 dv_files=list(m.dv_files),
                 operation=(
@@ -204,8 +214,6 @@ def disable_drift_monitor(
             files=list(m.files),
             schema_json=m.schema_json,
             stats_cols=m.stats_cols,
-            bloom_cols=m.bloom_cols,
-            sketch_cols=m.sketch_cols,
             drift_specs=[s for s in have if s != spec],
             dv_files=list(m.dv_files),
             operation=f"disable-drift-monitor {value_col} by {group_col}",
@@ -508,9 +516,9 @@ def psi_from_stats(
     round_digits: int = 6,
 ) -> DataFrame:
     """Per-group PSI vs rest of the CURRENT snapshot, answered from
-    sidecar rows only — self-heals missing files (compact/DV-rewrite
-    paths have no build hook), then sums |G|·(B+2) integers on the
-    driver. No data file is read when the sidecar is complete.
+    sidecar rows only — self-heals missing files (specs built on
+    request, files predating the registration), then sums |G|·(B+2)
+    integers on the driver. No data file is read when the sidecar is complete.
     Returns (group, n_group, n_rest, psi) like psi_drift_by_group —
     NULL-group rows count toward every group's rest, no output row;
     NULL VALUES live in the reserved bin −1 and drift like any other
@@ -748,7 +756,8 @@ def psi_timeline(
     broadcast-joined to the count matrices, which aggregate to
     ≤ |versions|·(B+2) integers; retired files' matrices persist until
     vacuum, so history stays summable, and files missing a matrix
-    (compact/DV-rewrite paths) are healed across ALL versions first.
+    (e.g. written before the registration) are healed across ALL
+    versions first.
     Returns (version, committed_at, n_rows, psi) ordered by version."""
     versions, committed, cells = _version_cells(
         table, value_col, group_col, edges, v_base, keys=("version", "bin")

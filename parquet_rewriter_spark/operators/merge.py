@@ -709,11 +709,12 @@ def merge_into_table(
     distributed path; ``allow_splice=False`` forces it off.
 
     Returns merge metrics: file/row counts plus per-phase wall-times
-    (``t_plan_s`` / ``t_write_s`` / ``t_commit_s``), mirroring the
-    reference's phase counters (ParquetRewriter.java:349-359). "Write"
-    covers read-merge-write — Spark executes the lazy merge plan inside
-    the write job, so the phases aren't separable without breaking the
-    pipeline.
+    (``t_plan_s`` / ``t_write_s`` / ``t_sidecar_s`` / ``t_commit_s``),
+    mirroring the reference's phase counters
+    (ParquetRewriter.java:349-359). "Write" covers read-merge-write —
+    Spark executes the lazy merge plan inside the write job, so the
+    phases aren't separable without breaking the pipeline. "Sidecar" is
+    the commit's upkeep of registered sidecars for the files written.
 
     ``bucket_write_min_bytes`` overrides ``BUCKET_WRITE_MIN_BYTES`` for
     this merge (0 forces the zero-sampling bucketed write; None uses
@@ -1025,11 +1026,12 @@ def merge_into_table(
     t_write = time.monotonic() - t0
 
     t0 = time.monotonic()
+    t_sidecar = 0.0
     if dirty or new_entries:
         from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
 
         files = sorted(clean + new_entries, key=lambda e: (e.key_min, e.name))
-        table._commit_manifest(
+        t_sidecar = table._commit_manifest(
             Manifest(
                 version=m.version + 1,
                 key=key,
@@ -1041,7 +1043,6 @@ def merge_into_table(
                           or merged.drop(_BUCKET).schema.json())
                 ),
                 stats_cols=m.stats_cols,
-                bloom_cols=m.bloom_cols,
                 dv_files=retain_dv(table, m, {e.name for e in clean}),
                 operation="merge",
                 txns={**m.txns, txn[0]: txn[1]} if txn else {},
@@ -1053,25 +1054,7 @@ def merge_into_table(
         # snapshot version — keeps foreachBatch heartbeats from churning
         # time-travel history
         version = m.version
-    t_commit = time.monotonic() - t0
-    if m.sketch_cols and new_entries:
-        # distinct-count sketch upkeep ∝ files rewritten, never the
-        # table: missing sidecar rows would make approx_distinct_range
-        # silently undercount (unlike blooms, where missing = candidate)
-        from parquet_rewriter_spark.operators.distinct_sketch import (
-            build_sketches_for,
-        )
-
-        build_sketches_for(table, new_entries, m.sketch_cols)
-    if m.drift_specs and new_entries:
-        # registered drift monitors: count matrices for the rewritten
-        # files only (reads would self-heal, but at scan cost the
-        # registration exists to avoid)
-        from parquet_rewriter_spark.operators.driftstats import (
-            build_drift_for,
-        )
-
-        build_drift_for(table, new_entries, m.drift_specs)
+    t_commit = time.monotonic() - t0 - t_sidecar
     if changelog and version != m.version:
         from parquet_rewriter_spark.operators.cdc import write_changelog
 
@@ -1087,7 +1070,8 @@ def merge_into_table(
         # ParquetRewriter.java:349-359, at Spark's natural grain):
         # t_plan_s = dirty-file planning, t_write_s = the read+merge+
         # write job (one fused Spark job — a finer read/write split
-        # would require materializing between stages), t_commit_s =
+        # would require materializing between stages), t_sidecar_s =
+        # registered sidecar rows for the new files, t_commit_s =
         # manifest commit; rows/bytes_read are the dirty inputs, *_
         # written the produced files — all driver-side arithmetic.
         "rows_read": sum(e.rows for e in dirty),
@@ -1095,6 +1079,7 @@ def merge_into_table(
         "bytes_written": sum(e.bytes for e in new_entries),
         "t_plan_s": round(t_plan, 4),
         "t_write_s": round(t_write, 4),
+        "t_sidecar_s": round(t_sidecar, 4),
         "t_commit_s": round(t_commit, 4),
         # which write partitioner actually ran — "bucketed" (manifest
         # cuts, zero sampling), "range" (byte threshold kept the fused
@@ -1133,39 +1118,19 @@ def _try_splice(table, m, dirty, clean, mutations, key, t_plan, txn=None) -> dic
     files = sorted(clean + new_entries, key=lambda e: (e.key_min, e.name))
     # splice is only taken when no DIRTY file is tombstoned, so every
     # dv'd file survives in `clean` and the sidecar list carries over
-    table._commit_manifest(
+    t_sidecar = table._commit_manifest(
         Manifest(
             version=m.version + 1,
             key=key,
             files=files,
             schema_json=m.schema_json,
             stats_cols=m.stats_cols,
-            bloom_cols=m.bloom_cols,
             dv_files=list(m.dv_files),
             operation="merge (rowgroup-splice)",
             txns={**m.txns, txn[0]: txn[1]} if txn else {},
         )
     )
-    t_commit = time.monotonic() - t0
-    if m.bloom_cols and new_entries:
-        # keep the pruning contract: spliced files get bloom rows too.
-        # One small job over just these files — costs more than the
-        # splice itself saved only in the degenerate tiny-table case.
-        from parquet_rewriter_spark.operators.bloom import build_blooms
-
-        build_blooms(table, new_entries, m.bloom_cols)
-    if m.sketch_cols and new_entries:
-        from parquet_rewriter_spark.operators.distinct_sketch import (
-            build_sketches_for,
-        )
-
-        build_sketches_for(table, new_entries, m.sketch_cols)
-    if m.drift_specs and new_entries:
-        from parquet_rewriter_spark.operators.driftstats import (
-            build_drift_for,
-        )
-
-        build_drift_for(table, new_entries, m.drift_specs)
+    t_commit = time.monotonic() - t0 - t_sidecar
     return {
         "version": m.version + 1,
         "files_total": len(m.files),
@@ -1178,6 +1143,7 @@ def _try_splice(table, m, dirty, clean, mutations, key, t_plan, txn=None) -> dic
         "bytes_written": sum(e.bytes for e in new_entries),
         "t_plan_s": round(t_plan, 4),
         "t_write_s": round(t_write, 4),
+        "t_sidecar_s": round(t_sidecar, 4),
         "t_commit_s": round(t_commit, 4),
         "path": "rowgroup_splice",
         **rg_stats,

@@ -243,7 +243,6 @@ def merge_conditional_into_table(
             files=files,
             schema_json=m.schema_json,
             stats_cols=m.stats_cols,
-            bloom_cols=m.bloom_cols,
             dv_files=retain_dv(table, m, {e.name for e in clean}),
             operation="merge (conditional)",
         )

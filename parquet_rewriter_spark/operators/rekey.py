@@ -186,7 +186,6 @@ def rekey_table(
             files=sorted(entries, key=lambda e: (e.key_min, e.name)),
             schema_json=m.schema_json,
             stats_cols=stats_cols,
-            bloom_cols=m.bloom_cols,
             # sidecars key tombstones by the OLD physical key; the guard
             # above re-rewrote every dv-bearing file, so whatever is left
             # references no live file — dropping it here is the only
@@ -235,7 +234,6 @@ def rekey_table(
         files=sorted(keep + new_entries, key=lambda e: (e.key_min, e.name)),
         schema_json=m.schema_json,
         stats_cols=m.stats_cols,
-        bloom_cols=m.bloom_cols,
         dv_files=retain_dv(table, m, {e.name for e in keep}),
         operation=f"rekey-batch ({m.key} -> {pkey_new})",
     ))

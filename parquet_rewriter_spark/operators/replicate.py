@@ -61,6 +61,8 @@ def replicate(src: SortedTable, dst_path: str) -> dict:
         import dataclasses
         import shutil
 
+        from parquet_rewriter_spark.operators.sidecar import SIDECAR_DIRS
+
         def _link_or_copy(s: str, d: str) -> None:
             # data files are immutable (merges write NEW files; vacuum
             # unlinks, which leaves the other name's inode intact), so a
@@ -77,7 +79,7 @@ def replicate(src: SortedTable, dst_path: str) -> dict:
             _link_or_copy(
                 os.path.join(src.path, e.name), os.path.join(dst_path, e.name)
             )
-        for side in ("_dv", "_blooms", "_distinct", "_driftstats", "_tokenstats"):
+        for side in ("_dv", *SIDECAR_DIRS):
             sp = os.path.join(src.path, side)
             if os.path.isdir(sp):
                 shutil.copytree(
@@ -85,6 +87,8 @@ def replicate(src: SortedTable, dst_path: str) -> dict:
                     copy_function=_link_or_copy,
                 )
         dst = SortedTable(spark, dst_path)
+        # parent=src_m: the copied sidecars already cover every file,
+        # so the commit has no new files to build rows for
         dst._commit_manifest(
             dataclasses.replace(
                 src_m,
@@ -92,7 +96,8 @@ def replicate(src: SortedTable, dst_path: str) -> dict:
                 operation="replicate (seed clone)",
                 txns={app: src_m.version},
                 committed_at=None,
-            )
+            ),
+            parent=src_m,
         )
         return {
             "mode": "seed",

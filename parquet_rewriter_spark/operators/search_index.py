@@ -246,6 +246,9 @@ class SearchIndex:
             # Writing besides the live path breaks the cycle for free,
             # and an emptied bucket simply writes no partition dir, so
             # the swap removes it: no second pass, no naming contract.
+            # Each live bucket moves aside (into the temp root) before
+            # the fresh one renames in, and every rename is checked: a
+            # failed swap raises with the old postings put back.
             import uuid as _uuid
 
             refreshed = kept.unionByName(fresh).select(
@@ -258,16 +261,26 @@ class SearchIndex:
             jvm = spark.sparkContext._jvm
             hconf = spark.sparkContext._jsc.hadoopConfiguration()
             HPath = jvm.org.apache.hadoop.fs.Path
+            tmp_p = HPath(tmp)
+            fs = tmp_p.getFileSystem(hconf)
+            aside_root = HPath(f"{tmp}/_aside")
+            if not fs.mkdirs(aside_root):
+                raise OSError(f"search index: cannot create {aside_root}")
             for b in buckets:
                 dst = HPath(f"{self._postings_path}/bucket={b}")
                 src = HPath(f"{tmp}/bucket={b}")
-                fs = dst.getFileSystem(hconf)
-                if fs.exists(dst):
-                    fs.delete(dst, True)
-                if fs.exists(src):
-                    fs.rename(src, dst)
-            tmp_p = HPath(tmp)
-            tmp_p.getFileSystem(hconf).delete(tmp_p, True)
+                aside = HPath(f"{tmp}/_aside/bucket={b}")
+                had_dst = fs.exists(dst)
+                if had_dst and not fs.rename(dst, aside):
+                    raise OSError(f"search index: cannot move {dst} aside")
+                if fs.exists(src) and not fs.rename(src, dst):
+                    if had_dst and not fs.rename(aside, dst):
+                        raise OSError(
+                            f"search index: cannot rename {src} to {dst}; "
+                            f"the old postings are left at {aside}"
+                        )
+                    raise OSError(f"search index: cannot rename {src} to {dst}")
+            fs.delete(tmp_p, True)
 
         # stats deltas came from the same fused collect (no corpus scan)
         diff.unpersist()

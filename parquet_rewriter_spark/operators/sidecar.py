@@ -1,12 +1,28 @@
 """Shared plumbing for per-file sidecar logs.
 
-Four operators keep append-only parquet logs next to the table, one
+Five operators keep append-only parquet logs next to the table, one
 row (or row group) per immutable data file: bloom filters
 (operators/bloom.py), HLL distinct sketches
-(operators/distinct_sketch.py), covariance triples
-(operators/covstats.py), and drift count matrices
-(operators/driftstats.py). They share two obligations this module
-centralizes:
+(operators/distinct_sketch.py), drift count matrices
+(operators/driftstats.py), covariance triples (operators/covstats.py)
+and token-count zone maps (operators/tokenstats.py). Their shared
+obligations live here:
+
+* **One registry.** :data:`SIDECARS` is the static list of every
+  sidecar: its directory, the manifest field that registers it (if
+  any), the builder a commit runs for new files, and the heal step
+  ``maintain()`` runs. Vacuum sweeps, replicas copy, commits build and
+  maintenance heals exactly this list — no import order can hide an
+  entry, and a new sidecar is one line here.
+
+* **Upkeep inside the commit.** ``SortedTable._commit_manifest`` calls
+  :func:`build_new` with the files a snapshot adds over its parent,
+  BEFORE it claims the version. Every commit path (merge, splice,
+  compact, WAP, rekey, deletion-vector rewrites, branch publish) thus
+  leaves each manifest-registered sidecar complete for the version it
+  commits, paying only for the files it wrote — no call site carries
+  sidecar code. covstats/tokenstats register nothing in the manifest:
+  they are built on request and heal on read.
 
 * **Live-file filtering without IN-lists.** A sidecar reader must keep
   only rows belonging to the current snapshot's files. Filtering with
@@ -17,15 +33,6 @@ centralizes:
   DataFrame of names and broadcast left-semi-joins it: the plan stays
   O(1) in file count, the names travel as broadcast DATA.
 
-* **Vacuum registration.** Every sidecar log keys rows by the ``file``
-  column, so vacuum can sweep them all with one keep-filter rewrite —
-  but only if it knows they exist. Each sidecar module registers its
-  directory at import time via :func:`register_sidecar`; adding a new
-  sidecar is that one line, and ``SortedTable.vacuum`` sweeps whatever
-  is registered (a fifth sidecar can no longer be forgotten the way
-  driftstats nearly was — it had to piggyback on a hook then named
-  ``_vacuum_blooms``).
-
 The per-file rows themselves stay manifest-scale by design (one small
 row per file); it is only the *plan* representation of the live set
 this module keeps bounded.
@@ -33,24 +40,76 @@ this module keeps bounded.
 
 from __future__ import annotations
 
+import importlib
 import os
+from dataclasses import dataclass
 from typing import Iterable
 
 from pyspark.sql import DataFrame, functions as F
 
-# Directory names (relative to the table path) of every registered
-# per-file sidecar log. Populated by register_sidecar() at module
-# import; table.vacuum() sweeps exactly this list.
-SIDECAR_DIRS: list[str] = []
+
+@dataclass(frozen=True)
+class Sidecar:
+    """One per-file sidecar log. Function fields name functions of the
+    owning module (imported lazily: the modules import this one)."""
+
+    dirname: str  # relative to the table path; rows keyed by ``file``
+    # Manifest field whose non-empty value obliges every commit to
+    # build rows for its new files; None = built on request only
+    registration: str | None = None
+    build: str | None = None  # (table, entries, manifest) -> files built
+    heal: str | None = None  # (table, manifest) -> files built
+    report: tuple[str, str] | None = None  # maintain() key, count field
 
 
-def register_sidecar(dirname: str) -> str:
-    """Register a per-file sidecar directory for the generic vacuum
-    sweep and return the name (so modules can write
-    ``X_DIR = register_sidecar("_x")``). Idempotent."""
-    if dirname not in SIDECAR_DIRS:
-        SIDECAR_DIRS.append(dirname)
-    return dirname
+# keyed by the implementing module under parquet_rewriter_spark.operators
+SIDECARS: dict[str, Sidecar] = {
+    "bloom": Sidecar(
+        "_blooms", "bloom_cols", "build_blooms", "heal_blooms",
+        ("blooms", "files_built"),
+    ),
+    "distinct_sketch": Sidecar(
+        "_distinct", "sketch_cols", "build_sketches_for", "heal_sketches",
+        ("sketches", "files_sketched"),
+    ),
+    "driftstats": Sidecar(
+        "_driftstats", "drift_specs", "build_drift_for", "heal_drift",
+        ("drift", "files_counted"),
+    ),
+    "covstats": Sidecar("_covstats"),
+    "tokenstats": Sidecar(
+        "_tokenstats", heal="heal_token_stats",
+        report=("token_stats", "files_built"),
+    ),
+}
+SIDECAR_DIRS: list[str] = [s.dirname for s in SIDECARS.values()]
+
+
+def _fn(module: str, name: str):
+    mod = importlib.import_module(f"parquet_rewriter_spark.operators.{module}")
+    return getattr(mod, name)
+
+
+def build_new(table, entries: list, m) -> None:
+    """Commit-time upkeep: rows for ``entries`` (the files snapshot
+    ``m`` adds) in every sidecar ``m`` registers. A commit with no
+    registrations touches no sidecar directory."""
+    if not entries:
+        return
+    for module, s in SIDECARS.items():
+        if s.registration and getattr(m, s.registration):
+            _fn(module, s.build)(table, entries, m)
+
+
+def heal_all(table, m) -> dict:
+    """``maintain()``'s heal step: rows for live files of ``m`` that a
+    sidecar lacks (lost rows, tables registered after their files were
+    written). One report entry per healed sidecar."""
+    return {
+        s.report[0]: {s.report[1]: _fn(module, s.heal)(table, m)}
+        for module, s in SIDECARS.items()
+        if s.heal
+    }
 
 
 # Below this many names an In-literal is the cheaper plan (Spark

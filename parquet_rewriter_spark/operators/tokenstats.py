@@ -52,12 +52,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from parquet_rewriter_spark.operators.bpe import words_expr
 from parquet_rewriter_spark.operators.sidecar import (
+    SIDECARS,
     have_files,
-    register_sidecar,
     semi_join_files,
 )
 
-TOKEN_DIR = register_sidecar("_tokenstats")
+TOKEN_DIR = SIDECARS["tokenstats"].dirname
 
 
 @dataclass(frozen=True)
@@ -250,7 +250,7 @@ def _parse_spec(sid: str) -> tuple[str, str, bool, TokenizerRef | None]:
     return ps, pt_col, pretokenize, tok
 
 
-def heal_token_stats(table) -> int:
+def heal_token_stats(table, m=None) -> int:
     """Build (file, source, n_docs, n_tokens) rows for live files
     missing them under EVERY spec the sidecar already holds — the
     ``maintain()`` heal step (the distinct-sketch "whatever the
@@ -258,16 +258,12 @@ def heal_token_stats(table) -> int:
     all stay accounted without explicit ``build_token_stats`` calls,
     for word AND frozen-tokenizer accountings alike (tokenizer specs
     reload their rules from the embedded artifact path). Cost ∝
-    unaccounted files, zero when current. Returns files built."""
-    side = _sidecar(table)
-    if not os.path.isdir(side):
+    unaccounted files, zero when current. ``m`` defaults to the
+    current snapshot. Returns files built."""
+    specs = sorted(have_files(table, TOKEN_DIR, cols=("spec",)))
+    if not specs:
         return 0
-    specs = [
-        r["spec"]
-        for r in table.spark.read.parquet(side)
-        .select("spec").distinct().collect()
-    ]
-    m = table.manifest()
+    m = m or table.manifest()
     live = [e.name for e in m.files]
     built = 0
     for sid in specs:

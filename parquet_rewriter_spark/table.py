@@ -33,6 +33,7 @@ import decimal
 import json
 import os
 import shutil
+import time
 import uuid
 from dataclasses import asdict, dataclass, field
 from typing import Any
@@ -119,23 +120,21 @@ class Manifest:
     # columns (beyond the key) whose per-file min/max zone maps are
     # maintained across merges/compactions for read_where pruning
     stats_cols: list[str] = field(default_factory=list)
+    # Sidecar registrations (operators/sidecar.py:SIDECARS): every
+    # commit builds rows for the files it adds in each registered
+    # sidecar. ``None`` means "writer didn't think about it":
+    # _commit_manifest inherits the parent snapshot's value (same
+    # contract as rename_map/txns), so no commit drops a registration.
     # columns with per-file Bloom filters (sidecar _blooms/) for
     # point-lookup file skipping — see operators/bloom.py
-    bloom_cols: list[str] = field(default_factory=list)
+    bloom_cols: list[str] | None = None
     # PHYSICAL column names with per-file distinct-count HLL sketches
-    # (sidecar _distinct/) — see operators/distinct_sketch.py. ``None``
-    # means "writer didn't think about sketches": _commit_manifest
-    # inherits the previous snapshot's list (same contract as
-    # rename_map/txns), so merge/compact/DDL commits keep the
-    # registration alive and merge can auto-refresh new files' rows.
+    # (sidecar _distinct/) — see operators/distinct_sketch.py
     sketch_cols: list[str] | None = None
     # registered drift monitors (sidecar _driftstats/) — each a
     # JSON-native dict {"value": <physical col>, "group": <physical
     # col>, "edges": [...numbers/strings...]}; see
-    # operators/driftstats.py:enable_drift_monitor. Same ``None`` =
-    # "writer didn't think about it" inheritance contract as
-    # sketch_cols, so merges keep auto-refreshing count matrices for
-    # the files they rewrite.
+    # operators/driftstats.py:enable_drift_monitor
     drift_specs: list | None = None
     # merge-on-read deletion-vector sidecars (relative paths under the
     # table dir, each a parquet dir of (file, <key>) tombstones) active
@@ -186,7 +185,7 @@ class Manifest:
                 "key": self.key,
                 "schema_json": self.schema_json,
                 "stats_cols": self.stats_cols,
-                "bloom_cols": self.bloom_cols,
+                "bloom_cols": self.bloom_cols or [],
                 "sketch_cols": self.sketch_cols or [],
                 "drift_specs": self.drift_specs or [],
                 "dv_files": self.dv_files,
@@ -472,7 +471,9 @@ class SortedTable:
         """Snapshot read at a TIMESTAMP (version_asof + read)."""
         return self.read(version=self.version_asof(ts))
 
-    def _commit_manifest(self, m: Manifest) -> None:
+    def _commit_manifest(
+        self, m: Manifest, parent: Manifest | None = None
+    ) -> float:
         """Atomic manifest flip with optimistic concurrency.
 
         Every commit retains an immutable per-version snapshot
@@ -489,52 +490,45 @@ class SortedTable:
         different primitive.) The mutable `_manifest.json` pointer is
         then an ordinary atomic rename; it only ever moves forward,
         because every writer must win its version claim first.
+
+        ``parent`` is the snapshot ``m`` derives from (default: this
+        table's version ``m.version - 1``). Fields left ``None`` inherit
+        its values, and before the claim every sidecar ``m`` registers
+        gets rows for the files ``m`` adds over it
+        (operators/sidecar.py:build_new) — so a committed version never
+        lacks them. Returns the seconds spent on that sidecar upkeep.
         """
-        m.committed_at = datetime.datetime.now(datetime.timezone.utc).isoformat()
-        if m.rename_map is None and m.version > 0:
-            # inherit the column-rename mapping through commits that
-            # don't know about it (merge, compact, WAP, DV deletes…) —
-            # dropping it would silently resurface physical names
+        from parquet_rewriter_spark.operators.sidecar import build_new
+
+        if parent is None and m.version > 0:
             try:
-                m.rename_map = dict(self.manifest(m.version - 1).rename_map or {})
-            except Exception:  # noqa: BLE001 - vacuumed history
-                m.rename_map = {}
-        if m.rename_map is None:
-            m.rename_map = {}
-        if m.sketch_cols is None and m.version > 0:
-            # inherit the distinct-sketch registration the same way —
-            # a compact/merge that forgot about it would otherwise stop
-            # auto-refresh and silently let estimates undercount
-            try:
-                m.sketch_cols = list(
-                    self.manifest(m.version - 1).sketch_cols or []
-                )
-            except Exception:  # noqa: BLE001 - vacuumed history
-                m.sketch_cols = []
-        if m.sketch_cols is None:
-            m.sketch_cols = []
-        if m.drift_specs is None and m.version > 0:
-            # inherit registered drift monitors the same way — a commit
-            # that forgot about them would otherwise stop auto-refresh
-            # (reads self-heal, but at scan cost the registration was
-            # meant to avoid)
-            try:
-                m.drift_specs = list(
-                    self.manifest(m.version - 1).drift_specs or []
-                )
-            except Exception:  # noqa: BLE001 - vacuumed history
-                m.drift_specs = []
-        if m.drift_specs is None:
-            m.drift_specs = []
-        if not m.txns and m.version > 0:
+                parent = self.manifest(m.version - 1)
+            except ValueError:  # vacuumed history
+                pass
+        # carry what a writer didn't think about (column renames,
+        # sidecar registrations) — a merge/compact/DDL commit must not
+        # silently resurface physical names or stop sidecar upkeep
+        for name, kind in (("rename_map", dict), ("bloom_cols", list),
+                           ("sketch_cols", list), ("drift_specs", list)):
+            if getattr(m, name) is None:
+                setattr(m, name, kind(getattr(parent, name, None) or ()))
+        if not m.txns and parent is not None:
             # carry the txn watermarks forward through commits that
             # don't know about them (compact, DDL, WAP, DV deletes…) —
             # otherwise a compaction would reopen the door to replays
-            try:
-                m.txns = dict(self.manifest(m.version - 1).txns)
-            except Exception:  # noqa: BLE001 - pre-txn manifests / vacuumed history
-                pass
+            m.txns = dict(parent.txns)
         snap = os.path.join(self.path, f"_manifest.v{m.version}.json")
+        lost = (
+            f"version {m.version} of {self.path} was committed by another "
+            "writer; reload the manifest and retry"
+        )
+        if os.path.exists(snap):  # lost already: skip the sidecar work
+            raise CommitConflictError(lost)
+        old = {e.name for e in parent.files} if parent is not None else set()
+        t0 = time.monotonic()
+        build_new(self, [e for e in m.files if e.name not in old], m)
+        t_sidecar = time.monotonic() - t0
+        m.committed_at = datetime.datetime.now(datetime.timezone.utc).isoformat()
         tmp = snap + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             fh.write(m.to_json())
@@ -542,15 +536,13 @@ class SortedTable:
             os.link(tmp, snap)  # atomic claim: fails iff the version exists
         except FileExistsError:
             os.remove(tmp)
-            raise CommitConflictError(
-                f"version {m.version} of {self.path} was committed by another "
-                "writer; reload the manifest and retry"
-            ) from None
+            raise CommitConflictError(lost) from None
         os.remove(tmp)
         tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             fh.write(m.to_json())
         os.replace(tmp, self._manifest_path)
+        return t_sidecar
 
     def file_paths(self, m: Manifest | None = None) -> list[str]:
         m = m or self.manifest()
@@ -604,9 +596,7 @@ class SortedTable:
             )
         else:
             staging = t._write_sorted(df, key, max_records_per_file, num_files)
-        entries = t._adopt_staged(
-            staging, key, stats_cols=stats_cols, bloom_cols=bloom_cols
-        )
+        entries = t._adopt_staged(staging, key, stats_cols=stats_cols)
         t._commit_manifest(
             Manifest(
                 version=0,
@@ -701,7 +691,6 @@ class SortedTable:
                 files=m.files,
                 schema_json=m.schema_json,
                 stats_cols=m.stats_cols,
-                bloom_cols=m.bloom_cols,
                 dv_files=list(m.dv_files),
                 operation=f"rename column ({old} -> {new})",
                 rename_map=rm,
@@ -934,22 +923,19 @@ class SortedTable:
         staging: str,
         key: str,
         stats_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
     ) -> list[ManifestEntry]:
         """Move staged part-files into the table dir under fresh names.
 
-        ``stats_cols=None`` / ``bloom_cols=None`` mean "inherit the
-        current manifest's" — so merge/compact propagate secondary zone
-        maps and bloom filters without every call site threading them.
+        ``stats_cols=None`` means "inherit the current manifest's" — so
+        merge/compact propagate secondary zone maps without every call
+        site threading them. Sidecar rows for the new files are built
+        by the commit (``_commit_manifest``), not here.
         """
-        if stats_cols is None or bloom_cols is None:
+        if stats_cols is None:
             try:
-                m_cur = self.manifest()
-                inherit_stats, inherit_blooms = m_cur.stats_cols, m_cur.bloom_cols
+                stats_cols = self.manifest().stats_cols
             except FileNotFoundError:
-                inherit_stats, inherit_blooms = [], []
-            stats_cols = inherit_stats if stats_cols is None else stats_cols
-            bloom_cols = inherit_blooms if bloom_cols is None else bloom_cols
+                stats_cols = []
         entries: list[ManifestEntry] = []
         staged = list_parquet_files(staging)
         stats = collect_file_stats(
@@ -971,10 +957,6 @@ class SortedTable:
                 )
             )
         shutil.rmtree(staging, ignore_errors=True)
-        if bloom_cols and entries:
-            from parquet_rewriter_spark.operators.bloom import build_blooms
-
-            build_blooms(self, entries, bloom_cols)
         return entries
 
     def clone(
@@ -989,9 +971,9 @@ class SortedTable:
         and branch-like workflows. Safe because data files are immutable
         (merges write NEW files; vacuum unlinks, which leaves the
         clone's links intact). On an object store the equivalent is a
-        manifest copy over shared immutable objects. Bloom sidecars are
-        rebuilt lazily if the clone re-opts in; secondary zone maps ride
-        along in the manifest itself.
+        manifest copy over shared immutable objects. Sidecars are not
+        cloned and their registrations dropped — re-enable to rebuild;
+        secondary zone maps ride along in the manifest itself.
         """
         m = self.manifest(version)
         os.makedirs(dst_path, exist_ok=True)
@@ -1023,8 +1005,8 @@ class SortedTable:
                 # stream is pointed at the clone (WAP stages, branches)
                 rename_map=dict(m.rename_map or {}),
                 txns=dict(m.txns or {}),
-                # sketch/drift registrations do NOT carry — their
-                # sidecars aren't cloned; re-enable to rebuild
+                # a v0 commit has no parent to inherit from, so sketch/
+                # drift registrations do not carry either
             )
         )
         return t
@@ -1033,8 +1015,10 @@ class SortedTable:
     def restore(self, version: int) -> int:
         """Roll the table back to snapshot ``version`` as a NEW commit
         (the prior history stays intact — restore is itself
-        time-travelable and vacuum-safe). O(1) data work: the commit
-        re-lists the old snapshot's immutable files."""
+        time-travelable and vacuum-safe). No data file is rewritten:
+        the commit re-lists the old snapshot's immutable files (and,
+        like any commit, builds registered sidecar rows for the
+        re-listed files the current snapshot lacks)."""
         target = self.manifest(version)
         cur = self.manifest()
         self._commit_manifest(
@@ -1413,24 +1397,15 @@ class SortedTable:
         return report
 
     def _vacuum_sidecars(self, live: set[str]) -> None:
-        """Rewrite every REGISTERED per-file sidecar log (blooms,
-        distinct-count sketches, covariance triples, drift count
-        matrices — operators/sidecar.py:SIDECAR_DIRS) keeping only live
-        files' rows — the append-only logs would otherwise accrete rows
-        for vacuumed files forever (they are ignored by probes via
+        """Rewrite every per-file sidecar log in the registry
+        (operators/sidecar.py:SIDECAR_DIRS) keeping only live files'
+        rows — the append-only logs would otherwise accrete rows for
+        vacuumed files forever (they are ignored by probes via
         live-file filters, but cost scan time, unboundedly on
         high-churn tables). Each log keys rows by the ``file`` column,
-        so one keep-filter rewrite per sidecar covers them all; a new
-        sidecar joins the sweep by calling register_sidecar() — no
-        edit here. The keep filter is a broadcast semi-join, never an
+        so one keep-filter rewrite per sidecar covers them all. The
+        keep filter is a broadcast semi-join, never an
         O(live-file-count) IN-list literal."""
-        # importing the modules runs their register_sidecar() lines
-        from parquet_rewriter_spark.operators import (  # noqa: F401
-            bloom as _b,
-            covstats as _c,
-            distinct_sketch as _d,
-            driftstats as _f,
-        )
         from parquet_rewriter_spark.operators.sidecar import (
             SIDECAR_DIRS,
             semi_join_files,

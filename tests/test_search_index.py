@@ -101,14 +101,11 @@ def test_stats_track_deltas(spark, tmp_path):
 
 
 def test_overwrite_partitions_rewrites_with_fresh_file_names(spark, tmp_path):
-    """FS contract the emptied-bucket detection stands on (_mutate's
-    driver-side listing diff): a partition WRITTEN by
-    overwrite_partitions always comes back with FRESH part-file names
-    (task-UUID naming), so 'file set unchanged' is a reliable signal
-    for 'dynamic overwrite skipped this partition' (all postings
-    retracted). If a committer change ever preserved file names on
-    rewrite, emptied buckets would keep stale postings — this test
-    breaks first."""
+    """overwrite_partitions contract: a partition it WRITES comes back
+    with FRESH part-file names (task-UUID naming), while a partition
+    absent from the written frame keeps its files untouched (dynamic
+    overwrite). Callers may therefore tell a rewritten partition from
+    a skipped one by its file set."""
     from parquet_rewriter_spark.sources.sinks import overwrite_partitions
 
     path = str(tmp_path / "part_table")
