@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from parquet_rewriter_spark.operators.joins import asof_join, range_join
 from parquet_rewriter_spark.operators.merge import apply_mutations, delete_keys
+from parquet_rewriter_spark.operators.util import cache_scope, persist
 from parquet_rewriter_spark.sources.readers import load_table
 
 
@@ -56,11 +57,10 @@ def _t(spark, sf_dir, name):
 
 def _settle(spark: SparkSession, out: DataFrame, name: str) -> DataFrame:
     """Materialize a query's (bounded, driver-safe) result to scratch
-    parquet and hand back the reader — so the query body can unpersist
-    its cached intermediates in ``finally`` WITHOUT the caller's later
-    collect recomputing the lineage cold: executor storage stays clean
-    after every catalog query and the returned plan is a plain
-    distributed scan.
+    parquet and hand back the reader, so the caches the body made can
+    be released (:func:`_clean_query`) without the caller's later
+    collect recomputing the lineage cold. The returned plan is a plain
+    distributed scan that holds no cache.
 
     ORDERING CONTRACT: the round trip through parquet discards any
     ``.orderBy()`` in the query body — multi-file parquet scan order
@@ -78,38 +78,17 @@ def _settle(spark: SparkSession, out: DataFrame, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _rdd_snapshot(spark: SparkSession) -> set[int]:
-    """Persistent-RDD ids right now — pair with :func:`_sweep_rdds`."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(r) for r in jmap.keySet().toArray()}
-
-
-def _sweep_rdds(spark: SparkSession, before: set[int]) -> None:
-    """Unpersist every RDD cached since ``before`` — the catalog-query
-    hygiene sweep (bodies run alone in the bench/oracle drivers; ops
-    with external callers expose util.release_caches instead)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keySet().toArray()):
-        if int(rid) not in before:
-            jmap.get(rid).unpersist(False)
-
-
 def _clean_query(fn):
-    """Cache-hygiene wrapper for query bodies whose persists live
-    INSIDE operator calls (splitters, dedup clusterers, graph loops)
-    rather than in the body itself: snapshot the session's persistent
-    RDD ids, run the body, settle the result while those caches are
-    hot, then unpersist exactly the caches the body created — never a
-    caller's. Bodies that persist directly still prefer the explicit
-    try/finally + _settle form (greppable ownership)."""
+    """Cache owner for query bodies that cache — directly or inside
+    the operators they call: run the body in a :func:`cache_scope`,
+    settle its result while the caches are hot, then leave the scope,
+    which releases every cache the body made (and only those)."""
     import functools
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        before = _rdd_snapshot(spark)
-        res = _settle(spark, fn(spark, sf_dir), fn.__name__)
-        _sweep_rdds(spark, before)
-        return res
+        with cache_scope():
+            return _settle(spark, fn(spark, sf_dir), fn.__name__)
 
     return wrapped
 
@@ -1626,9 +1605,8 @@ def curation_survivorship_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persisted: four consumers (both jaccard self-join sides, the
     # cluster node set, the stage-count action) otherwise each re-run
-    # scan + quality filter + dedup window shuffle (guide §2.4/§5);
-    # the @_clean_query wrapper unpersists it after the settle
-    exact = exact_dedup(quality, ["text"], "doc_id").persist()
+    # scan + quality filter + dedup window shuffle (guide §2.4/§5)
+    exact = persist(exact_dedup(quality, ["text"], "doc_id"))
     pairs = jaccard_pairs(exact, "doc_id", "text", 0.4, block_cols=["lang"],
                           shingle_n=1)
     clusters = near_dup_clusters(exact, pairs)
@@ -2867,8 +2845,8 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verify-phase semi-join (operator-internal second corpus pass);
     # without the cache each pass re-runs scan + union (guide §5 —
     # reused and nontrivial to recompute; MEMORY_AND_DISK default keeps
-    # it disk-backed at scale). @_clean_query unpersists after settle.
-    d2 = _docs_with_dups(spark, sf_dir).persist()
+    # it disk-backed at scale).
+    d2 = persist(_docs_with_dups(spark, sf_dir))
     return minhash_lsh_pairs(
         d2, "doc_id", "text", threshold=0.5, num_hashes=48, bands=16, shingle_n=3
     )
@@ -5644,8 +5622,8 @@ def cross_source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataF
 
     # persisted: four consumers (signature build, verify semi-join, and
     # the two source-lookup sides below) otherwise each re-run the
-    # cross-dups scan + union (guide §5). @_clean_query unpersists.
-    d2 = _docs_cross_dups(spark, sf_dir).persist()
+    # cross-dups scan + union (guide §5).
+    d2 = persist(_docs_cross_dups(spark, sf_dir))
     pairs = minhash_lsh_pairs_portable(
         d2, "doc_id", "text", threshold=0.5, num_hashes=48, bands=16, shingle_n=3
     )
@@ -5818,16 +5796,15 @@ def brand_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ratios bit-identical across engines."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
-    baskets = (
+    baskets = persist(
         li.join(F.broadcast(p.select("p_partkey", "p_brand")),
                 li.l_partkey == F.col("p_partkey"))
         .select("l_orderkey", "p_brand")
         .distinct()
         # four consumers (total, item supports, both self-join sides):
         # without the persist each re-runs the scan+distinct pipeline
-        .persist()
     )
-    n_baskets = baskets.select(F.count_distinct("l_orderkey").alias("n")).persist()
+    n_baskets = persist(baskets.select(F.count_distinct("l_orderkey").alias("n")))
     item = baskets.groupBy("p_brand").agg(F.count(F.lit(1)).alias("supp"))
     a, b = baskets.alias("a"), baskets.alias("b")
     pair = (
@@ -5990,9 +5967,9 @@ def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     per window day, restricted to days that actually exist in the
     data."""
     e = _t(spark, sf_dir, "events")
-    du = e.select(
+    du = persist(e.select(
         F.to_date(F.date_trunc("day", F.col("ts"))).alias("d"), "user_id"
-    ).distinct().persist()  # fan-out and the day list both read it
+    ).distinct())  # fan-out and the day list both read it
     fan = du.select(
         F.explode(F.sequence(F.lit(0), F.lit(6))).alias("o"), "d", "user_id"
     ).select(F.date_add("d", F.col("o")).alias("win_day"), "user_id")
@@ -6076,9 +6053,8 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persisted: four consumers (both jaccard self-join sides, the
     # cluster node set, the canonical join) otherwise each re-run the
-    # scan + quality filter + dedup window shuffle (guide §2.4/§5);
-    # the @_clean_query wrapper unpersists it after the settle
-    exact = exact_dedup(quality, ["text"], "doc_id").persist()
+    # scan + quality filter + dedup window shuffle (guide §2.4/§5)
+    exact = persist(exact_dedup(quality, ["text"], "doc_id"))
     pairs = jaccard_pairs(exact, "doc_id", "text", 0.4, block_cols=["lang"],
                           shingle_n=1)
     clusters = near_dup_clusters(exact, pairs)
@@ -6154,9 +6130,9 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
     li = _t(spark, sf_dir, "lineitem")
     bin_col = F.floor(F.col("l_extendedprice") / 64.0).cast("long")
-    b = li.groupBy("l_returnflag", bin_col.alias("bin")).agg(
+    b = persist(li.groupBy("l_returnflag", bin_col.alias("bin")).agg(
         F.sum("l_quantity").alias("bw")
-    ).persist()  # bins×groups rows; crossing search reads it twice
+    ))  # bins×groups rows; crossing search reads it twice
     wspec = Window.partitionBy("l_returnflag")
     bc = b.select(
         "l_returnflag",
@@ -8073,12 +8049,11 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 4 == 0)
     items = li.select("l_orderkey", "l_partkey").distinct()
     a, b = items.alias("a"), items.alias("b")
-    e0 = (
+    e0 = persist(
         a.join(b, "l_orderkey")
         .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
-        .persist()
     )
     deg = (
         e0.select(F.col("u").alias("node"))
@@ -8088,14 +8063,13 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rank = (F.col("d") * F.lit(16777216) + F.col("node")).alias("rank")
     r = deg.select("node", rank)
-    o = (
+    o = persist(
         e0.join(r.withColumnRenamed("node", "u").withColumnRenamed("rank", "ru"), "u")
         .join(r.withColumnRenamed("node", "v").withColumnRenamed("rank", "rv"), "v")
         .select(
             F.when(F.col("ru") < F.col("rv"), F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(F.col("ru") < F.col("rv"), F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .persist()
     )
     e1, e2 = o.alias("e1"), o.alias("e2")
     wedges = (
@@ -10950,11 +10924,10 @@ def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.operators.fuzzy import fuzzy_self_join
 
     p = _t(spark, sf_dir, "part")
-    names = (
+    names = persist(
         p.groupBy("p_name")
         .agg(F.min("p_partkey").alias("id"))
         .select("id", F.col("p_name").alias("s"))
-        .persist()
     )
     pairs = fuzzy_self_join(names, "id", "s", max_dist=1, q=2)
     comp = connected_components(
@@ -11117,13 +11090,12 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache still reports hashpartitioning(src), so each iteration's
     # contribution join shuffles only the small pr relation (pinned in
     # test_plans.py).
-    e = (
+    e = persist(
         pairs.repartition(F.col("src"))
         .dropDuplicates(["src", "dst"])
         .withColumn(
             "out_deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
         )
-        .persist()
     )
     pr = e.select(F.col("src").alias("id")).distinct().withColumn("pr", F.lit(1.0))
     for _ in range(_PR_ITERS):
@@ -12419,14 +12391,14 @@ def cms_selfjoin_size_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id")
-    sk = countmin_build(ev, "user_id").persist()
-    est = countmin_inner_product(sk, sk).first()["est"]
+    with cache_scope():
+        sk = persist(countmin_build(ev, "user_id"))
+        est = countmin_inner_product(sk, sk).first()["est"]
     exact = (
         ev.groupBy("user_id").count()
         .agg(F.sum(F.col("count") * F.col("count")).alias("f2"))
         .first()["f2"]
     )
-    sk.unpersist()
     row = [(int(exact), int(est), bool(est >= exact))]
     return spark.createDataFrame(
         row, "exact_f2 long, est_f2 long, upper_bound boolean"
@@ -13633,8 +13605,8 @@ def bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.operators.bpe import bpe_train, rules_df
 
     d = _t(spark, sf_dir, "documents")
-    rules, vocab = bpe_train(d, "text", n_merges=6)
-    vocab.unpersist()
+    with cache_scope():
+        rules, _ = bpe_train(d, "text", n_merges=6)
     return rules_df(spark, rules).orderBy("step")
 
 
@@ -13861,7 +13833,6 @@ def bpe_encode_holdout_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = encode_docs_with_rules(
         holdout, "doc_id", "text", rules, vocab, unk_id=-1
     )
-    vocab.unpersist()
     return out.select(
         "doc_id", _ids_digest("input_ids").alias("ids_digest"), "n_tokens"
     ).orderBy("doc_id")
@@ -13887,12 +13858,12 @@ def stream_bpe_encoded_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.streaming.ops import stream_encode_docs
 
     d = _t(spark, sf_dir, "documents")
-    rules, vocab = bpe_train(d.filter(F.col("doc_id") % 2 == 0), "text", n_merges=4)
-    sid_rows = [
-        (r["symbol"], int(r["token_id"]))
-        for r in symbol_vocab(vocab).select("symbol", "token_id").collect()
-    ]
-    vocab.unpersist()
+    with cache_scope():
+        rules, vocab = bpe_train(d.filter(F.col("doc_id") % 2 == 0), "text", n_merges=4)
+        sid_rows = [
+            (r["symbol"], int(r["token_id"]))
+            for r in symbol_vocab(vocab).select("symbol", "token_id").collect()
+        ]
     base = _scratch("stream_bpe_enc")
     src = os.path.join(base, "src")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
@@ -14397,11 +14368,8 @@ def wordpiece_packed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     # ONE persisted corpus scan shared by vocab selection and encoding
-    # (at 100 TB each word_counts recompute is a full corpus scan);
-    # settled + unpersisted so the query leaves no executor storage
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text").persist()
+    # (at 100 TB each word_counts recompute is a full corpus scan)
+    wc = persist(word_counts(d, "text"))
     pieces = substring_vocab(
         d, "text", max_piece_len=4, vocab_size=150, wc=wc
     )
@@ -14444,10 +14412,7 @@ def wordpiece_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.operators.bpe import word_counts
 
     d = _t(spark, sf_dir, "documents")
-    # @_clean_query settles while wc and the fertility op's persisted
-    # segmented relation are hot, then sweeps both (the try/finally
-    # form couldn't reach the cache inside wordpiece_fertility_by)
-    wc = word_counts(d, "text").persist()  # shared corpus scan
+    wc = persist(word_counts(d, "text"))  # shared corpus scan
     pieces = substring_vocab(
         d, "text", max_piece_len=4, vocab_size=150, wc=wc
     )
@@ -14598,9 +14563,7 @@ def wordpiece_marked_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.operators.bpe import word_counts
 
     d = _t(spark, sf_dir, "documents")
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text").persist()  # shared corpus scan
+    wc = persist(word_counts(d, "text"))  # shared corpus scan
     pieces = substring_vocab_marked(
         d, "text", max_piece_len=4, vocab_size=150, wc=wc
     )
@@ -15586,16 +15549,16 @@ def tokenizer_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.table import SortedTable
 
     d = _t(spark, sf_dir, "documents")
-    rules, vocab = bpe_train(d, "text", n_merges=4)
     base = _scratch("tok_registry")
-    rt = SortedTable.create(
-        spark, os.path.join(base, "rules"), rules_df(spark, rules), key="step"
-    )
-    vt = SortedTable.create(
-        spark, os.path.join(base, "vocab"),
-        vocab.select("word", "cnt", "sym"), key="word",
-    )
-    vocab.unpersist()
+    with cache_scope():
+        rules, vocab = bpe_train(d, "text", n_merges=4)
+        rt = SortedTable.create(
+            spark, os.path.join(base, "rules"), rules_df(spark, rules), key="step"
+        )
+        vt = SortedTable.create(
+            spark, os.path.join(base, "vocab"),
+            vocab.select("word", "cnt", "sym"), key="word",
+        )
     stored_vocab = vt.read()
     n_rules = rt.read().count()
     out = fertility_by(d, "text", "lang", stored_vocab)
@@ -15685,8 +15648,8 @@ def unigram_corpus_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = word_counts(d, "text")
     # persisted: the fused count/gate job materializes the cache, so
     # the loglik join reads it instead of re-running the Viterbi
-    # segmentation (@_clean_query sweeps it after the settle)
-    segd = viterbi_segment_stats(wc, stats).select("word", "best_ll").persist()
+    # segmentation
+    segd = persist(viterbi_segment_stats(wc, stats).select("word", "best_ll"))
     # one job: the distinct-word count (segd is 1:1 with wc) plus the
     # byte-gate estimate the word join needs
     n_words, est = count_with_bytes(segd)
@@ -15872,9 +15835,7 @@ def unigram_packed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.operators.bpe import word_counts
 
     d = _t(spark, sf_dir, "documents")
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text").persist()  # shared corpus scan
+    wc = persist(word_counts(d, "text"))  # shared corpus scan
     stats = piece_stats(d, "text", max_piece_len=4, vocab_size=150, wc=wc)
     enc = unigram_encode_docs(d, "doc_id", "text", stats, wc=wc)
     return _scalarized_windows(enc, m=32, shards=4)
@@ -15898,6 +15859,7 @@ def unigram_packed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "llm-pipeline", "tokenizer", "unigram", "registry", "storage",
 )
+@_clean_query
 def unigram_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM in the TOKENIZER REGISTRY: persist the (piece, c)
     inventory as a SortedTable (key=piece), reload from disk, and
@@ -15919,51 +15881,43 @@ def unigram_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.table import SortedTable
 
     d = _t(spark, sf_dir, "documents")
-    wc = word_counts(d, "text").persist()  # shared corpus scan
-    segd = None  # bound before the try: an early throw must not
-    # NameError in finally (masking the real exception and leaking wc)
-    try:
-        stats = piece_stats(d, "text", max_piece_len=4, vocab_size=150, wc=wc)
-        base = _scratch("ug_registry")
-        st = SortedTable.create(
-            spark, os.path.join(base, "pieces"), stats, key="piece"
+    wc = persist(word_counts(d, "text"))  # shared corpus scan
+    stats = piece_stats(d, "text", max_piece_len=4, vocab_size=150, wc=wc)
+    base = _scratch("ug_registry")
+    st = SortedTable.create(
+        spark, os.path.join(base, "pieces"), stats, key="piece"
+    )
+    stored = st.read()
+    n_vocab = stored.count()
+    # persisted: the fused count/gate job materializes the cache,
+    # so the loglik join reads it instead of re-running Viterbi
+    segd = persist(
+        viterbi_segment_stats(wc, stored)
+        .select("word", "best_ll")
+    )
+    # one job: the distinct-word count (segd is 1:1 with the
+    # persisted wc, which materializes here) + the byte-gate probe
+    n_words, est = count_with_bytes(segd)
+    w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    occ = d.select(F.col("lang").alias("grp"), F.explode(w).alias("word"))
+    out = (
+        _word_join(occ, segd, n_words, BROADCAST_MAX_WORDS, est_bytes=est)
+        .groupBy("grp")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.round(F.sum("best_ll"), 2).alias("sum_ll"),
+            F.round(F.sum("best_ll") / F.count(F.lit(1)), 4).alias("avg_ll"),
         )
-        stored = st.read()
-        n_vocab = stored.count()
-        # persisted: the fused count/gate job materializes the cache,
-        # so the loglik join reads it instead of re-running Viterbi
-        segd = (
-            viterbi_segment_stats(wc, stored)
-            .select("word", "best_ll")
-            .persist()
+        .select(
+            F.col("grp").alias("lang"),
+            "n_words",
+            "sum_ll",
+            "avg_ll",
+            F.lit(int(n_vocab)).cast("int").alias("vocab_rows"),
         )
-        # one job: the distinct-word count (segd is 1:1 with the
-        # persisted wc, which materializes here) + the byte-gate probe
-        n_words, est = count_with_bytes(segd)
-        w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
-        occ = d.select(F.col("lang").alias("grp"), F.explode(w).alias("word"))
-        out = (
-            _word_join(occ, segd, n_words, BROADCAST_MAX_WORDS, est_bytes=est)
-            .groupBy("grp")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.round(F.sum("best_ll"), 2).alias("sum_ll"),
-                F.round(F.sum("best_ll") / F.count(F.lit(1)), 4).alias("avg_ll"),
-            )
-            .select(
-                F.col("grp").alias("lang"),
-                "n_words",
-                "sum_ll",
-                "avg_ll",
-                F.lit(int(n_vocab)).cast("int").alias("vocab_rows"),
-            )
-            .orderBy("lang")
-        )
-        return _settle(spark, out, "ug_registry_rt")
-    finally:
-        if segd is not None:
-            segd.unpersist()
-        wc.unpersist()
+        .orderBy("lang")
+    )
+    return out
 
 
 def _unigram_cte_nowc() -> str:
@@ -16013,6 +15967,7 @@ def _bpe_cte_4merges() -> str:
     """,
     "llm-pipeline", "tokenizer", "evaluation", "compression",
 )
+@_clean_query
 def tokenizer_family_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer BAKE-OFF every pretraining effort runs before
     committing a vocabulary: all three families trained on the same
@@ -16041,61 +15996,52 @@ def tokenizer_family_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    wc = word_counts(d, "text").persist()  # shared by all three families
+    wc = persist(word_counts(d, "text"))  # shared by all three families
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    wp_rel = ug_rel = None  # guard: finally must not NameError early
-    try:
-        bpe_rel = vocab_token_counts(vocab).withColumnRenamed("n_tokens", "n")
-        # wp/ug persisted: each family's fused count/gate job
-        # materializes its cache, so the compression join reads it
-        # instead of re-running the Arrow segmentation (bpe_rel reads
-        # the already-persisted vocab — no second cache needed)
-        wp_rel = wordpiece_segment(
-            wc, substring_vocab(d, "text", 4, 150, wc=wc)
-        ).select("word", F.col("n_pieces").alias("n")).persist()
-        ug_rel = viterbi_segment(
-            wc, piece_stats(d, "text", 4, 150, wc=wc)
-        ).select("word", F.col("n_pieces").alias("n")).persist()
-        w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
-        occ = d.select(F.explode(w).alias("word"))
-        parts = []
-        for fam, rel in (
-            ("bpe", bpe_rel), ("unigram", ug_rel), ("wordpiece", wp_rel)
-        ):
-            # per-family fused count+byte-gate job (each rel is 1:1
-            # with wc, so the count doubles as the distinct-word
-            # count the former shared wc.count() delivered)
-            n_words, est = count_with_bytes(rel)
-            j = _word_join(occ, rel, n_words, BROADCAST_MAX_WORDS,
-                           est_bytes=est)
-            parts.append(
-                j.agg(
-                    F.count(F.lit(1)).alias("n_words"),
-                    F.sum("n").alias("n_tokens"),
-                    F.sum(F.length("word")).alias("n_chars"),
-                ).select(
-                    F.lit(fam).alias("family"), "n_words", "n_tokens", "n_chars"
-                )
+    bpe_rel = vocab_token_counts(vocab).withColumnRenamed("n_tokens", "n")
+    # wp/ug persisted: each family's fused count/gate job
+    # materializes its cache, so the compression join reads it
+    # instead of re-running the Arrow segmentation (bpe_rel reads
+    # the already-persisted vocab — no second cache needed)
+    wp_rel = persist(wordpiece_segment(
+        wc, substring_vocab(d, "text", 4, 150, wc=wc)
+    ).select("word", F.col("n_pieces").alias("n")))
+    ug_rel = persist(viterbi_segment(
+        wc, piece_stats(d, "text", 4, 150, wc=wc)
+    ).select("word", F.col("n_pieces").alias("n")))
+    w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    occ = d.select(F.explode(w).alias("word"))
+    parts = []
+    for fam, rel in (
+        ("bpe", bpe_rel), ("unigram", ug_rel), ("wordpiece", wp_rel)
+    ):
+        # per-family fused count+byte-gate job (each rel is 1:1
+        # with wc, so the count doubles as the distinct-word
+        # count the former shared wc.count() delivered)
+        n_words, est = count_with_bytes(rel)
+        j = _word_join(occ, rel, n_words, BROADCAST_MAX_WORDS,
+                       est_bytes=est)
+        parts.append(
+            j.agg(
+                F.count(F.lit(1)).alias("n_words"),
+                F.sum("n").alias("n_tokens"),
+                F.sum(F.length("word")).alias("n_chars"),
+            ).select(
+                F.lit(fam).alias("family"), "n_words", "n_tokens", "n_chars"
             )
-        out = parts[0].unionByName(parts[1]).unionByName(parts[2]).select(
-            "family",
-            "n_words",
-            "n_tokens",
-            F.round(
-                F.col("n_chars").cast("double") / F.col("n_tokens"), 4
-            ).alias("chars_per_token"),
-            F.round(
-                F.col("n_tokens").cast("double") / F.col("n_words"), 4
-            ).alias("fertility"),
-        ).orderBy("family")
-        return _settle(spark, out, "tok_family")
-    finally:
-        if wp_rel is not None:
-            wp_rel.unpersist()
-        if ug_rel is not None:
-            ug_rel.unpersist()
-        vocab.unpersist()
-        wc.unpersist()
+        )
+    out = parts[0].unionByName(parts[1]).unionByName(parts[2]).select(
+        "family",
+        "n_words",
+        "n_tokens",
+        F.round(
+            F.col("n_chars").cast("double") / F.col("n_tokens"), 4
+        ).alias("chars_per_token"),
+        F.round(
+            F.col("n_tokens").cast("double") / F.col("n_words"), 4
+        ).alias("fertility"),
+    ).orderBy("family")
+    return out
 
 
 def _unigram_em_cte() -> str:
@@ -16300,6 +16246,7 @@ def unigram_em_resume_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "llm-pipeline", "tokenizer", "unigram", "training", "scoring",
 )
+@_clean_query
 def unigram_em_corpus_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus log-likelihood per language under the TRAINED EM model —
     the deployment-side counterpart of unigram_corpus_loglik (which
@@ -16324,37 +16271,30 @@ def unigram_em_corpus_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained = unigram_em_train(
         d, "text", max_piece_len=4, seed_size=300, keep_size=150, n_rounds=2
     )
-    wc = word_counts(d, "text").persist()
-    segd = None  # guard: finally must not NameError on an early throw
-    try:
-        # persisted: the fused count/gate job materializes the cache,
-        # so the loglik join reads it instead of re-running Viterbi
-        segd = (
-            viterbi_segment_stats(wc, trained)
-            .select("word", "best_ll")
-            .persist()
+    wc = persist(word_counts(d, "text"))
+    # persisted: the fused count/gate job materializes the cache,
+    # so the loglik join reads it instead of re-running Viterbi
+    segd = persist(
+        viterbi_segment_stats(wc, trained)
+        .select("word", "best_ll")
+    )
+    # one job: distinct-word count (1:1 with the persisted wc,
+    # which materializes here) + the byte-gate probe
+    n_words, est = count_with_bytes(segd)
+    w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
+    occ = d.select(F.col("lang").alias("grp"), F.explode(w).alias("word"))
+    out = (
+        _word_join(occ, segd, n_words, BROADCAST_MAX_WORDS, est_bytes=est)
+        .groupBy("grp")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.round(F.sum("best_ll"), 2).alias("sum_ll"),
+            F.round(F.sum("best_ll") / F.count(F.lit(1)), 4).alias("avg_ll"),
         )
-        # one job: distinct-word count (1:1 with the persisted wc,
-        # which materializes here) + the byte-gate probe
-        n_words, est = count_with_bytes(segd)
-        w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
-        occ = d.select(F.col("lang").alias("grp"), F.explode(w).alias("word"))
-        out = (
-            _word_join(occ, segd, n_words, BROADCAST_MAX_WORDS, est_bytes=est)
-            .groupBy("grp")
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.round(F.sum("best_ll"), 2).alias("sum_ll"),
-                F.round(F.sum("best_ll") / F.count(F.lit(1)), 4).alias("avg_ll"),
-            )
-            .select(F.col("grp").alias("lang"), "n_words", "sum_ll", "avg_ll")
-            .orderBy("lang")
-        )
-        return _settle(spark, out, "em_corpus_ll")
-    finally:
-        if segd is not None:
-            segd.unpersist()
-        wc.unpersist()
+        .select(F.col("grp").alias("lang"), "n_words", "sum_ll", "avg_ll")
+        .orderBy("lang")
+    )
+    return out
 
 
 def _stream_dsir_oracle() -> str:
@@ -16843,6 +16783,7 @@ def _bpe_pretok_encode_oracle(n_merges: int = 4, max_doc: int = 15) -> str:
     _bpe_pretok_encode_oracle(4, 15),
     "llm-pipeline", "tokenizer", "bpe", "encode", "pretokenize", "byte-level",
 )
+@_clean_query
 def bpe_pretok_encode_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION-shape BPE: GPT-2-style pretokenization (letter /
     digit / punctuation runs — operators/bpe.py:PRETOK_RE, the
@@ -16859,16 +16800,13 @@ def bpe_pretok_encode_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules, vocab = bpe_train(
         d, "text", n_merges=4, pretokenize=True, byte_level=True
     )
-    try:
-        out = encode_docs(
-            d.filter(F.col("doc_id") < 15), "doc_id", "text", vocab,
-            pretokenize=True,
-        ).select(
-            "doc_id", _ids_digest("input_ids").alias("ids_digest"), "n_tokens"
-        ).orderBy("doc_id")
-        return _settle(spark, out, "bpe_pretok_enc")
-    finally:
-        vocab.unpersist()
+    out = encode_docs(
+        d.filter(F.col("doc_id") < 15), "doc_id", "text", vocab,
+        pretokenize=True,
+    ).select(
+        "doc_id", _ids_digest("input_ids").alias("ids_digest"), "n_tokens"
+    ).orderBy("doc_id")
+    return out
 
 
 def _wordpiece_pretok_oracle(max_doc: int = 15) -> str:
@@ -16916,9 +16854,7 @@ def wordpiece_pretok_encode_sample(
     )
 
     d = _decorated_docs(spark, sf_dir)
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text", pretokenize=True).persist()
+    wc = persist(word_counts(d, "text", pretokenize=True))
     pieces = substring_vocab(
         d, "text", max_piece_len=4, vocab_size=150, wc=wc
     )
@@ -17003,6 +16939,7 @@ def _bpe_bytelevel_roundtrip_oracle(n_merges: int = 4) -> str:
     _bpe_bytelevel_roundtrip_oracle(4),
     "llm-pipeline", "tokenizer", "bpe", "byte-level", "roundtrip",
 )
+@_clean_query
 def bpe_bytelevel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NO-UNK LOSSLESS ROUND TRIP on punctuation/digit-bearing text —
     the byte-level guarantee: every doc of the decorated corpus
@@ -17022,33 +16959,30 @@ def bpe_bytelevel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules, vocab = bpe_train(
         d, "text", n_merges=4, pretokenize=True, byte_level=True
     )
-    try:
-        enc = encode_docs(d, "doc_id", "text", vocab, pretokenize=True)
-        dec = decode_docs(enc, "input_ids", vocab, byte_level=True)
-        norm = d.select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.regexp_extract_all(F.lower("text"), F.lit(PRETOK_RE), 0),
-            ).alias("norm"),
+    enc = encode_docs(d, "doc_id", "text", vocab, pretokenize=True)
+    dec = decode_docs(enc, "input_ids", vocab, byte_level=True)
+    norm = d.select(
+        "doc_id",
+        F.concat_ws(
+            " ",
+            F.regexp_extract_all(F.lower("text"), F.lit(PRETOK_RE), 0),
+        ).alias("norm"),
+    )
+    exact = F.when(F.col("decoded") == F.col("norm"), 1).otherwise(0)
+    out = (
+        dec.join(norm, "doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(exact).alias("n_exact"),
+            F.min(F.array_min("input_ids")).cast("int").alias(
+                "min_token_id"
+            ),
+            F.round(
+                F.sum(exact) / F.count(F.lit(1)), 4
+            ).alias("reconstruction_rate"),
         )
-        exact = F.when(F.col("decoded") == F.col("norm"), 1).otherwise(0)
-        out = (
-            dec.join(norm, "doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(exact).alias("n_exact"),
-                F.min(F.array_min("input_ids")).cast("int").alias(
-                    "min_token_id"
-                ),
-                F.round(
-                    F.sum(exact) / F.count(F.lit(1)), 4
-                ).alias("reconstruction_rate"),
-            )
-        )
-        return _settle(spark, out, "bpe_roundtrip_bytes")
-    finally:
-        vocab.unpersist()
+    )
+    return out
 
 
 def _bpe_bytelevel_frozen_oracle(n_merges: int = 4, max_doc: int = 30) -> str:
@@ -17167,10 +17101,6 @@ def bpe_bytelevel_holdout_no_unk(
         d.filter(F.col("doc_id") % 2 == 0), "text",
         n_merges=4, pretokenize=True, byte_level=True,
     )
-    # @_clean_query settles while vocab AND the encode path's
-    # persisted word_ids cache are hot, then sweeps both (the manual
-    # try/finally form couldn't reach word_ids inside
-    # encode_docs_with_rules)
     hold = d.filter(
         (F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 30)
     ).select(
@@ -17301,6 +17231,7 @@ def _scalarized_windows_eos(
     """,
     "llm-pipeline", "tokenizer", "bpe", "packing", "pretraining", "eos",
 )
+@_clean_query
 def bpe_packed_windows_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packed BPE training windows WITH document separators and span
     provenance — what a production batch actually ships: every doc's
@@ -17318,13 +17249,10 @@ def bpe_packed_windows_eos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        eos_id = symbol_vocab(vocab).count()  # ids 0..n−1 → eos = n
-        enc = encode_docs(d, "doc_id", "text", vocab)
-        out = _scalarized_windows_eos(enc, m=64, shards=4, eos_id=eos_id)
-        return _settle(spark, out, "bpe_packed_eos")
-    finally:
-        vocab.unpersist()
+    eos_id = symbol_vocab(vocab).count()  # ids 0..n−1 → eos = n
+    enc = encode_docs(d, "doc_id", "text", vocab)
+    out = _scalarized_windows_eos(enc, m=64, shards=4, eos_id=eos_id)
+    return out
 
 
 @query(
@@ -17363,9 +17291,7 @@ def wordpiece_packed_windows_eos(
     )
 
     d = _t(spark, sf_dir, "documents")
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text").persist()
+    wc = persist(word_counts(d, "text"))
     pieces = substring_vocab(
         d, "text", max_piece_len=4, vocab_size=150, wc=wc
     )
@@ -17409,9 +17335,7 @@ def unigram_packed_windows_eos(
     )
 
     d = _t(spark, sf_dir, "documents")
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text").persist()
+    wc = persist(word_counts(d, "text"))
     stats = piece_stats(d, "text", max_piece_len=4, vocab_size=150, wc=wc)
     eos_id = stats.count()
     enc = unigram_encode_docs(d, "doc_id", "text", stats, wc=wc)
@@ -17628,7 +17552,7 @@ def pretraining_pipeline_end_to_end(
     # consumers — the contamination grams, the clean materialization,
     # and the per-source funnel count (optimization guide §2.4/§5; the
     # r12 plan diff shows the settle plan's Exchange count drop)
-    uniq = exact_dedup(q, ["text"], "doc_id").persist()
+    uniq = persist(exact_dedup(q, ["text"], "doc_id"))
     g8 = F.expr(
         "CASE WHEN size(split(text, ' ')) >= 8 THEN "
         "transform(sequence(1, size(split(text, ' ')) - 7), "
@@ -17650,23 +17574,17 @@ def pretraining_pipeline_end_to_end(
     contaminated = (
         tgrams.join(F.broadcast(bgrams), "g8").select("doc_id").distinct()
     )
-    clean = (
+    clean = persist(
         uniq.join(contaminated, "doc_id", "left_anti")
         .filter(~is_bench)
-        .persist()
     )
-    # cache release: @_clean_query settles the result while uniq /
-    # clean / vocab / enc / the encode path's word_ids cache are hot,
-    # then unpersists exactly the caches this body created — the
-    # nested try/finally form can't reach word_ids (it lives inside
-    # encode_docs_with_rules), the wrapper's RDD-id sweep can
     rules, vocab = bpe_train(
         clean.filter(F.col("doc_id") % 2 == 0), "text", n_merges=4
     )
     eos_id = symbol_vocab(vocab).count()
-    enc = encode_docs_with_rules(
+    enc = persist(encode_docs_with_rules(
         clean, "doc_id", "text", rules, vocab, unk_id=-1
-    ).persist()
+    ))
     packed = pack_sequences(
         with_eos(enc, "input_ids", eos_id),
         "doc_id", F.size("input_ids"), max_tokens=64,
@@ -18028,9 +17946,7 @@ def unigram_pretok_encode_sample(
     )
 
     d = _decorated_docs(spark, sf_dir)
-    # @_clean_query settles while wc and the encode path's persisted
-    # word_ids are hot, then sweeps both
-    wc = word_counts(d, "text", pretokenize=True).persist()
+    wc = persist(word_counts(d, "text", pretokenize=True))
     stats = piece_stats(
         d, "text", max_piece_len=4, vocab_size=150, wc=wc
     )
@@ -18124,8 +18040,8 @@ def token_budget_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_rewriter_spark.table import SortedTable
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    rules, vocab = bpe_train(d, "text", n_merges=4)
-    vocab.unpersist()  # counting needs only the rules
+    with cache_scope():  # counting needs only the rules
+        rules, _ = bpe_train(d, "text", n_merges=4)
     rules_path = os.path.join(_scratch("toktok_rules"), "rules")
     rules_df(spark, rules).write.mode("overwrite").parquet(rules_path)
     ref = TokenizerRef(rules_path)
@@ -18170,6 +18086,7 @@ def token_budget_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm-pipeline", "packing", "pretraining", "storage", "registry",
     "time-travel",
 )
+@_clean_query
 def packed_shards_versioned_table(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -18203,87 +18120,81 @@ def packed_shards_versioned_table(
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        eos_id = symbol_vocab(vocab).count()
-        enc = with_eos(
-            encode_docs(d, "doc_id", "text", vocab), "input_ids", eos_id
+    eos_id = symbol_vocab(vocab).count()
+    enc = with_eos(
+        encode_docs(d, "doc_id", "text", vocab), "input_ids", eos_id
+    )
+    p = pack_sequences(
+        enc, "doc_id", F.size("input_ids"), max_tokens=64,
+        shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
+    )
+    win = persist(materialize_packed(p, "input_ids", 64, doc_col="doc_id"))
+    n_win = win.count()
+    t = persist_packed(
+        win, _scratch("packed_shards"), tag="train-v1",
+        max_records_per_file=max(1, n_win // 8),
+    )
+    # a later maintenance pass rewrites every file, then GC
+    # runs the tightest policy — only the tag keeps v0 alive
+    compact(t, max_records_per_file=max(1, n_win // 2))
+    t.vacuum(retain_versions=1)
+    rel = t.read("train-v1")
+    # reload must equal the in-memory windows cell-for-cell,
+    # and the STORED digests must match digests recomputed
+    # from the reloaded arrays (arrays survived storage)
+    rd = F.md5(
+        F.concat_ws(
+            ",",
+            F.transform(F.col("input_ids"), lambda x: x.cast("string")),
         )
-        p = pack_sequences(
-            enc, "doc_id", F.size("input_ids"), max_tokens=64,
-            shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
+    )
+    a = win.select(
+        "shard", "seq_id", _ids_digest("input_ids").alias("d_mem")
+    )
+    b = rel.select(
+        "shard",
+        "seq_id",
+        F.col("ids_digest").alias("d_stored"),
+        rd.alias("d_reload"),
+    )
+    bad = (
+        a.join(b, ["shard", "seq_id"], "full")
+        .where(
+            F.col("d_mem").isNull()
+            | F.col("d_stored").isNull()
+            | (F.col("d_mem") != F.col("d_stored"))
+            | (F.col("d_stored") != F.col("d_reload"))
         )
-        win = materialize_packed(p, "input_ids", 64, doc_col="doc_id").persist()
-        try:
-            n_win = win.count()
-            t = persist_packed(
-                win, _scratch("packed_shards"), tag="train-v1",
-                max_records_per_file=max(1, n_win // 8),
-            )
-            # a later maintenance pass rewrites every file, then GC
-            # runs the tightest policy — only the tag keeps v0 alive
-            compact(t, max_records_per_file=max(1, n_win // 2))
-            t.vacuum(retain_versions=1)
-            rel = t.read("train-v1")
-            # reload must equal the in-memory windows cell-for-cell,
-            # and the STORED digests must match digests recomputed
-            # from the reloaded arrays (arrays survived storage)
-            rd = F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(F.col("input_ids"), lambda x: x.cast("string")),
-                )
-            )
-            a = win.select(
-                "shard", "seq_id", _ids_digest("input_ids").alias("d_mem")
-            )
-            b = rel.select(
-                "shard",
-                "seq_id",
-                F.col("ids_digest").alias("d_stored"),
-                rd.alias("d_reload"),
-            )
-            bad = (
-                a.join(b, ["shard", "seq_id"], "full")
-                .where(
-                    F.col("d_mem").isNull()
-                    | F.col("d_stored").isNull()
-                    | (F.col("d_mem") != F.col("d_stored"))
-                    | (F.col("d_stored") != F.col("d_reload"))
-                )
-                .count()
-            )
-            assert bad == 0, f"{bad} windows diverged through the lifecycle"
-            spans = F.concat_ws(
-                ";",
-                F.transform(
-                    F.col("doc_spans"),
-                    lambda s: F.concat_ws(
-                        ":",
-                        s.doc.cast("string"),
-                        s.start.cast("string"),
-                        s.len.cast("string"),
-                    ),
-                ),
-            )
-            out = rel.select(
-                "shard",
-                "seq_id",
-                F.col("ids_digest"),
-                "n_tokens",
-                "n_pieces",
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.col("piece_lengths"), lambda x: x.cast("string")
-                    ),
-                ).alias("piece_lengths"),
-                spans.alias("doc_spans"),
-            )
-            return _settle(spark, out, "packed_shards_vt")
-        finally:
-            win.unpersist()
-    finally:
-        vocab.unpersist()
+        .count()
+    )
+    assert bad == 0, f"{bad} windows diverged through the lifecycle"
+    spans = F.concat_ws(
+        ";",
+        F.transform(
+            F.col("doc_spans"),
+            lambda s: F.concat_ws(
+                ":",
+                s.doc.cast("string"),
+                s.start.cast("string"),
+                s.len.cast("string"),
+            ),
+        ),
+    )
+    out = rel.select(
+        "shard",
+        "seq_id",
+        F.col("ids_digest"),
+        "n_tokens",
+        "n_pieces",
+        F.concat_ws(
+            ",",
+            F.transform(
+                F.col("piece_lengths"), lambda x: x.cast("string")
+            ),
+        ).alias("piece_lengths"),
+        spans.alias("doc_spans"),
+    )
+    return out
 
 
 def _packed_eos_win_cte(m: int, shards: int, eos_expr: str) -> str:
@@ -18318,6 +18229,7 @@ def _packed_eos_win_cte(m: int, shards: int, eos_expr: str) -> str:
     """,
     "llm-pipeline", "packing", "pretraining", "ordering",
 )
+@_clean_query
 def packed_windows_training_order(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -18349,45 +18261,42 @@ def packed_windows_training_order(
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        eos_id = symbol_vocab(vocab).count()
-        enc = with_eos(
-            encode_docs(d, "doc_id", "text", vocab), "input_ids", eos_id
+    eos_id = symbol_vocab(vocab).count()
+    enc = with_eos(
+        encode_docs(d, "doc_id", "text", vocab), "input_ids", eos_id
+    )
+    p = pack_sequences(
+        enc, "doc_id", F.size("input_ids"), max_tokens=64,
+        shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
+    )
+    win = materialize_packed(p, "input_ids", 64)
+    ordered = training_order(win, salt=1).select(
+        "order_key", "shard", "seq_id",
+        _ids_digest("input_ids").alias("wd"),
+    )
+    out = (
+        ordered.groupBy(
+            F.substring("order_key", 1, 1).alias("bucket")
         )
-        p = pack_sequences(
-            enc, "doc_id", F.size("input_ids"), max_tokens=64,
-            shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
-        )
-        win = materialize_packed(p, "input_ids", 64)
-        ordered = training_order(win, salt=1).select(
-            "order_key", "shard", "seq_id",
-            _ids_digest("input_ids").alias("wd"),
-        )
-        out = (
-            ordered.groupBy(
-                F.substring("order_key", 1, 1).alias("bucket")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_windows"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(
-                                    F.struct("order_key", "shard", "seq_id", "wd")
-                                )
-                            ),
-                            lambda s: s.wd,
+        .agg(
+            F.count(F.lit(1)).alias("n_windows"),
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(
+                                F.struct("order_key", "shard", "seq_id", "wd")
+                            )
                         ),
-                    )
-                ).alias("bucket_digest"),
-            )
-            .orderBy("bucket")
+                        lambda s: s.wd,
+                    ),
+                )
+            ).alias("bucket_digest"),
         )
-        return _settle(spark, out, "packed_train_order")
-    finally:
-        vocab.unpersist()
+        .orderBy("bucket")
+    )
+    return out
 
 
 @query(
@@ -18398,6 +18307,7 @@ def packed_windows_training_order(
     """,
     "llm-pipeline", "packing", "pretraining", "storage", "incremental",
 )
+@_clean_query
 def packed_shards_incremental_append(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -18429,68 +18339,62 @@ def packed_shards_incremental_append(
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        eos_id = symbol_vocab(vocab).count()
-        enc = with_eos(
-            encode_docs(d, "doc_id", "text", vocab), "input_ids", eos_id
-        ).persist()
-        try:
-            mid = int(enc.agg(F.max("doc_id")).first()[0]) // 2
-            shard = F.pmod(F.col("doc_id"), F.lit(4))
-            enc_a = enc.filter(F.col("doc_id") < mid)
-            enc_b = enc.filter(F.col("doc_id") >= mid)
-            p_a = pack_sequences(
-                enc_a, "doc_id", F.size("input_ids"), max_tokens=64,
-                shard_col=shard,
-            )
-            win_a = materialize_packed(p_a, "input_ids", 64, doc_col="doc_id")
-            n_a = win_a.count()
-            t = persist_packed(
-                win_a, _scratch("packed_inc"), tag="base",
-                max_records_per_file=max(1, n_a // 6),
-            )
-            offs = shard_next_offsets(
-                enc_a, "doc_id", F.size("input_ids"), shard_col=shard
-            )
-            p_b = pack_sequences(
-                enc_b, "doc_id", F.size("input_ids"), max_tokens=64,
-                shard_col=shard, start_offsets=offs,
-            )
-            win_b = materialize_packed(p_b, "input_ids", 64, doc_col="doc_id")
-            rep = append_packed(t, win_b)
-            assert rep["files_written"] > 0
-            rel = t.read()
-            spans = F.concat_ws(
-                ";",
-                F.transform(
-                    F.col("doc_spans"),
-                    lambda s: F.concat_ws(
-                        ":",
-                        s.doc.cast("string"),
-                        s.start.cast("string"),
-                        s.len.cast("string"),
-                    ),
-                ),
-            )
-            out = rel.select(
-                "shard",
-                "seq_id",
-                "ids_digest",
-                "n_tokens",
-                "n_pieces",
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.col("piece_lengths"), lambda x: x.cast("string")
-                    ),
-                ).alias("piece_lengths"),
-                spans.alias("doc_spans"),
-            )
-            return _settle(spark, out, "packed_inc_append")
-        finally:
-            enc.unpersist()
-    finally:
-        vocab.unpersist()
+    eos_id = symbol_vocab(vocab).count()
+    enc = persist(with_eos(
+        encode_docs(d, "doc_id", "text", vocab), "input_ids", eos_id
+    ))
+    mid = int(enc.agg(F.max("doc_id")).first()[0]) // 2
+    shard = F.pmod(F.col("doc_id"), F.lit(4))
+    enc_a = enc.filter(F.col("doc_id") < mid)
+    enc_b = enc.filter(F.col("doc_id") >= mid)
+    p_a = pack_sequences(
+        enc_a, "doc_id", F.size("input_ids"), max_tokens=64,
+        shard_col=shard,
+    )
+    win_a = materialize_packed(p_a, "input_ids", 64, doc_col="doc_id")
+    n_a = win_a.count()
+    t = persist_packed(
+        win_a, _scratch("packed_inc"), tag="base",
+        max_records_per_file=max(1, n_a // 6),
+    )
+    offs = shard_next_offsets(
+        enc_a, "doc_id", F.size("input_ids"), shard_col=shard
+    )
+    p_b = pack_sequences(
+        enc_b, "doc_id", F.size("input_ids"), max_tokens=64,
+        shard_col=shard, start_offsets=offs,
+    )
+    win_b = materialize_packed(p_b, "input_ids", 64, doc_col="doc_id")
+    rep = append_packed(t, win_b)
+    assert rep["files_written"] > 0
+    rel = t.read()
+    spans = F.concat_ws(
+        ";",
+        F.transform(
+            F.col("doc_spans"),
+            lambda s: F.concat_ws(
+                ":",
+                s.doc.cast("string"),
+                s.start.cast("string"),
+                s.len.cast("string"),
+            ),
+        ),
+    )
+    out = rel.select(
+        "shard",
+        "seq_id",
+        "ids_digest",
+        "n_tokens",
+        "n_pieces",
+        F.concat_ws(
+            ",",
+            F.transform(
+                F.col("piece_lengths"), lambda x: x.cast("string")
+            ),
+        ).alias("piece_lengths"),
+        spans.alias("doc_spans"),
+    )
+    return out
 
 
 def _pretraining_v2_oracle(
@@ -18617,6 +18521,7 @@ def _pretraining_v2_oracle(
     "llm-pipeline", "pretraining", "pipeline", "sampling", "packing",
     "storage", "ordering",
 )
+@_clean_query
 def pretraining_pipeline_v2_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -18654,150 +18559,85 @@ def pretraining_pipeline_v2_persisted(
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        eos_id = symbol_vocab(vocab).count()
-        dt = (
-            encode_docs(d, "doc_id", "text", vocab)
-            .join(d.select("doc_id", "source", "n_chars"), "doc_id")
-            .withColumn("n_tokens", F.col("n_tokens").cast("long"))
-            .persist()
+    eos_id = symbol_vocab(vocab).count()
+    dt = persist(
+        encode_docs(d, "doc_id", "text", vocab)
+        .join(d.select("doc_id", "source", "n_chars"), "doc_id")
+        .withColumn("n_tokens", F.col("n_tokens").cast("long"))
+    )
+    q = dt.filter(F.col("n_chars").between(150, 600))
+    stats = q.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+    )
+    plan = persist(token_budget_plan(stats, budget_tokens=60_000))
+    samp = persist(sample_to_token_budget(q, plan))
+    enc2 = with_eos(samp.select("doc_id", "input_ids"), "input_ids", eos_id)
+    p = pack_sequences(
+        enc2, "doc_id", F.size("input_ids"), max_tokens=64,
+        shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
+    )
+    win = persist(materialize_packed(p, "input_ids", 64))
+    n_win = win.count()
+    t = persist_packed(
+        win, _scratch("pretrain_v2"), tag="train-v2",
+        max_records_per_file=max(1, n_win // 8),
+    )
+    rel = t.read("train-v2")
+    # disjoint reload == in-memory window set
+    a = win.select("shard", "seq_id", _ids_digest("input_ids").alias("dm"))
+    b = rel.select("shard", "seq_id", F.col("ids_digest").alias("ds"))
+    bad = (
+        a.join(b, ["shard", "seq_id"], "full")
+        .where(
+            F.col("dm").isNull()
+            | F.col("ds").isNull()
+            | (F.col("dm") != F.col("ds"))
         )
-        try:
-            q = dt.filter(F.col("n_chars").between(150, 600))
-            stats = q.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_tokens").alias("n_tokens"),
-            )
-            plan = token_budget_plan(stats, budget_tokens=60_000).persist()
-            try:
-                samp = sample_to_token_budget(q, plan).persist()
-                try:
-                    enc2 = with_eos(
-                        samp.select("doc_id", "input_ids"), "input_ids",
-                        eos_id,
-                    )
-                    p = pack_sequences(
-                        enc2, "doc_id", F.size("input_ids"), max_tokens=64,
-                        shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
-                    )
-                    win = materialize_packed(p, "input_ids", 64).persist()
-                    try:
-                        n_win = win.count()
-                        t = persist_packed(
-                            win, _scratch("pretrain_v2"), tag="train-v2",
-                            max_records_per_file=max(1, n_win // 8),
-                        )
-                        rel = t.read("train-v2")
-                        # disjoint reload == in-memory window set
-                        a = win.select(
-                            "shard", "seq_id",
-                            _ids_digest("input_ids").alias("dm"),
-                        )
-                        b = rel.select(
-                            "shard", "seq_id",
-                            F.col("ids_digest").alias("ds"),
-                        )
-                        bad = (
-                            a.join(b, ["shard", "seq_id"], "full")
-                            .where(
-                                F.col("dm").isNull()
-                                | F.col("ds").isNull()
-                                | (F.col("dm") != F.col("ds"))
-                            )
-                            .count()
-                        )
-                        assert bad == 0, f"{bad} windows diverged"
-                        ordered = training_order(rel, salt=1).select(
-                            "order_key", "shard", "seq_id",
-                            F.col("ids_digest").alias("wd"),
-                        )
-                        bd = ordered.groupBy(
-                            F.substring("order_key", 1, 1).alias("bucket")
-                        ).agg(
-                            F.count(F.lit(1)).alias("nb"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    F.transform(
-                                        F.array_sort(
-                                            F.collect_list(
-                                                F.struct(
-                                                    "order_key", "shard",
-                                                    "seq_id", "wd",
-                                                )
-                                            )
-                                        ),
-                                        lambda s: s.wd,
-                                    ),
-                                )
-                            ).alias("bdig"),
-                        )
-                        gl = bd.agg(
-                            F.sum("nb").alias("n_windows"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    F.transform(
-                                        F.array_sort(
-                                            F.collect_list(
-                                                F.struct("bucket", "bdig")
-                                            )
-                                        ),
-                                        lambda s: s.bdig,
-                                    ),
-                                )
-                            ).alias("windows_digest"),
-                        )
-                        f_raw = d.groupBy("source").agg(
-                            F.count(F.lit(1)).alias("n_raw")
-                        )
-                        f_q = q.groupBy("source").agg(
-                            F.count(F.lit(1)).alias("n_quality")
-                        )
-                        f_s = samp.groupBy("source").agg(
-                            F.count(F.lit(1)).alias("n_sampled"),
-                            F.sum("n_tokens").alias("tokens_sampled"),
-                        )
-                        out = (
-                            f_raw.join(f_q, "source", "left")
-                            .join(f_s, "source", "left")
-                            .join(
-                                plan.select("source", "token_budget"),
-                                "source",
-                                "left",
-                            )
-                            .crossJoin(F.broadcast(gl))
-                            .select(
-                                "source",
-                                "n_raw",
-                                F.coalesce("n_quality", F.lit(0)).alias(
-                                    "n_quality"
-                                ),
-                                F.coalesce("n_sampled", F.lit(0)).alias(
-                                    "n_sampled"
-                                ),
-                                F.coalesce("tokens_sampled", F.lit(0)).alias(
-                                    "tokens_sampled"
-                                ),
-                                F.coalesce("token_budget", F.lit(0)).alias(
-                                    "token_budget"
-                                ),
-                                "n_windows",
-                                "windows_digest",
-                            )
-                            .orderBy("source")
-                        )
-                        return _settle(spark, out, "pretrain_v2")
-                    finally:
-                        win.unpersist()
-                finally:
-                    samp.unpersist()
-            finally:
-                plan.unpersist()
-        finally:
-            dt.unpersist()
-    finally:
-        vocab.unpersist()
+        .count()
+    )
+    assert bad == 0, f"{bad} windows diverged"
+    ordered = training_order(rel, salt=1).select(
+        "order_key", "shard", "seq_id", F.col("ids_digest").alias("wd"),
+    )
+    bd = ordered.groupBy(F.substring("order_key", 1, 1).alias("bucket")).agg(
+        F.count(F.lit(1)).alias("nb"),
+        F.md5(F.concat_ws(",", F.transform(
+            F.array_sort(F.collect_list(
+                F.struct("order_key", "shard", "seq_id", "wd")
+            )),
+            lambda s: s.wd,
+        ))).alias("bdig"),
+    )
+    gl = bd.agg(
+        F.sum("nb").alias("n_windows"),
+        F.md5(F.concat_ws(",", F.transform(
+            F.array_sort(F.collect_list(F.struct("bucket", "bdig"))),
+            lambda s: s.bdig,
+        ))).alias("windows_digest"),
+    )
+    f_raw = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_raw"))
+    f_q = q.groupBy("source").agg(F.count(F.lit(1)).alias("n_quality"))
+    f_s = samp.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_sampled"),
+        F.sum("n_tokens").alias("tokens_sampled"),
+    )
+    return (
+        f_raw.join(f_q, "source", "left")
+        .join(f_s, "source", "left")
+        .join(plan.select("source", "token_budget"), "source", "left")
+        .crossJoin(F.broadcast(gl))
+        .select(
+            "source",
+            "n_raw",
+            *[F.coalesce(c, F.lit(0)).alias(c) for c in (
+                "n_quality", "n_sampled", "tokens_sampled", "token_budget"
+            )],
+            "n_windows",
+            "windows_digest",
+        )
+        .orderBy("source")
+    )
 
 
 def _mixture_budget_sampling_oracle(n_merges: int = 4, budget: int = 32_000) -> str:
@@ -18860,6 +18700,7 @@ def _mixture_budget_sampling_oracle(n_merges: int = 4, budget: int = 32_000) -> 
     _mixture_budget_sampling_oracle(4, 32_000),
     "llm-pipeline", "sampling", "mixture", "tokenizer",
 )
+@_clean_query
 def mixture_budget_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FROM TOKEN BUDGETS TO ACTUAL DOCUMENT SELECTION — the planner's
     integer allocation (token_budget_plan) executed by two samplers:
@@ -18881,58 +18722,48 @@ def mixture_budget_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        d_tok = (
-            encode_docs(d, "doc_id", "text", vocab)
-            .select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
-            .join(d.select("doc_id", "source"), "doc_id")
-            .persist()
+    d_tok = persist(
+        encode_docs(d, "doc_id", "text", vocab)
+        .select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
+        .join(d.select("doc_id", "source"), "doc_id")
+    )
+    stats = d_tok.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+    )
+    plan = persist(token_budget_plan(stats, budget_tokens=32_000))
+    exact = sample_to_token_budget(d_tok, plan)
+    over = exact.groupBy("source").agg(
+        F.max(F.col("cum_tokens") - F.col("token_budget")).alias("o")
+    ).where(F.col("o") > 0).count()
+    assert over == 0  # exact sampler never exceeds a budget
+    e = exact.groupBy("source").agg(
+        F.count(F.lit(1)).alias("docs_exact"),
+        F.sum("n_tokens").alias("tokens_exact"),
+    )
+    r = sample_at_token_rate(d_tok, plan).groupBy("source").agg(
+        F.count(F.lit(1)).alias("docs_rate"),
+        F.sum("n_tokens").alias("tokens_rate"),
+    )
+    out = (
+        plan.select("source", "token_budget")
+        .join(e, "source", "left")
+        .join(r, "source", "left")
+        .select(
+            "source",
+            "token_budget",
+            F.coalesce("docs_exact", F.lit(0)).alias("docs_exact"),
+            F.coalesce("tokens_exact", F.lit(0)).alias(
+                "tokens_exact"
+            ),
+            F.coalesce("docs_rate", F.lit(0)).alias("docs_rate"),
+            F.coalesce("tokens_rate", F.lit(0)).alias(
+                "tokens_rate"
+            ),
         )
-        try:
-            stats = d_tok.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_tokens").alias("n_tokens"),
-            )
-            plan = token_budget_plan(stats, budget_tokens=32_000).persist()
-            try:
-                exact = sample_to_token_budget(d_tok, plan)
-                over = exact.groupBy("source").agg(
-                    F.max(F.col("cum_tokens") - F.col("token_budget")).alias("o")
-                ).where(F.col("o") > 0).count()
-                assert over == 0  # exact sampler never exceeds a budget
-                e = exact.groupBy("source").agg(
-                    F.count(F.lit(1)).alias("docs_exact"),
-                    F.sum("n_tokens").alias("tokens_exact"),
-                )
-                r = sample_at_token_rate(d_tok, plan).groupBy("source").agg(
-                    F.count(F.lit(1)).alias("docs_rate"),
-                    F.sum("n_tokens").alias("tokens_rate"),
-                )
-                out = (
-                    plan.select("source", "token_budget")
-                    .join(e, "source", "left")
-                    .join(r, "source", "left")
-                    .select(
-                        "source",
-                        "token_budget",
-                        F.coalesce("docs_exact", F.lit(0)).alias("docs_exact"),
-                        F.coalesce("tokens_exact", F.lit(0)).alias(
-                            "tokens_exact"
-                        ),
-                        F.coalesce("docs_rate", F.lit(0)).alias("docs_rate"),
-                        F.coalesce("tokens_rate", F.lit(0)).alias(
-                            "tokens_rate"
-                        ),
-                    )
-                    .orderBy("source")
-                )
-                return _settle(spark, out, "mixture_budget_sampling")
-            finally:
-                plan.unpersist()
-        finally:
-            d_tok.unpersist()
-    finally:
-        vocab.unpersist()
+        .orderBy("source")
+    )
+    return out
 
 
 def _sft_loss_oracle(n_merges: int = 4, m: int = 48, shards: int = 4,
@@ -19013,6 +18844,7 @@ def _sft_loss_oracle(n_merges: int = 4, m: int = 48, shards: int = 4,
     _sft_loss_oracle(4, 48, 4, 5),
     "llm-pipeline", "packing", "sft", "loss-mask", "pretraining",
 )
+@_clean_query
 def sft_pack_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SFT PACKING WITH LOSS MASKS — instruction tuning trains only on
     completion tokens, so every packed window needs (start, len) spans
@@ -19043,80 +18875,71 @@ def sft_pack_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        eos_id = symbol_vocab(vocab).count()
-        enc = encode_docs(d, "doc_id", "text", vocab)
-        prompt = d.select(
-            "doc_id",
-            F.concat_ws(" ", F.slice(words_expr("text"), 1, 5)).alias("text"),
+    eos_id = symbol_vocab(vocab).count()
+    enc = encode_docs(d, "doc_id", "text", vocab)
+    prompt = d.select(
+        "doc_id",
+        F.concat_ws(" ", F.slice(words_expr("text"), 1, 5)).alias("text"),
+    )
+    plen = encode_docs(prompt, "doc_id", "text", vocab).select(
+        "doc_id", F.col("n_tokens").cast("long").alias("prompt_len")
+    )
+    # persist the encoded+joined relation: it feeds the pack AND
+    # the invariant check (two encode passes otherwise re-run the
+    # corpus word join for each consumer)
+    enc2 = persist(with_eos(
+        enc.join(plen, "doc_id"), "input_ids", eos_id
+    ).withColumn(
+        "docref", F.struct(F.col("doc_id"), F.col("prompt_len"))
+    ))
+    p = pack_sequences(
+        enc2, "doc_id", F.size("input_ids"), max_tokens=48,
+        shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
+    )
+    win = persist(completion_loss_spans(
+        materialize_packed(p, "input_ids", 48, doc_col="docref")
+    ))  # the check and the settle both consume it
+    # global invariant: loss mass equals completion + EOS
+    # (enc2's n_tokens pre-dates the EOS append → the +1)
+    chk = win.agg(F.sum("n_loss_tokens").alias("a")).crossJoin(
+        enc2.agg(
+            F.sum(
+                F.col("n_tokens") - F.col("prompt_len") + 1
+            ).alias("b")
         )
-        plen = encode_docs(prompt, "doc_id", "text", vocab).select(
-            "doc_id", F.col("n_tokens").cast("long").alias("prompt_len")
-        )
-        # persist the encoded+joined relation: it feeds the pack AND
-        # the invariant check (two encode passes otherwise re-run the
-        # corpus word join for each consumer)
-        enc2 = with_eos(
-            enc.join(plen, "doc_id"), "input_ids", eos_id
-        ).withColumn(
-            "docref", F.struct(F.col("doc_id"), F.col("prompt_len"))
-        ).persist()
-        try:
-            p = pack_sequences(
-                enc2, "doc_id", F.size("input_ids"), max_tokens=48,
-                shard_col=F.pmod(F.col("doc_id"), F.lit(4)),
-            )
-            win = completion_loss_spans(
-                materialize_packed(p, "input_ids", 48, doc_col="docref")
-            ).persist()  # the check and the settle both consume it
-            try:
-                # global invariant: loss mass equals completion + EOS
-                # (enc2's n_tokens pre-dates the EOS append → the +1)
-                chk = win.agg(F.sum("n_loss_tokens").alias("a")).crossJoin(
-                    enc2.agg(
-                        F.sum(
-                            F.col("n_tokens") - F.col("prompt_len") + 1
-                        ).alias("b")
-                    )
-                ).first()
-                assert int(chk["a"]) == int(chk["b"]), (chk["a"], chk["b"])
-                out = win.select(
-                    "shard",
-                    "seq_id",
-                    _ids_digest("input_ids").alias("ids_digest"),
-                    "n_tokens",
-                    "n_loss_tokens",
-                    F.concat_ws(
-                        ";",
-                        F.transform(
-                            F.col("loss_spans"),
-                            lambda x: F.concat_ws(
-                                ":",
-                                x.start.cast("string"),
-                                x.len.cast("string"),
-                            ),
-                        ),
-                    ).alias("loss_spans"),
-                    F.concat_ws(
-                        ";",
-                        F.transform(
-                            F.col("doc_spans"),
-                            lambda s: F.concat_ws(
-                                ":",
-                                s.doc.doc_id.cast("string"),
-                                s.start.cast("string"),
-                                s.len.cast("string"),
-                            ),
-                        ),
-                    ).alias("doc_spans"),
-                ).orderBy("shard", "seq_id")
-                return _settle(spark, out, "sft_loss_mask")
-            finally:
-                win.unpersist()
-        finally:
-            enc2.unpersist()
-    finally:
-        vocab.unpersist()
+    ).first()
+    assert int(chk["a"]) == int(chk["b"]), (chk["a"], chk["b"])
+    out = win.select(
+        "shard",
+        "seq_id",
+        _ids_digest("input_ids").alias("ids_digest"),
+        "n_tokens",
+        "n_loss_tokens",
+        F.concat_ws(
+            ";",
+            F.transform(
+                F.col("loss_spans"),
+                lambda x: F.concat_ws(
+                    ":",
+                    x.start.cast("string"),
+                    x.len.cast("string"),
+                ),
+            ),
+        ).alias("loss_spans"),
+        F.concat_ws(
+            ";",
+            F.transform(
+                F.col("doc_spans"),
+                lambda s: F.concat_ws(
+                    ":",
+                    s.doc.doc_id.cast("string"),
+                    s.start.cast("string"),
+                    s.len.cast("string"),
+                ),
+            ),
+        ).alias("doc_spans"),
+    ).orderBy("shard", "seq_id")
+    return out
 
 
 # ------------------- round-12: byte-level unigram (no-unk parity)
@@ -19274,29 +19097,28 @@ def unigram_bytelevel_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     # undecorated: the body settles ONCE (the min_id assert needs the
-    # materialized result) and sweeps its own encode cache — stacking
+    # materialized result) inside its own cache scope — stacking
     # @_clean_query on top wrote the already-settled result to scratch
     # a second time on every execution (one extra write job per
     # bench/oracle run)
-    before = _rdd_snapshot(spark)
-    stats = piece_stats(
-        d.filter(F.col("doc_id") % 2 == 0), "text",
-        max_piece_len=4, vocab_size=150, byte_level=True,
-    )
-    hold = _decorated_docs(spark, sf_dir).filter(
-        (F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 30)
-    ).select("doc_id", F.concat(F.col("text"), F.lit(" µ~")).alias("text"))
-    out = unigram_encode_docs(
-        hold, "doc_id", "text", stats, unk_id=-1,
-        byte_level=True, base_bytes=True,
-    ).select(
-        "doc_id",
-        _ids_digest("input_ids").alias("ids_digest"),
-        "n_tokens",
-        F.array_min("input_ids").cast("int").alias("min_id"),
-    ).orderBy("doc_id")
-    res = _settle(spark, out, "ug_bytelevel_holdout")
-    _sweep_rdds(spark, before)
+    with cache_scope():
+        stats = piece_stats(
+            d.filter(F.col("doc_id") % 2 == 0), "text",
+            max_piece_len=4, vocab_size=150, byte_level=True,
+        )
+        hold = _decorated_docs(spark, sf_dir).filter(
+            (F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 30)
+        ).select("doc_id", F.concat(F.col("text"), F.lit(" µ~")).alias("text"))
+        out = unigram_encode_docs(
+            hold, "doc_id", "text", stats, unk_id=-1,
+            byte_level=True, base_bytes=True,
+        ).select(
+            "doc_id",
+            _ids_digest("input_ids").alias("ids_digest"),
+            "n_tokens",
+            F.array_min("input_ids").cast("int").alias("min_id"),
+        ).orderBy("doc_id")
+        res = _settle(spark, out, "ug_bytelevel_holdout")
     # the guarantee itself, self-enforced: no unk anywhere
     assert res.where(F.col("min_id") < 0).count() == 0
     return res
@@ -19493,9 +19315,9 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni, bi, n_total = train_backoff_lm(
         d.where(F.col("lang") == "en"), "text"
     )
-    uni = uni.persist()
-    bi = bi.persist()
-    try:
+    with cache_scope():
+        uni = persist(uni)
+        bi = persist(bi)
         scored = score_docs_backoff(d, uni, bi, n_total, "doc_id", "text")
         lab = scored.join(d.select("doc_id", "lang"), "doc_id")
         bk = perplexity_buckets(lab, "lang", "doc_id", k=3)
@@ -19517,9 +19339,6 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "min_ce_micro"
             ], lg
         return res
-    finally:
-        uni.unpersist()
-        bi.unpersist()
 
 
 _EPOCH_MIXTURE_ORACLE = """
@@ -19750,10 +19569,10 @@ def epoch_plan_execution(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat_rows = stats.collect()
     total = sum(int(r["n_tokens"]) for r in stat_rows)
     stats_local = spark.createDataFrame(stat_rows, stats.schema)
-    plan = plan_epoch_mixture(
-        stats_local, (total * 15) // 10, max_epochs_micro=2_500_000
-    ).persist()
-    try:
+    with cache_scope():
+        plan = persist(plan_epoch_mixture(
+            stats_local, (total * 15) // 10, max_epochs_micro=2_500_000
+        ))
         pl = plan.select(
             "source",
             "allocated",
@@ -19805,8 +19624,6 @@ def epoch_plan_execution(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert any(r["full_epochs"] == 0 and r["docs_frac"] > 0
                    for r in rows)
         return res
-    finally:
-        plan.unpersist()
 
 
 _STREAM_LM_ORACLE = (
@@ -19994,6 +19811,7 @@ WHERE doc_id < 40 ORDER BY doc_id
     _LM_TRIGRAM_ORACLE,
     "llm", "quality", "perplexity", "lm", "trigram",
 )
+@_clean_query
 def lm_trigram_vs_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRIGRAM stupid backoff (operators/lm_quality.py:
     score_docs_backoff3) against the bigram scorer on the same docs —
@@ -20014,27 +19832,23 @@ def lm_trigram_vs_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = d.where(F.col("lang") == "en")
     uni, bi, n_total = train_backoff_lm(ref, "text")
     tri = trigram_counts(ref, "text")
-    uni = uni.persist()
-    bi = bi.persist()
-    try:
-        sample = d.where(F.col("doc_id") < 40)
-        s2 = score_docs_backoff(
-            sample, uni, bi, n_total, "doc_id", "text"
-        ).select("doc_id", F.col("ce_micro").alias("ce2_micro"))
-        s3 = score_docs_backoff3(
-            sample, uni, bi, tri, n_total, "doc_id", "text"
-        ).select(
-            "doc_id", "n_trigrams", F.col("ce_micro").alias("ce3_micro")
-        )
-        out = (
-            s2.join(s3, "doc_id")
-            .select("doc_id", "ce2_micro", "n_trigrams", "ce3_micro")
-            .orderBy("doc_id")
-        )
-        return _settle(spark, out, "lm_trigram_vs_bigram")
-    finally:
-        uni.unpersist()
-        bi.unpersist()
+    uni = persist(uni)
+    bi = persist(bi)
+    sample = d.where(F.col("doc_id") < 40)
+    s2 = score_docs_backoff(
+        sample, uni, bi, n_total, "doc_id", "text"
+    ).select("doc_id", F.col("ce_micro").alias("ce2_micro"))
+    s3 = score_docs_backoff3(
+        sample, uni, bi, tri, n_total, "doc_id", "text"
+    ).select(
+        "doc_id", "n_trigrams", F.col("ce_micro").alias("ce3_micro")
+    )
+    out = (
+        s2.join(s3, "doc_id")
+        .select("doc_id", "ce2_micro", "n_trigrams", "ce3_micro")
+        .orderBy("doc_id")
+    )
+    return out
 
 
 def _quality_gated_oracle() -> str:
@@ -20101,6 +19915,7 @@ ORDER BY s.source
     _quality_gated_oracle(),
     "llm", "quality", "perplexity", "mixture", "sampling", "pipeline",
 )
+@_clean_query
 def quality_gated_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE QUALITY GATE COMPOSED INTO THE MIXTURE PIPELINE: perplexity
     buckets (lm_quality.py) drop each language's tail third, the
@@ -20125,124 +19940,108 @@ def quality_gated_budget_selection(spark: SparkSession, sf_dir: str) -> DataFram
     uni, bi, n_total = train_backoff_lm(
         d.where(F.col("lang") == "en"), "text"
     )
-    uni = uni.persist()
-    bi = bi.persist()
-    bk = None
-    try:
-        scored = score_docs_backoff(d, uni, bi, n_total, "doc_id", "text")
-        # persisted: both the gate-exactness assert and the kept
-        # materialization otherwise re-run the whole score + ntile
-        # lineage (guide §5: reused AND expensive to recompute)
-        bk = perplexity_buckets(
-            scored.join(d.select("doc_id", "lang"), "doc_id"),
-            "lang",
-            "doc_id",
-            k=3,
-        ).persist()
-        # per-language gate-exactness: kept == n - n div 3
-        per_lang = {
-            r["lang"]: (r["n"], r["kept"])
-            for r in bk.groupBy("lang").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(F.col("bucket") <= 2, 1).otherwise(0)
-                ).alias("kept"),
-            ).collect()
-        }
-        assert all(k == n - n // 3 for n, k in per_lang.values())
-        kept = (
-            bk.where(F.col("bucket") <= 2)
-            .select("doc_id")
-            .join(
-                d.select(
-                    "doc_id",
-                    "source",
-                    F.size(F.split(F.col("text"), " "))
-                    .cast("long")
-                    .alias("n_tokens"),
-                ),
+    uni = persist(uni)
+    bi = persist(bi)
+    scored = score_docs_backoff(d, uni, bi, n_total, "doc_id", "text")
+    # persisted: both the gate-exactness assert and the kept
+    # materialization otherwise re-run the whole score + ntile
+    # lineage (guide §5: reused AND expensive to recompute)
+    bk = persist(perplexity_buckets(
+        scored.join(d.select("doc_id", "lang"), "doc_id"),
+        "lang",
+        "doc_id",
+        k=3,
+    ))
+    # per-language gate-exactness: kept == n - n div 3
+    per_lang = {
+        r["lang"]: (r["n"], r["kept"])
+        for r in bk.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.when(F.col("bucket") <= 2, 1).otherwise(0)
+            ).alias("kept"),
+        ).collect()
+    }
+    assert all(k == n - n // 3 for n, k in per_lang.values())
+    kept = persist(
+        bk.where(F.col("bucket") <= 2)
+        .select("doc_id")
+        .join(
+            d.select(
                 "doc_id",
-            )
-            .persist()
+                "source",
+                F.size(F.split(F.col("text"), " "))
+                .cast("long")
+                .alias("n_tokens"),
+            ),
+            "doc_id",
         )
-        try:
-            stats = kept.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_tokens").alias("n_tokens"),
-            )
-            # ONE aggregation over the persisted kept: collect the
-            # |sources|-row stats, derive the budget driver-side, and
-            # rebuild the stats as a LOCAL relation for the planner —
-            # the scalar first() and the plan materialization each
-            # re-ran this groupBy
-            stat_rows = stats.collect()
-            total_kept = sum(int(r["n_tokens"]) for r in stat_rows)
-            plan = token_budget_plan(
-                spark.createDataFrame(stat_rows, stats.schema),
-                budget_tokens=(total_kept * 6) // 10,
-            ).persist()
-            try:
-                sel = sample_to_token_budget(kept, plan)
-                # ONE pass over the selection serves both the
-                # never-over-budget assert and the per-source rollup
-                # (the assert's separate aggregate re-ran the whole
-                # selection window lineage — guide §1.2 step 1); the
-                # per-source relation is collected once (bounded:
-                # source is low-cardinality) and rebuilt as a local
-                # relation for the output join
-                agg_rows = (
-                    sel.groupBy("source")
-                    .agg(
-                        F.count(F.lit(1)).alias("docs_selected"),
-                        F.sum("n_tokens").alias("tokens_selected"),
-                        F.max(
-                            F.col("cum_tokens") - F.col("token_budget")
-                        ).alias("over_budget"),
-                    )
-                    .collect()
-                )
-                # selection never exceeds a budget
-                assert all(r["over_budget"] <= 0 for r in agg_rows)
-                agg = spark.createDataFrame(
-                    [
-                        (r["source"], r["docs_selected"], r["tokens_selected"])
-                        for r in agg_rows
-                    ],
-                    "source string, docs_selected long, tokens_selected long",
-                )
-                out = (
-                    plan.select(
-                        "source",
-                        F.col("n_docs").alias("n_docs_kept"),
-                        F.col("n_tokens").alias("tokens_kept"),
-                        "token_budget",
-                    )
-                    .join(agg, "source", "left")
-                    .select(
-                        "source",
-                        "n_docs_kept",
-                        "tokens_kept",
-                        "token_budget",
-                        F.coalesce("docs_selected", F.lit(0).cast("long"))
-                        .alias("docs_selected"),
-                        F.coalesce(
-                            "tokens_selected", F.lit(0).cast("long")
-                        ).alias("tokens_selected"),
-                    )
-                    .orderBy("source")
-                )
-                return _settle(
-                    spark, out, "quality_gated_budget_selection"
-                )
-            finally:
-                plan.unpersist()
-        finally:
-            kept.unpersist()
-    finally:
-        uni.unpersist()
-        bi.unpersist()
-        if bk is not None:
-            bk.unpersist()
+    )
+    stats = kept.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+    )
+    # ONE aggregation over the persisted kept: collect the
+    # |sources|-row stats, derive the budget driver-side, and
+    # rebuild the stats as a LOCAL relation for the planner —
+    # the scalar first() and the plan materialization each
+    # re-ran this groupBy
+    stat_rows = stats.collect()
+    total_kept = sum(int(r["n_tokens"]) for r in stat_rows)
+    plan = persist(token_budget_plan(
+        spark.createDataFrame(stat_rows, stats.schema),
+        budget_tokens=(total_kept * 6) // 10,
+    ))
+    sel = sample_to_token_budget(kept, plan)
+    # ONE pass over the selection serves both the
+    # never-over-budget assert and the per-source rollup
+    # (the assert's separate aggregate re-ran the whole
+    # selection window lineage — guide §1.2 step 1); the
+    # per-source relation is collected once (bounded:
+    # source is low-cardinality) and rebuilt as a local
+    # relation for the output join
+    agg_rows = (
+        sel.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("docs_selected"),
+            F.sum("n_tokens").alias("tokens_selected"),
+            F.max(
+                F.col("cum_tokens") - F.col("token_budget")
+            ).alias("over_budget"),
+        )
+        .collect()
+    )
+    # selection never exceeds a budget
+    assert all(r["over_budget"] <= 0 for r in agg_rows)
+    agg = spark.createDataFrame(
+        [
+            (r["source"], r["docs_selected"], r["tokens_selected"])
+            for r in agg_rows
+        ],
+        "source string, docs_selected long, tokens_selected long",
+    )
+    out = (
+        plan.select(
+            "source",
+            F.col("n_docs").alias("n_docs_kept"),
+            F.col("n_tokens").alias("tokens_kept"),
+            "token_budget",
+        )
+        .join(agg, "source", "left")
+        .select(
+            "source",
+            "n_docs_kept",
+            "tokens_kept",
+            "token_budget",
+            F.coalesce("docs_selected", F.lit(0).cast("long"))
+            .alias("docs_selected"),
+            F.coalesce(
+                "tokens_selected", F.lit(0).cast("long")
+            ).alias("tokens_selected"),
+        )
+        .orderBy("source")
+    )
+    return out
 
 
 _LM_CUTOFF_ORACLE = (
@@ -20319,9 +20118,9 @@ def lm_quality_cutoff_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni, bi, n_total = train_backoff_lm(
         d.where(F.col("lang") == "en"), "text"
     )
-    uni = uni.persist()
-    bi = bi.persist()
-    try:
+    with cache_scope():
+        uni = persist(uni)
+        bi = persist(bi)
         scored = score_docs_backoff(d, uni, bi, n_total, "doc_id", "text")
         lab = scored.join(d.select("doc_id", "lang"), "doc_id")
         bk = perplexity_buckets_by_cutoff(lab, "lang", "ce_micro", k=3)
@@ -20345,9 +20144,6 @@ def lm_quality_cutoff_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             for a, b in zip(rs, rs[1:]):
                 assert a["max_ce_micro"] < b["min_ce_micro"], lg
         return res
-    finally:
-        uni.unpersist()
-        bi.unpersist()
 
 
 _LM_PER_LANG_ORACLE = """
@@ -20436,6 +20232,7 @@ FROM bk GROUP BY lang, bucket ORDER BY lang, bucket
     _LM_PER_LANG_ORACLE,
     "llm", "quality", "perplexity", "lm", "per-language",
 )
+@_clean_query
 def lm_per_language_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet FIDELITY: every language scored under ITS OWN reference
     model (operators/lm_quality.py:train_backoff_lm_by /
@@ -20454,26 +20251,22 @@ def lm_per_language_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     uni, bi, totals = train_backoff_lm_by(d, "text", "lang")
-    uni = uni.persist()
-    bi = bi.persist()
-    try:
-        scored = score_docs_backoff_by(
-            d, uni, bi, totals, "doc_id", "text", "lang"
+    uni = persist(uni)
+    bi = persist(bi)
+    scored = score_docs_backoff_by(
+        d, uni, bi, totals, "doc_id", "text", "lang"
+    )
+    bk = perplexity_buckets_by_cutoff(scored, "lang", "ce_micro", k=3)
+    out = (
+        bk.groupBy("lang", F.col("bucket").cast("long").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("ce_micro").alias("min_ce_micro"),
+            F.max("ce_micro").alias("max_ce_micro"),
         )
-        bk = perplexity_buckets_by_cutoff(scored, "lang", "ce_micro", k=3)
-        out = (
-            bk.groupBy("lang", F.col("bucket").cast("long").alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.min("ce_micro").alias("min_ce_micro"),
-                F.max("ce_micro").alias("max_ce_micro"),
-            )
-            .orderBy("lang", "bucket")
-        )
-        return _settle(spark, out, "lm_per_language_quality")
-    finally:
-        uni.unpersist()
-        bi.unpersist()
+        .orderBy("lang", "bucket")
+    )
+    return out
 
 
 def _dpo_pairs_oracle(k_prompt: int = 5, salt: int = 7) -> str:
@@ -20583,60 +20376,54 @@ def dpo_preference_pairs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     uni, bi, totals = train_backoff_lm_by(d, "text", "lang")
-    uni = uni.persist()
-    bi = bi.persist()
-    try:
-        pairs = contrastive_preference_pairs(
+    with cache_scope():
+        uni = persist(uni)
+        bi = persist(bi)
+        pairs = persist(contrastive_preference_pairs(
             prompt_completion_split(
                 d.select("doc_id", "lang", "text"), "doc_id", "text", 5
             ),
             "doc_id",
             "lang",
             salt=7,
-        ).persist()
-        try:
-            ch = score_docs_backoff_by(
-                pairs.select(
-                    "doc_id",
-                    "lang",
-                    F.concat_ws(" ", "prompt", "chosen").alias("text"),
-                ),
-                uni, bi, totals, "doc_id", "text", "lang",
-            ).select("doc_id", "lang", F.col("ce_micro").alias("ce_chosen"))
-            rj = score_docs_backoff_by(
-                pairs.select(
-                    "doc_id",
-                    "lang",
-                    F.concat_ws(" ", "prompt", "rejected").alias("text"),
-                ),
-                uni, bi, totals, "doc_id", "text", "lang",
-            ).select(
-                "doc_id", "lang", F.col("ce_micro").alias("ce_rejected")
+        ))
+        ch = score_docs_backoff_by(
+            pairs.select(
+                "doc_id",
+                "lang",
+                F.concat_ws(" ", "prompt", "chosen").alias("text"),
+            ),
+            uni, bi, totals, "doc_id", "text", "lang",
+        ).select("doc_id", "lang", F.col("ce_micro").alias("ce_chosen"))
+        rj = score_docs_backoff_by(
+            pairs.select(
+                "doc_id",
+                "lang",
+                F.concat_ws(" ", "prompt", "rejected").alias("text"),
+            ),
+            uni, bi, totals, "doc_id", "text", "lang",
+        ).select(
+            "doc_id", "lang", F.col("ce_micro").alias("ce_rejected")
+        )
+        out = (
+            ch.join(rj, ["doc_id", "lang"])
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                F.sum(
+                    F.when(
+                        F.col("ce_chosen") < F.col("ce_rejected"), 1
+                    ).otherwise(0)
+                ).alias("n_chosen_better"),
+                F.sum("ce_chosen").alias("sum_ce_chosen"),
+                F.sum("ce_rejected").alias("sum_ce_rejected"),
             )
-            out = (
-                ch.join(rj, ["doc_id", "lang"])
-                .groupBy("lang")
-                .agg(
-                    F.count(F.lit(1)).alias("n_pairs"),
-                    F.sum(
-                        F.when(
-                            F.col("ce_chosen") < F.col("ce_rejected"), 1
-                        ).otherwise(0)
-                    ).alias("n_chosen_better"),
-                    F.sum("ce_chosen").alias("sum_ce_chosen"),
-                    F.sum("ce_rejected").alias("sum_ce_rejected"),
-                )
-                .orderBy("lang")
-            )
-            res = _settle(spark, out, "dpo_preference_pairs_report")
-            for r in res.collect():  # aggregate signal points at chosen
-                assert r["sum_ce_chosen"] < r["sum_ce_rejected"], r["lang"]
-            return res
-        finally:
-            pairs.unpersist()
-    finally:
-        uni.unpersist()
-        bi.unpersist()
+            .orderBy("lang")
+        )
+        res = _settle(spark, out, "dpo_preference_pairs_report")
+        for r in res.collect():  # aggregate signal points at chosen
+            assert r["sum_ce_chosen"] < r["sum_ce_rejected"], r["lang"]
+        return res
 
 
 def _dpo_tokenized_oracle(n_merges: int = 4, k_prompt: int = 5,
@@ -20701,6 +20488,7 @@ ORDER BY p.doc_id
     _dpo_tokenized_oracle(4, 5, 7, 120),
     "llm", "preference", "dpo", "tokenizer",
 )
+@_clean_query
 def dpo_tokenized_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PREFERENCE PAIRS UNDER THE FROZEN TOKENIZER — the record a DPO
     trainer actually consumes: each side of every pair frozen-encoded
@@ -20720,67 +20508,61 @@ def dpo_tokenized_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     rules, vocab = bpe_train(d, "text", n_merges=4)
-    try:
-        sub = d.where(F.col("doc_id") < 120)
-        pairs = contrastive_preference_pairs(
-            prompt_completion_split(
-                sub.select("doc_id", "lang", "text"), "doc_id", "text", 5
-            ),
-            "doc_id",
-            "lang",
-            salt=7,
-        ).persist()
-        try:
-            def enc(col, name):
-                return (
-                    encode_docs(
-                        pairs.select("doc_id", F.col(col).alias("t")),
-                        "doc_id", "t", vocab,
-                    )
-                    .select(
-                        "doc_id",
-                        F.col("input_ids").alias(f"{name}_ids"),
-                        F.col("n_tokens").cast("long")
-                        .alias(f"n_{name}_tokens"),
-                    )
-                )
-
-            ep = enc("prompt", "prompt")
-            ec = enc("chosen", "chosen")
-            er = enc("rejected", "rejected")
-            full = encode_docs(
-                sub.join(pairs.select("doc_id"), "doc_id")
-                .select("doc_id", "text"),
-                "doc_id", "text", vocab,
-            ).select("doc_id", F.col("input_ids").alias("full_ids"))
-            j = (
-                pairs.select("doc_id", "lang")
-                .join(ep, "doc_id").join(ec, "doc_id").join(er, "doc_id")
-                .join(full, "doc_id")
+    sub = d.where(F.col("doc_id") < 120)
+    pairs = persist(contrastive_preference_pairs(
+        prompt_completion_split(
+            sub.select("doc_id", "lang", "text"), "doc_id", "text", 5
+        ),
+        "doc_id",
+        "lang",
+        salt=7,
+    ))
+    def enc(col, name):
+        return (
+            encode_docs(
+                pairs.select("doc_id", F.col(col).alias("t")),
+                "doc_id", "t", vocab,
             )
-            # concatenation exactness: prompt ++ chosen == original doc
-            bad = (
-                j.withColumn(
-                    "__pc", F.concat("prompt_ids", "chosen_ids")
-                )
-                .where(_ids_digest("__pc") != _ids_digest("full_ids"))
-                .count()
-            )
-            assert bad == 0, f"{bad} pairs break concat exactness"
-            out = j.select(
+            .select(
                 "doc_id",
-                "lang",
-                "n_prompt_tokens",
-                "n_chosen_tokens",
-                "n_rejected_tokens",
-                _ids_digest("chosen_ids").alias("chosen_digest"),
-                _ids_digest("rejected_ids").alias("rejected_digest"),
-            ).orderBy("doc_id")
-            return _settle(spark, out, "dpo_tokenized_records")
-        finally:
-            pairs.unpersist()
-    finally:
-        vocab.unpersist()
+                F.col("input_ids").alias(f"{name}_ids"),
+                F.col("n_tokens").cast("long")
+                .alias(f"n_{name}_tokens"),
+            )
+        )
+
+    ep = enc("prompt", "prompt")
+    ec = enc("chosen", "chosen")
+    er = enc("rejected", "rejected")
+    full = encode_docs(
+        sub.join(pairs.select("doc_id"), "doc_id")
+        .select("doc_id", "text"),
+        "doc_id", "text", vocab,
+    ).select("doc_id", F.col("input_ids").alias("full_ids"))
+    j = (
+        pairs.select("doc_id", "lang")
+        .join(ep, "doc_id").join(ec, "doc_id").join(er, "doc_id")
+        .join(full, "doc_id")
+    )
+    # concatenation exactness: prompt ++ chosen == original doc
+    bad = (
+        j.withColumn(
+            "__pc", F.concat("prompt_ids", "chosen_ids")
+        )
+        .where(_ids_digest("__pc") != _ids_digest("full_ids"))
+        .count()
+    )
+    assert bad == 0, f"{bad} pairs break concat exactness"
+    out = j.select(
+        "doc_id",
+        "lang",
+        "n_prompt_tokens",
+        "n_chosen_tokens",
+        "n_rejected_tokens",
+        _ids_digest("chosen_ids").alias("chosen_digest"),
+        _ids_digest("rejected_ids").alias("rejected_digest"),
+    ).orderBy("doc_id")
+    return out
 
 
 _EPOCH_SHUFFLE_ORACLE = (
@@ -20882,10 +20664,10 @@ def epoch_shuffled_consumption(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat_rows = stats.collect()
     total = sum(int(r["n_tokens"]) for r in stat_rows)
     stats_local = spark.createDataFrame(stat_rows, stats.schema)
-    plan = plan_epoch_mixture(
-        stats_local, (total * 15) // 10, max_epochs_micro=2_500_000
-    ).persist()
-    try:
+    with cache_scope():
+        plan = persist(plan_epoch_mixture(
+            stats_local, (total * 15) // 10, max_epochs_micro=2_500_000
+        ))
         sel = sample_with_epochs(d_tok, plan)
         okey = F.md5(
             F.concat_ws(
@@ -20923,8 +20705,6 @@ def epoch_shuffled_consumption(spark: SparkSession, sf_dir: str) -> DataFrame:
         digs = [r["order_digest"] for r in rows]
         assert len(set(digs)) == len(digs)  # each epoch reshuffles
         return res
-    finally:
-        plan.unpersist()
 
 
 # ---------------------------------------------------------------- helpers

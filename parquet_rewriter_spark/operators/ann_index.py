@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_rewriter_spark.functions.vector import as_double, cosine
 from parquet_rewriter_spark.operators.similarity import ivf_assign, kmeans_centroids
-from parquet_rewriter_spark.operators.util import local_df
+from parquet_rewriter_spark.operators.util import local_df, persist
 from parquet_rewriter_spark.table import SortedTable
 
 CELL_BASE = 1 << 40  # composite key: cell * CELL_BASE + vec_id
@@ -415,10 +415,9 @@ class IVFVectorIndex:
         new_key = (
             F.col("centroid_id").cast("long") * F.lit(CELL_BASE)
         ) + F.col(id_col)
-        moved = (
+        moved = persist(
             assigned.withColumn("__new_key", new_key)
             .filter(F.col("__new_key") != F.col(IDX_KEY))
-            .persist()
         )
         n_moved = moved.count()
         if n_moved == 0:

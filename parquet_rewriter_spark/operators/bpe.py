@@ -51,7 +51,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from parquet_rewriter_spark.operators.util import attach_caches
+from parquet_rewriter_spark.operators.util import local_checkpoint, persist, release
 
 END = "</w>"
 
@@ -259,10 +259,13 @@ def bpe_train(
     whitespace words; ``byte_level`` initializes symbols to UTF-8 hex
     byte pairs (see :func:`_init_sym`) — together the production
     combination: punctuation never glues to words, and EVERY string is
-    losslessly encodable from a ≤256-symbol base alphabet."""
-    base = word_counts(df, text_col, pretokenize).select(
+    losslessly encodable from a ≤256-symbol base alphabet.
+
+    Training's caches (the base relation, the snapshots and the
+    returned vocab) belong to the caller's ``util.cache_scope``."""
+    base = persist(word_counts(df, text_col, pretokenize).select(
         "word", "cnt", _init_sym(byte_level).alias("sym")
-    ).persist()
+    ))
     # materialize (n_merges rounds reuse the cache) and, in the SAME
     # job, sample the relation's serialized width — encode/fertility
     # callers need (count, bytes) for their broadcast gate, and reading
@@ -290,33 +293,16 @@ def bpe_train(
         )
         if lineage_every and step % lineage_every == 0 and step < n_merges:
             # eager snapshot: plan depth and per-round recompute both
-            # reset to zero; free the predecessor's cache
-            vocab = vocab.localCheckpoint(eager=True)
-            anchor.unpersist()
+            # reset to zero; free the predecessor's cache or checkpoint
+            vocab = local_checkpoint(vocab, eager=True)
+            release(anchor)
             anchor = vocab
     if vocab is not anchor:
-        # hand the caller a relation whose .unpersist() frees EVERY
-        # cache training left behind, without a dedicated
-        # materialization job: the derivative is persisted LAZILY (the
-        # caller's first action fills it by reading the still-cached
-        # anchor), and this instance's unpersist is wrapped to release
-        # the anchor too. The former eager persist+count+
-        # anchor.unpersist freed the anchor ~n_merges replaces earlier
-        # at the price of one extra sequential job per training run;
-        # both relations are vocab-scale, so holding the anchor until
-        # release is cheap and the job is not.
-        vocab = vocab.persist()
-        _orig_unpersist = vocab.unpersist
-
-        def _unpersist_with_anchor(
-            blocking: bool = False,
-            _orig=_orig_unpersist,
-            _anchor=anchor,
-        ):
-            _anchor.unpersist(blocking)
-            return _orig(blocking)
-
-        vocab.unpersist = _unpersist_with_anchor
+        # persisted LAZILY: the caller's first action fills it from the
+        # still-cached anchor, which the owning cache_scope holds until
+        # exit — both are vocab-scale, and an eager persist+count to
+        # free the anchor earlier would cost one sequential job per run
+        vocab = persist(vocab)
     vocab._pr_n_words = n_words  # distinct-word count, join-strategy hint
     vocab._pr_est_bytes = est_bytes  # sampled width, broadcast byte gate
     # stamp the training normalization so encode paths can refuse a
@@ -760,18 +746,14 @@ def encode_docs_with_rules(
     # the distinct-word relation from storage instead of re-running
     # the corpus-scale segmentation subtree (scan → word explode →
     # distinct-word aggregate → n_merges replaces) a second time — at
-    # 100 TB that second pass is a full corpus shuffle. Callers own
-    # the release: catalog queries sweep it via @_clean_query /
-    # their settle-then-unpersist epilogue, the streaming encode
-    # sweeps per micro-batch.
-    word_ids = word_ids.persist()
+    # 100 TB that second pass is a full corpus shuffle. The cache
+    # belongs to the caller's cache_scope, which must stay open until
+    # the returned plan has run.
+    word_ids = persist(word_ids)
     n_words, est = count_with_bytes(word_ids)
-    return attach_caches(
-        assemble_doc_ids(
-            df, id_col, text_col, word_ids, n_words, broadcast_threshold,
-            pretokenize=pretokenize, est_bytes=est,
-        ),
-        word_ids,
+    return assemble_doc_ids(
+        df, id_col, text_col, word_ids, n_words, broadcast_threshold,
+        pretokenize=pretokenize, est_bytes=est,
     )
 
 

@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from parquet_rewriter_spark.operators.util import local_checkpoint, persist
+
 
 def connected_components(
     edges: DataFrame,
@@ -68,11 +70,10 @@ def connected_components(
     # cached relation then carries hashpartitioning(b), so each round's
     # neighbor join shuffles only the (id, comp) labels — the edge
     # relation is shuffled once for the whole run, not once per round
-    sym = (
+    sym = persist(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .repartition(F.col("b"))
-        .persist()
     )
     ids = sym.select(F.col("a").alias("id")).distinct()
     if nodes is not None:
@@ -82,7 +83,7 @@ def connected_components(
     # DataFrame is a LogicalRDD from here on) but materialization rides
     # the convergence aggregate's job — one action per round instead of
     # checkpoint + aggregate (each action is a full scheduler barrier)
-    labels = ids.select("id", F.col("id").alias("comp")).localCheckpoint(eager=False)
+    labels = local_checkpoint(ids.select("id", F.col("id").alias("comp")), eager=False)
     prev_sum = labels.agg(F.sum("comp")).first()[0]
     if prev_sum is None:  # empty graph
         sym.unpersist()
@@ -97,13 +98,13 @@ def connected_components(
         # lazy checkpoint: truncates the doubled-lineage plan at
         # definition (see module docstring timing); the round
         # materializes inside the convergence aggregate's job below
-        labels = (
+        labels = local_checkpoint(
             labels.join(nbr_min, "id", "left")
             .select(
                 "id",
                 F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         # labels only ever decrease, so the fixpoint is exactly
         # "sum unchanged" — ONE job materializes the round's labels and

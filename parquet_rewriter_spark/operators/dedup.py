@@ -23,6 +23,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from parquet_rewriter_spark.functions.text import shingles as _shingles
+from parquet_rewriter_spark.operators.util import persist
 
 # Per-bucket member cap for LSH candidate self-joins (head/star split,
 # _capped_bucket_pairs). 64 bounds any one bucket at ~2k matches + n hub
@@ -179,12 +180,11 @@ def _capped_bucket_pairs(
             *[F.col(f"b.{c}").alias(f"{c}_b") for c in payload],
         )
 
-    hot_keys = (
+    hot_keys = persist(
         exploded.groupBy(*bucket_cols)
         .agg(F.count(F.lit(1)).alias("__bn"))
         .filter(F.col("__bn") > cap)
         .drop("__bn")
-        .persist()
     )
     n_hot = hot_keys.count()
     if n_hot == 0:
@@ -198,7 +198,7 @@ def _capped_bucket_pairs(
     hot = exploded.join(joiner, on=on, how="left_semi")
 
     w = Window.partitionBy(*bucket_cols).orderBy(F.col("id").asc())
-    r = hot.withColumn("__r", F.row_number().over(w)).persist()
+    r = persist(hot.withColumn("__r", F.row_number().over(w)))
     head = r.filter(F.col("__r") <= cap)
     hub = r.filter(F.col("__r") == 1)
     tail = r.filter(F.col("__r") > cap)
@@ -264,7 +264,7 @@ def minhash_lsh_pairs(
     # Persisted because both the bucketing branch and (via cand) the
     # verify branch hang off it; without the persist the whole
     # scan→shingle→agg pipeline runs once per consumer.
-    sigs = sh_rows.groupBy("id").agg(*mins).persist()
+    sigs = persist(sh_rows.groupBy("id").agg(*mins))
     # band signature = one 64-bit hash of the band's r minhashes
     # (xxhash64 is variadic — no string concat, 8-byte shuffle key)
     banded = sigs.select(
@@ -294,7 +294,7 @@ def minhash_lsh_pairs(
         ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     # consumed twice (id side-table + verify join) — persist keeps
     # the bucket join from running twice
-    cand = raw.distinct().persist()
+    cand = persist(raw.distinct())
     # Verify: exact Jaccard, but only for candidate docs — semi-join the
     # CORPUS down to candidates before shingling (the semi-join won't
     # push below the explode on its own), so both the explode and the
@@ -365,7 +365,7 @@ def minhash_lsh_pairs_portable(
         F.min(F.pmod(F.col("b") * F.lit(_KNUTH) + F.lit(i + 1), F.lit(2 ** 32))).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    sigs = hashed.groupBy("id").agg(*mins).persist()
+    sigs = persist(hashed.groupBy("id").agg(*mins))
     banded = sigs.select(
         "id",
         F.posexplode(
@@ -381,7 +381,7 @@ def minhash_lsh_pairs_portable(
         ).alias("band", "band_key"),
     )
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
+    cand = persist(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -390,7 +390,6 @@ def minhash_lsh_pairs_portable(
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
-        .persist()
     )
     cand_ids = cand.select(F.col("id_a").alias("id")).union(
         cand.select(F.col("id_b").alias("id"))
@@ -460,7 +459,7 @@ def simhash_portable_near_pairs(
             F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)
         ).otherwise(F.lit(0).cast("long"))
         fp = term if fp is None else fp.bitwiseOR(term)
-    fps = per_doc.select("id", fp.alias("fp")).persist()
+    fps = persist(per_doc.select("id", fp.alias("fp")))
     mask = (1 << width) - 1
     blk = fps.select(
         "id",
@@ -559,7 +558,7 @@ def simhash_near_pairs(
     """
     b = n_blocks or (max_hamming + 1)
     w = 64 // b
-    fps = simhash(df, id_col, text_col).persist()
+    fps = persist(simhash(df, id_col, text_col))
     block_vals = []
     for i in range(b):
         width = w if i < b - 1 else 64 - w * (b - 1)  # last block absorbs remainder
@@ -683,7 +682,7 @@ def embedding_near_dup_lsh(
         for x in bits[1:]:
             sig = sig.bitwiseOR(x)
         sigs.append(sig)
-    v = v.persist()
+    v = persist(v)
     # band keys WITHOUT the vector payload — the T-way explode and the
     # bucket self-join shuffle 3 longs per row, not the embedding
     banded = v.select("id", F.posexplode(F.array(*sigs)).alias("table", "sig"))
@@ -1032,13 +1031,13 @@ def _hyperplane_sigs(
         dot = F.aggregate(F.zip_with("q", w, lambda a, b: a * b),
                           F.lit(0).cast("long"), add)
         bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return base.select(
+    return persist(base.select(
         "id", "q", norm.alias("nq"),
         *[
             F.concat(*bits[b * rows_per_band:(b + 1) * rows_per_band]).alias(f"s{b}")
             for b in range(bands)
         ],
-    ).persist()
+    ))
 
 
 def _banded(sigs: DataFrame, bands: int) -> DataFrame:

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_rewriter_spark.operators.dedup import _shingle_rows
+from parquet_rewriter_spark.operators.util import persist
 from parquet_rewriter_spark.table import SortedTable
 
 _ID = "doc_id"
@@ -168,7 +169,7 @@ class MinhashDedupIndex:
         re-bands from its stored signatures — a projection, no
         re-signaturing.
         """
-        batch_sigs = self._signatures(docs, id_col, text_col).persist()
+        batch_sigs = persist(self._signatures(docs, id_col, text_col))
         idx_sigs = self.table.read()
         cand = (
             self._banded(batch_sigs, "batch_id")

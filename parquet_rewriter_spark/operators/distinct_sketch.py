@@ -35,6 +35,7 @@ from parquet_rewriter_spark.operators.sidecar import (
     have_files,
     semi_join_files,
 )
+from parquet_rewriter_spark.operators.util import persist
 
 SKETCH_DIR = SIDECARS["distinct_sketch"].dirname
 DEFAULT_LGK = 12
@@ -234,9 +235,9 @@ def sketch_overlap(
     relation is persisted so the pair self-join reuses it — without
     the persist each side re-executes the sketch aggregate and the
     corpus is scanned twice (plan-pinned in test_plans.py)."""
-    sk = df.groupBy(F.col(group_col).alias("g")).agg(
+    sk = persist(df.groupBy(F.col(group_col).alias("g")).agg(
         F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias("sk")
-    ).persist()
+    ))
     a = sk.select(F.col("g").alias("group_a"), F.col("sk").alias("__ska"))
     b = sk.select(F.col("g").alias("group_b"), F.col("sk").alias("__skb"))
     est = lambda c: F.round(F.hll_sketch_estimate(c)).cast("long")  # noqa: E731

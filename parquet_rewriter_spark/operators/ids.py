@@ -42,6 +42,8 @@ from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from parquet_rewriter_spark.operators.util import local_checkpoint
+
 _PID = "_prs_frozen_pid"
 
 
@@ -53,16 +55,16 @@ def assign_contiguous_ids(
 ) -> DataFrame:
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
-    part = (
+    # checkpoint: exactly ONE materialization decides both the
+    # range boundaries and the frozen pids (RangePartitioner
+    # re-samples per job otherwise). LAZY: the counts collect
+    # below materializes it inside its own job — same single
+    # materialization, one fewer scheduler barrier.
+    part = local_checkpoint(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
-        # checkpoint: exactly ONE materialization decides both the
-        # range boundaries and the frozen pids (RangePartitioner
-        # re-samples per job otherwise). LAZY: the counts collect
-        # below materializes it inside its own job — same single
-        # materialization, one fewer scheduler barrier.
+        .withColumn(_PID, F.spark_partition_id()),
+        eager=False,
     )
     counts = {
         r["p"]: r["c"]

@@ -35,6 +35,7 @@ from parquet_rewriter_spark.operators.merge import (
     OP_UPSERT,
     merge_into_table,
 )
+from parquet_rewriter_spark.operators.util import cache_scope, persist
 from parquet_rewriter_spark.table import SortedTable
 
 _STATE_NAME = "_mv_state.json"
@@ -178,26 +179,24 @@ class MaterializedAggregate:
         # churned-file diff + aggregation re-executes per consumer
         from pyspark import StorageLevel
 
-        deltas.persist(StorageLevel.MEMORY_AND_DISK)
+        with cache_scope():
+            persist(deltas, StorageLevel.MEMORY_AND_DISK)
 
-        mv = self.table()
-        # current values for affected groups only — the semi join prunes
-        # the view scan to churned groups before the outer join
-        old = mv.read().join(deltas.select(g), on=g, how="left_semi")
-        joined = deltas.join(old, on=g, how="left")
-        new_vals = [
-            (F.coalesce(F.col(c), F.lit(0)) + F.col(delta_cols[c])).alias(c)
-            for c in self.aggs
-        ]
-        muts = joined.select(F.col(g), *new_vals).withColumn(
-            OP_COLUMN,
-            F.when(F.col(self._count_col) == 0, F.lit(OP_DELETE)).otherwise(
-                F.lit(OP_UPSERT)
-            ),
-        )
-        try:
+            mv = self.table()
+            # current values for affected groups only — the semi join prunes
+            # the view scan to churned groups before the outer join
+            old = mv.read().join(deltas.select(g), on=g, how="left_semi")
+            joined = deltas.join(old, on=g, how="left")
+            new_vals = [
+                (F.coalesce(F.col(c), F.lit(0)) + F.col(delta_cols[c])).alias(c)
+                for c in self.aggs
+            ]
+            muts = joined.select(F.col(g), *new_vals).withColumn(
+                OP_COLUMN,
+                F.when(F.col(self._count_col) == 0, F.lit(OP_DELETE)).otherwise(
+                    F.lit(OP_UPSERT)
+                ),
+            )
             metrics = merge_into_table(mv, muts)
-        finally:
-            deltas.unpersist()
         self._save_state(cur_v)
         return {"refreshed": True, "base_from": from_v, "base_to": cur_v, **metrics}

@@ -187,6 +187,7 @@ def merge_conditional_into_table(
 
     from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
     from parquet_rewriter_spark.operators.merge import plan_dirty_files
+    from parquet_rewriter_spark.operators.util import cache_scope, persist
     from parquet_rewriter_spark.table import Manifest
 
     from pyspark import StorageLevel
@@ -195,43 +196,43 @@ def merge_conditional_into_table(
     m = table.manifest()
     key = m.key
 
-    source.persist(StorageLevel.MEMORY_AND_DISK)
-    t0 = time.monotonic()
-    if not_matched_by_source:
-        dirty, clean = list(m.files), []
-    else:
-        dirty, clean = plan_dirty_files(spark, m, source)
-    t_plan = time.monotonic() - t0
+    with cache_scope():  # source is read by the planner and the merge
+        persist(source, StorageLevel.MEMORY_AND_DISK)
+        t0 = time.monotonic()
+        if not_matched_by_source:
+            dirty, clean = list(m.files), []
+        else:
+            dirty, clean = plan_dirty_files(spark, m, source)
+        t_plan = time.monotonic() - t0
 
-    if dirty:
-        base = table._reader(m).parquet(
-            *[os.path.join(table.path, e.name) for e in dirty]
+        if dirty:
+            base = table._reader(m).parquet(
+                *[os.path.join(table.path, e.name) for e in dirty]
+            )
+            dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
+            if dv is not None:
+                base = base.join(dv.select(key).distinct(), on=key, how="left_anti")
+        else:
+            import json as _json
+
+            from pyspark.sql.types import StructType
+
+            base = spark.createDataFrame(
+                [], StructType.fromJson(_json.loads(m.schema_json))
+            )
+        merged = conditional_merge(
+            base, source, key, matched, not_matched, not_matched_by_source
         )
-        dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-        if dv is not None:
-            base = base.join(dv.select(key).distinct(), on=key, how="left_anti")
-    else:
-        import json as _json
 
-        from pyspark.sql.types import StructType
+        mrpf = max_records_per_file or max((e.rows for e in m.files), default=1_000_000)
+        t0 = time.monotonic()
+        # zero-sampling write above the dirty-byte threshold: the range
+        # exchange's sampling job would re-execute conditional_merge's
+        # full-outer JOIN a second time just to learn bounds the dirty
+        # entries already record (same economics as merge_into_table)
+        from parquet_rewriter_spark.operators.compact import _write_rechunked
 
-        base = spark.createDataFrame(
-            [], StructType.fromJson(_json.loads(m.schema_json))
-        )
-    merged = conditional_merge(
-        base, source, key, matched, not_matched, not_matched_by_source
-    )
-
-    mrpf = max_records_per_file or max((e.rows for e in m.files), default=1_000_000)
-    t0 = time.monotonic()
-    # zero-sampling write above the dirty-byte threshold: the range
-    # exchange's sampling job would re-execute conditional_merge's
-    # full-outer JOIN a second time just to learn bounds the dirty
-    # entries already record (same economics as merge_into_table)
-    from parquet_rewriter_spark.operators.compact import _write_rechunked
-
-    staging = _write_rechunked(table, merged, m, dirty, mrpf)
-    source.unpersist()
+        staging = _write_rechunked(table, merged, m, dirty, mrpf)
     new_entries = table._adopt_staged(staging, key)
     t_write = time.monotonic() - t0
 

@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_rewriter_spark.operators.search import term_postings
+from parquet_rewriter_spark.operators.util import persist
 from parquet_rewriter_spark.table import SortedTable
 
 _ID = "doc_id"
@@ -82,8 +83,11 @@ class SearchIndex:
         )
 
     def _write_stats(self, n_docs: int, total_dl: int) -> None:
-        with open(self._stats_path, "w") as f:
+        # temp file + rename: a crash mid-write leaves the old stats
+        tmp = self._stats_path + ".tmp"
+        with open(tmp, "w") as f:
             json.dump({"n_docs": int(n_docs), "total_dl": int(total_dl)}, f)
+        os.replace(tmp, self._stats_path)
 
     def _read_stats(self) -> dict:
         with open(self._stats_path) as f:
@@ -152,7 +156,7 @@ class SearchIndex:
 
         v0 = self.table.manifest().version
         metrics = merge_into_table(self.table, batch)
-        diff = snapshot_diff(self.table, v0, include_preimage=True).persist()
+        diff = persist(snapshot_diff(self.table, v0, include_preimage=True))
 
         # retractions: preimages + deletes; additions: postimages + inserts
         new_rows = diff.filter(

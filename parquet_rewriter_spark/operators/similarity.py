@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from parquet_rewriter_spark.functions.vector import as_double, cosine, dot
+from parquet_rewriter_spark.operators.util import persist
 
 
 def cosine_topk(
@@ -152,7 +153,7 @@ def kmeans_refine_distributed(
     unit = F.transform(v, lambda x: x / F.greatest(norm, F.lit(1e-12)))
     base = df.select(unit.alias("__u"))
     if iters > 1:
-        base = base.persist()  # every iteration rescans the normalized vectors
+        base = persist(base)  # every iteration rescans the normalized vectors
     for _ in range(iters):
         assigned = ivf_assign(base, "__u", C)
         cells = (

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from parquet_rewriter_spark.operators.bpe import word_counts
-from parquet_rewriter_spark.operators.util import attach_caches
+from parquet_rewriter_spark.operators.util import cache_scope, persist
 
 
 def hex_word(word_col: str = "word") -> "F.Column":
@@ -403,16 +403,13 @@ def unigram_encode_docs(
     # probe paid two sequential jobs over the same subtree.
     # PERSISTED first: the gate job materializes the cache, so the
     # encode join reads it instead of re-running the distinct-word
-    # aggregate + Viterbi segmentation a second time (callers release
-    # it: @_clean_query sweep / streaming per-batch sweep).
-    word_ids = word_ids.persist()
+    # aggregate + Viterbi segmentation a second time. The cache
+    # belongs to the caller's cache_scope.
+    word_ids = persist(word_ids)
     n_words, est = count_with_bytes(word_ids)
-    return attach_caches(
-        assemble_doc_ids(
-            df, id_col, text_col, word_ids, n_words, broadcast_threshold,
-            pretokenize=pretokenize, est_bytes=est,
-        ),
-        word_ids,
+    return assemble_doc_ids(
+        df, id_col, text_col, word_ids, n_words, broadcast_threshold,
+        pretokenize=pretokenize, est_bytes=est,
     )
 
 
@@ -537,25 +534,25 @@ def unigram_em_train(
     to one-shot k+m rounds, because every round is a pure function of
     the integer inventory (oracled)."""
     spark = df.sparkSession
-    wc = word_counts(df, text_col).persist()
-    wc.count()
-    if init_inventory is None:
-        seed = piece_stats(df, text_col, max_piece_len, vocab_size=seed_size)
-        inv = [(r["piece"], int(r["c"])) for r in seed.collect()]
-    else:
-        inv = [(str(p), int(c)) for p, c in init_inventory]
-    chars = sorted(p for p, _ in inv if len(p) == 1)
-    for _ in range(int(n_rounds)):
-        total = float(sum(c for _, c in inv))
-        ratio = {p: c / total for p, c in inv}
-        ec_df = _em_expected_counts(wc, ratio, max_piece_len, scale)
-        ec = {r["piece"]: int(r["ec"]) for r in ec_df.collect()}
-        multi = sorted(
-            ((p, c) for p, c in ec.items() if len(p) >= 2 and c > 0),
-            key=lambda t: (-t[1], t[0]),
-        )[: int(keep_size)]
-        inv = multi + [(ch, max(ec.get(ch, 0), 1)) for ch in chars]
-    wc.unpersist()
+    with cache_scope():  # every EM round reads the distinct-word relation
+        wc = persist(word_counts(df, text_col))
+        wc.count()
+        if init_inventory is None:
+            seed = piece_stats(df, text_col, max_piece_len, vocab_size=seed_size)
+            inv = [(r["piece"], int(r["c"])) for r in seed.collect()]
+        else:
+            inv = [(str(p), int(c)) for p, c in init_inventory]
+        chars = sorted(p for p, _ in inv if len(p) == 1)
+        for _ in range(int(n_rounds)):
+            total = float(sum(c for _, c in inv))
+            ratio = {p: c / total for p, c in inv}
+            ec_df = _em_expected_counts(wc, ratio, max_piece_len, scale)
+            ec = {r["piece"]: int(r["ec"]) for r in ec_df.collect()}
+            multi = sorted(
+                ((p, c) for p, c in ec.items() if len(p) >= 2 and c > 0),
+                key=lambda t: (-t[1], t[0]),
+            )[: int(keep_size)]
+            inv = multi + [(ch, max(ec.get(ch, 0), 1)) for ch in chars]
     total = float(sum(c for _, c in inv))
     out = spark.createDataFrame(
         [(p, len(p), c, c / total) for p, c in inv],

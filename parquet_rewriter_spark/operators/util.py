@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -56,24 +60,69 @@ def local_df(spark, data, schema) -> DataFrame:
     )
 
 
-def attach_caches(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Record internally-persisted relations on the RETURNED DataFrame
-    (``out._pr_caches``) so callers outside the catalog's sweep
-    decorators have a public release handle (:func:`release_caches`)
-    instead of enumerating the session's private persistent-RDD map.
-    Caches attached by upstream stages compose."""
-    out._pr_caches = list(caches) + list(getattr(out, "_pr_caches", []))
-    return out
+# ---------------------------------------------------------------- caches
+#
+# One ownership rule for every cache the package makes: a cache belongs
+# to the innermost open ``cache_scope()`` of the thread that made it,
+# and leaving that scope releases it. ``persist`` and
+# ``local_checkpoint`` are the only places the package caches (a lint
+# test holds every other module to that); with no scope open they are
+# plain ``persist``/``localCheckpoint`` and the caller owns the result.
+
+_scopes = threading.local()
 
 
-def release_caches(df: DataFrame) -> int:
-    """Unpersist every cache an operator attached to ``df`` via
-    :func:`attach_caches` — and ONLY those: a concurrent query's
-    persists or lineage-truncating localCheckpoints are never touched
-    (sweeping by persistent-RDD-id diff could drop another job's
-    blocks). Returns the number released; idempotent."""
-    caches = getattr(df, "_pr_caches", [])
-    for c in caches:
-        c.unpersist(False)
-    df._pr_caches = []
-    return len(caches)
+@contextmanager
+def cache_scope():
+    """Own every cache made on this thread until the block exits, then
+    release each one (:func:`release`) — whether the block returned or
+    raised. Scopes nest: a cache belongs to the innermost open one. A
+    scope never touches another thread's caches, or caches that
+    existed before it opened."""
+    stack = _scopes.__dict__.setdefault("stack", [])
+    owned: list[DataFrame] = []
+    stack.append(owned)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in reversed(owned):
+            release(df)
+
+
+def _own(df: DataFrame) -> DataFrame:
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
+
+
+def persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """``df.persist(level)``, owned by the open :func:`cache_scope`. A
+    plan that is already cached stays its first owner's: Spark's
+    persist is then a no-op, and releasing it here would drop a cache
+    someone else still reads."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    return _own(df.persist() if level is None else df.persist(level))
+
+
+def local_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    """``df.localCheckpoint(eager)``, owned by the open
+    :func:`cache_scope`. ``DataFrame.unpersist`` frees nothing on a
+    checkpoint — its blocks hang off the RDD under the returned plan —
+    so the RDD is recorded for :func:`release`."""
+    out = df.localCheckpoint(eager=eager)
+    out._pr_checkpoint_rdd = out._jdf.logicalPlan().rdd()
+    return _own(out)
+
+
+def release(df: DataFrame) -> None:
+    """Free the cache :func:`persist` or :func:`local_checkpoint` made
+    of ``df`` now, ahead of its scope's exit (a loop dropping its
+    predecessor). Idempotent; the scope's own release is then a no-op."""
+    rdd = getattr(df, "_pr_checkpoint_rdd", None)
+    if rdd is not None:
+        rdd.unpersist(False)
+    else:
+        df.unpersist(False)

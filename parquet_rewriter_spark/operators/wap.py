@@ -101,7 +101,6 @@ def write_audit_publish(
                 files=list(stage_m.files),
                 schema_json=stage_m.schema_json,
                 stats_cols=stage_m.stats_cols,
-                bloom_cols=stage_m.bloom_cols,
                 dv_files=list(stage_m.dv_files),
                 operation="wap-publish",
             )

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from pyspark.sql import Window
 
-from parquet_rewriter_spark.operators.util import attach_caches
+from parquet_rewriter_spark.operators.util import persist
 
 from parquet_rewriter_spark.operators.bpe import (
     BROADCAST_MAX_WORDS,
@@ -171,12 +171,12 @@ def wordpiece_fertility_by(
     # persisted + ONE fused count/byte-gate job (segd is 1:1 with wc):
     # the gate materializes the cache, so the fertility join reads it
     # instead of re-running the distinct-word aggregate + greedy-match
-    # segmentation (callers sweep: @_clean_query contract)
-    segd = wordpiece_segment(wc, pieces).select("word", "n_pieces").persist()
+    # segmentation; the cache belongs to the caller's cache_scope
+    segd = persist(wordpiece_segment(wc, pieces).select("word", "n_pieces"))
     n_words, est = count_with_bytes(segd)
     w = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
     occ = df.select(F.col(group_col).alias("grp"), F.explode(w).alias("word"))
-    return attach_caches(
+    return (
         _word_join(occ, segd, n_words, broadcast_threshold, est_bytes=est)
         .groupBy("grp")
         .agg(
@@ -188,8 +188,7 @@ def wordpiece_fertility_by(
             "n_words",
             "n_pieces",
             F.round(F.col("n_pieces") / F.col("n_words"), 4).alias("fertility"),
-        ),
-        segd,
+        )
     )
 
 
@@ -264,16 +263,13 @@ def wordpiece_encode_docs(
     # probe paid two sequential jobs over the same subtree.
     # PERSISTED first: the gate job materializes the cache, so the
     # encode join reads it instead of re-running the distinct-word
-    # aggregate + Arrow segmentation a second time (callers release
-    # it: @_clean_query sweep / streaming per-batch sweep).
-    word_ids = word_ids.persist()
+    # aggregate + Arrow segmentation a second time. The cache belongs
+    # to the caller's cache_scope.
+    word_ids = persist(word_ids)
     n_words, est = count_with_bytes(word_ids)
-    return attach_caches(
-        assemble_doc_ids(
-            df, id_col, text_col, word_ids, n_words, broadcast_threshold,
-            pretokenize=pretokenize, est_bytes=est,
-        ),
-        word_ids,
+    return assemble_doc_ids(
+        df, id_col, text_col, word_ids, n_words, broadcast_threshold,
+        pretokenize=pretokenize, est_bytes=est,
     )
 
 
@@ -412,16 +408,13 @@ def wordpiece_encode_marked(
     # ONE fused count+byte-gate job over word_ids materializes the
     # cache (replacing the former wc.count() pass AND the word join's
     # separate sampled probe — three executions of the distinct-word +
-    # segmentation subtree down to one); callers release the cache
-    # (@_clean_query sweep / streaming per-batch sweep)
-    word_ids = word_ids.persist()
+    # segmentation subtree down to one); the cache belongs to the
+    # caller's cache_scope
+    word_ids = persist(word_ids)
     n_words, est = count_with_bytes(word_ids)
-    return attach_caches(
-        assemble_doc_ids(
-            df, id_col, text_col, word_ids, n_words, broadcast_threshold,
-            est_bytes=est,
-        ),
-        word_ids,
+    return assemble_doc_ids(
+        df, id_col, text_col, word_ids, n_words, broadcast_threshold,
+        est_bytes=est,
     )
 
 

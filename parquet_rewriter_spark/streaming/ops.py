@@ -31,7 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from parquet_rewriter_spark.sources.readers import ensure_events_readable, normalize_events_ts
-from parquet_rewriter_spark.operators.util import release_caches
+from parquet_rewriter_spark.operators.util import cache_scope, persist
 
 
 
@@ -670,13 +670,11 @@ def stream_quality_route(
     from parquet_rewriter_spark.operators.quality import enforce_constraints
 
     def route(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
+        with cache_scope():
+            persist(batch_df)
             clean, viol = enforce_constraints(batch_df, rules)
             clean.write.mode("append").parquet(clean_dir)
             viol.write.mode("append").parquet(quarantine_dir)
-        finally:
-            batch_df.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(route)
@@ -1105,16 +1103,13 @@ def stream_encode_docs(
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         # the encode op persists the batch's distinct-word relation
         # (its byte-gate job materializes it; the encode join then
-        # reads the cache instead of re-segmenting) — release EXACTLY
-        # that cache after the write (attach_caches handle), in a
-        # finally so a failed batch write cannot leak it; a
-        # whole-session persistent-RDD diff sweep would also drop a
-        # concurrent query's caches/localCheckpoints
-        out = encode_docs_with_rules(
-            batch_df, id_col, text_col, rules,
-            unk_id=unk_id, symbol_ids=frozen,
-        )
-        try:
+        # reads the cache instead of re-segmenting): the batch's
+        # cache scope releases it once the write is done, or failed
+        with cache_scope():
+            out = encode_docs_with_rules(
+                batch_df, id_col, text_col, rules,
+                unk_id=unk_id, symbol_ids=frozen,
+            )
             (
                 out.withColumn("_epoch", F.lit(epoch_id))
                 .write.mode("overwrite")
@@ -1122,8 +1117,6 @@ def stream_encode_docs(
                 .partitionBy("_epoch")
                 .parquet(sink_dir)
             )
-        finally:
-            release_caches(out)
 
     q = (
         stream.writeStream.foreachBatch(apply)
@@ -1166,12 +1159,12 @@ def stream_wordpiece_encode_docs(
     )
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        # release the encode op's per-batch word_ids cache via its
-        # attach_caches handle, in a finally (see the BPE ingest above)
-        out = wordpiece_encode_docs(
-            batch_df, id_col, text_col, frozen, unk_id=unk_id
-        )
-        try:
+        # the batch's cache scope releases the encode op's word_ids
+        # cache (see the BPE ingest above)
+        with cache_scope():
+            out = wordpiece_encode_docs(
+                batch_df, id_col, text_col, frozen, unk_id=unk_id
+            )
             (
                 out.withColumn("_epoch", F.lit(epoch_id))
                 .write.mode("overwrite")
@@ -1179,8 +1172,6 @@ def stream_wordpiece_encode_docs(
                 .partitionBy("_epoch")
                 .parquet(sink_dir)
             )
-        finally:
-            release_caches(out)
 
     q = (
         stream.writeStream.foreachBatch(apply)
@@ -1224,12 +1215,12 @@ def stream_unigram_encode_docs(
     )
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        # release the encode op's per-batch word_ids cache via its
-        # attach_caches handle, in a finally (see the BPE ingest above)
-        out = unigram_encode_docs(
-            batch_df, id_col, text_col, frozen, unk_id=unk_id
-        )
-        try:
+        # the batch's cache scope releases the encode op's word_ids
+        # cache (see the BPE ingest above)
+        with cache_scope():
+            out = unigram_encode_docs(
+                batch_df, id_col, text_col, frozen, unk_id=unk_id
+            )
             (
                 out.withColumn("_epoch", F.lit(epoch_id))
                 .write.mode("overwrite")
@@ -1237,8 +1228,6 @@ def stream_unigram_encode_docs(
                 .partitionBy("_epoch")
                 .parquet(sink_dir)
             )
-        finally:
-            release_caches(out)
 
     q = (
         stream.writeStream.foreachBatch(apply)

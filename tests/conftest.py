@@ -6,6 +6,7 @@ import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # tests: small local parallelism
 
+from parquet_rewriter_spark.operators.util import cache_scope
 from parquet_rewriter_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -21,3 +22,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _test_cache_scope():
+    """Each test owns the caches it makes: they are released when it
+    ends, so no test reads or pays for another's executor storage."""
+    with cache_scope():
+        yield

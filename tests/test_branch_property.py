@@ -117,16 +117,17 @@ words_st = st.lists(
 @given(words=words_st)
 def test_bpe_train_matches_pure_python_reference(spark, words):
     from parquet_rewriter_spark.operators.bpe import bpe_train
+    from parquet_rewriter_spark.operators.util import cache_scope
 
     texts = [" ".join(words[: len(words) // 2 + 1]), " ".join(words[len(words) // 2:])]
     texts = [t for t in texts if t.strip()]
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     )
-    rules, vocab = bpe_train(docs, "text", n_merges=4)
+    with cache_scope():  # one scope per example
+        rules, _ = bpe_train(docs, "text", n_merges=4)
     got = [(r["lhs"], r["rhs"], r["merged"], r["pair_count"]) for r in rules]
     want = _bpe_reference(texts, 4)
-    vocab.unpersist()
     assert got == want
 
 
@@ -155,6 +156,5 @@ def test_bpe_train_deep_merges_bounded_lineage(spark):
     got = [(r["lhs"], r["rhs"], r["merged"], r["pair_count"]) for r in rules]
     want = _bpe_reference(texts, 64)
     plan = vocab._jdf.queryExecution().analyzed().toString()
-    vocab.unpersist()
     assert got == want[: len(got)] and len(got) == len(want)
     assert plan.count("replace(") <= 8, plan.count("replace(")

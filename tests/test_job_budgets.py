@@ -9,7 +9,9 @@ exactly. Jobs are counted per job group through the status tracker
 Pins: a plain merge runs 4 jobs and a plain compact 3 — so a commit
 with no registered sidecar never lists or reads a sidecar directory —
 and a merge with bloom + distinct sketch + drift monitor registered
-stays within 13.
+stays within 13. A catalog query that owns a cache scope leaves no
+cache behind, so re-running it in the same session runs exactly the
+jobs its first run did.
 """
 
 from __future__ import annotations
@@ -17,8 +19,10 @@ from __future__ import annotations
 import os
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
+from parquet_rewriter_spark import catalog
 from parquet_rewriter_spark.operators.compact import compact
 from parquet_rewriter_spark.operators.distinct_sketch import (
     enable_distinct_sketches,
@@ -85,3 +89,16 @@ def test_three_sidecar_merge_job_budget(spark, tmp_path):
     )
     assert n <= 13
     assert res["files_written"] > 0 and res["t_sidecar_s"] > 0
+
+
+@pytest.mark.parametrize(
+    "name", ["bpe_encode_sample", "part_copurchase_pagerank"]
+)
+def test_scoped_query_rerun_runs_the_same_jobs(spark, sf_dir, name):
+    """No clearCache between the runs: a cache left behind by the first
+    run (blocks dropped but the CacheManager entry kept) turns the
+    second run's persists into no-ops and changes its plan."""
+    fn = catalog.REGISTRY[name].fn
+    first = _jobs(spark, lambda: fn(spark, sf_dir).collect())
+    again = _jobs(spark, lambda: fn(spark, sf_dir).collect())
+    assert again == first

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from parquet_rewriter_spark.catalog import get
 from parquet_rewriter_spark.operators.merge import apply_mutations
+from parquet_rewriter_spark.operators.util import local_checkpoint
 from parquet_rewriter_spark.plans import count_exchanges, plan_of, plan_report
 from parquet_rewriter_spark.sources.readers import load_table
 
@@ -879,7 +880,6 @@ def test_bpe_fertility_broadcasts_vocab(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" in p0 or "ShuffledHashJoin" in p0
     assert "CartesianProduct" not in p0
-    vocab.unpersist()
 
 
 def test_bpe_encode_broadcasts_word_ids_no_cartesian(spark, sf_dir):
@@ -908,7 +908,6 @@ def test_bpe_encode_broadcasts_word_ids_no_cartesian(spark, sf_dir):
     assert "SortMergeJoin" in p0 or "ShuffledHashJoin" in p0
     assert "BroadcastHashJoin" in p0  # the bounded symbol-id join
     assert "CartesianProduct" not in p0
-    vocab.unpersist()
 
 
 def test_materialize_packed_is_span_math_plus_one_aggregate(spark, sf_dir):
@@ -955,22 +954,17 @@ def test_wordpiece_segmentation_python_only_at_vocab_scale(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     vocab = substring_vocab(d, "text", max_piece_len=3, vocab_size=30)
-    try:
-        p = plan_of(wordpiece_fertility_by(d, "text", "lang", vocab))
-        # r12 optimization: the segmented relation is persisted (the
-        # fused count/gate job materialized it), so the fertility join
-        # reads the CACHE — the Arrow eval lives only inside the
-        # InMemoryRelation's cached plan, executed once, never in the
-        # corpus-side join path
-        assert "InMemoryTableScan" in p
-        top = p.split("InMemoryRelation")[0]
-        assert "ArrowEvalPython" not in top
-        assert "BatchEvalPython" not in p
-        assert "CartesianProduct" not in p
-    finally:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(False)
+    p = plan_of(wordpiece_fertility_by(d, "text", "lang", vocab))
+    # r12 optimization: the segmented relation is persisted (the
+    # fused count/gate job materialized it), so the fertility join
+    # reads the CACHE — the Arrow eval lives only inside the
+    # InMemoryRelation's cached plan, executed once, never in the
+    # corpus-side join path
+    assert "InMemoryTableScan" in p
+    top = p.split("InMemoryRelation")[0]
+    assert "ArrowEvalPython" not in top
+    assert "BatchEvalPython" not in p
+    assert "CartesianProduct" not in p
 
 
 def test_unigram_viterbi_python_only_at_vocab_scale(spark, sf_dir):
@@ -1003,11 +997,10 @@ def test_bytelevel_decode_is_zero_exchange_codegen(spark, sf_dir):
     rules, vocab = bpe_train(
         d, "text", n_merges=2, pretokenize=True, byte_level=True
     )
-    enc = encode_docs(
-        d, "doc_id", "text", vocab, pretokenize=True
-    ).localCheckpoint(eager=True)  # pin: decode's own plan only
+    enc = local_checkpoint(  # pin: decode's own plan only
+        encode_docs(d, "doc_id", "text", vocab, pretokenize=True), eager=True
+    )
     p = plan_of(decode_docs(enc, "input_ids", vocab, byte_level=True))
-    vocab.unpersist()
     assert "Exchange" not in p
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
@@ -1070,10 +1063,10 @@ def test_training_order_is_pure_projection(spark):
     materialized rank."""
     from parquet_rewriter_spark.operators.packing import training_order
 
-    win = spark.range(100).select(
+    win = local_checkpoint(spark.range(100).select(
         (F.col("id") % 4).alias("shard"),
         (F.col("id") / 4).cast("long").alias("seq_id"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     base = plan_of(win)
     ordered = plan_of(training_order(win, salt=3))
     assert ordered.count("Exchange") == base.count("Exchange")
@@ -1096,7 +1089,6 @@ def test_tokenizer_token_stats_fold_never_scans_the_corpus(spark, sf_dir, tmp_pa
         "doc_id", "source", "text"
     ).limit(200)
     rules, vocab = bpe_train(d, "text", n_merges=2)
-    vocab.unpersist()
     rp = str(tmp_path / "rules")
     rules_df(spark, rules).write.parquet(rp)
     ref = TokenizerRef(rp)

@@ -125,7 +125,6 @@ def test_word_join_byte_gate_blocks_fat_broadcast(spark, sf_dir, monkeypatch):
         p = plan_of(bpe.encode_docs(d, "doc_id", "text", vocab))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    vocab.unpersist()
     assert "SortMergeJoin" in p or "ShuffledHashJoin" in p
     assert "BroadcastHashJoin" in p  # the merge-bounded symbol-id join
     assert "CartesianProduct" not in p
@@ -428,7 +427,6 @@ def test_frozen_tokenizer_encodes_unseen_corpus_with_unk(spark):
         r["doc_id"]: r
         for r in encode_docs(train, "doc_id", "text", vocab).collect()
     }
-    vocab.unpersist()
     ids = list(out["input_ids"])
     assert -1 in ids  # unseen chars surfaced, not dropped
     assert out["n_tokens"] == len(ids)

@@ -100,7 +100,6 @@ def test_bytelevel_frozen_encode_no_unk_and_roundtrips(spark):
         ).alias("n")
     ).collect()[0]["n"]
     assert dec == norm
-    vocab.unpersist()
 
 
 def test_pretok_kills_punctuation_gluing(spark):
@@ -363,103 +362,3 @@ def test_token_stats_refresh_is_churn_proportional(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == want  # sidecar fold == from-scratch scan, exactly
-
-
-# ------------------------------------------------- cache hygiene
-
-
-def _sweep(spark) -> None:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keySet().toArray()):
-        jmap.get(rid).unpersist(False)
-
-
-# Every catalog query a full-registry audit (round 11) found leaving
-# persistent RDDs behind, plus the round-11-new queries — all now
-# settle-and-unpersist (explicit try/finally or @_clean_query). The
-# contract: after running a catalog query AND collecting its result,
-# the session holds ZERO persistent RDDs.
-_HYGIENE_QUERIES = (
-    # round-11 new
-    "bpe_pretok_encode_sample",
-    "wordpiece_pretok_encode_sample",
-    "bpe_bytelevel_roundtrip",
-    "bpe_bytelevel_holdout_no_unk",
-    "bpe_packed_windows_eos",
-    "wordpiece_packed_windows_eos",
-    "unigram_packed_windows_eos",
-    "pretraining_pipeline_end_to_end",
-    "unigram_pretok_encode_sample",
-    "token_budget_auto_maintained",
-    # round-12 optimization: the encode ops now persist their
-    # distinct-word word_ids relation internally (the byte-gate job
-    # materializes it; the encode join reads the cache instead of
-    # re-running segmentation) — every catalog caller must sweep it
-    "bpe_encode_holdout_sample",
-    "wordpiece_encode_sample",
-    "wordpiece_marked_encode_sample",
-    "wordpiece_encode_holdout_sample",
-    "unigram_encode_sample",
-    "unigram_em_encode_sample",
-    "unigram_encode_unk_holdout",
-    "unigram_bytelevel_holdout",
-    "unigram_corpus_loglik",
-    "wordpiece_fertility",
-    # formerly leaking (round-11 full-registry audit)
-    "ann_lsh_retrieval_metrics",
-    "bpe_encode_sample",
-    "bpe_token_fertility",
-    "bpe_packed_training_windows",
-    "bpe_packed_windows_dense",
-    "bpe_roundtrip_fidelity",
-    "brand_association_rules",
-    "canonical_dedup_survivors",
-    "copurchase_triangle_count",
-    "corpus_curation_pipeline",
-    "cross_source_contamination_matrix",
-    "curation_survivorship_funnel",
-    "customer_rfm_segments",
-    "doc_stable_ids",
-    "hyperplane_lsh_portable_pairs",
-    "incremental_bm25_search",
-    "incremental_dedup_index",
-    "incremental_dedup_index_portable",
-    "leakage_safe_split",
-    "minhash_near_dup_pairs",
-    "minhash_portable_near_dup_pairs",
-    "near_dup_doc_clusters",
-    "part_copurchase_pagerank",
-    "part_entity_resolution",
-    "priority_customer_overlap_sketch",
-    "rolling_7d_distinct_users",
-    "semantic_dedup_survivors",
-    "simhash_near_pairs",
-    "simhash_portable_near_pairs",
-    "training_shard_summary",
-    "webdataset_export_summary",
-    "weighted_median_price",
-    "q11_important_parts",
-    "q15_top_supplier",
-    "q20_dominant_shippers",
-    "wordpiece_packed_windows",
-    "unigram_packed_windows",
-    "wordpiece_artifact_roundtrip",
-    "unigram_artifact_roundtrip",
-    "wordpiece_marked_roundtrip",
-    "tokenizer_family_compression",
-    "unigram_em_corpus_loglik",
-)
-
-
-def test_catalog_queries_leave_no_persistent_rdds(spark, sf_dir):
-    """Cache-hygiene contract over every query the round-11
-    full-registry audit flagged: run + collect, then zero persistent
-    RDDs (a long-lived driver session running queries() sequentially
-    must not accumulate executor storage)."""
-    from parquet_rewriter_spark import catalog
-
-    for name in _HYGIENE_QUERIES:
-        _sweep(spark)
-        rows = catalog.get(name).fn(spark, sf_dir).collect()
-        assert rows, name
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0, name

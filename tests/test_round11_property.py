@@ -92,14 +92,15 @@ def test_bytelevel_roundtrip_any_unicode(spark, texts):
         decode_docs,
         encode_docs_with_rules,
     )
+    from parquet_rewriter_spark.operators.util import cache_scope
 
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    rules, vocab = bpe_train(
-        df.filter(F.col("doc_id") % 2 == 0), "text",
-        n_merges=2, pretokenize=True, byte_level=True,
-    )
-    try:
+    with cache_scope():  # one scope per example
+        rules, vocab = bpe_train(
+            df.filter(F.col("doc_id") % 2 == 0), "text",
+            n_merges=2, pretokenize=True, byte_level=True,
+        )
         enc = encode_docs_with_rules(
             df, "doc_id", "text", rules, vocab, unk_id=-1,
             pretokenize=True, byte_level=True, base_bytes=True,
@@ -123,5 +124,3 @@ def test_bytelevel_roundtrip_any_unicode(spark, texts):
         for r in out:
             assert r["mn"] is None or r["mn"] >= 0, r
             assert r["decoded"] == r["norm"], r
-    finally:
-        vocab.unpersist()

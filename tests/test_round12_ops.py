@@ -69,7 +69,6 @@ def test_token_stats_tokenizer_unit_matches_frozen_encode(spark, tmp_path):
         )
         .collect()
     }
-    vocab.unpersist()
     assert got == want
 
 
@@ -93,7 +92,6 @@ def test_token_stats_tokenizer_spec_heals_via_maintenance(spark, tmp_path):
         .limit(120)
     )
     rules, vocab = bpe_train(d, "text", n_merges=3)
-    vocab.unpersist()
     rp = str(tmp_path / "rules")
     rules_df(spark, rules).write.parquet(rp)
     ref = TokenizerRef(rp)
@@ -170,23 +168,20 @@ def test_encode_refuses_flag_mismatch(spark):
         "doc_id long, text string, lang string",
     )
     rules, vocab = bpe_train(d, "text", n_merges=2, pretokenize=True)
-    try:
-        with pytest.raises(ValueError, match="pretokenize"):
-            encode_docs(d, "doc_id", "text", vocab)  # default False
-        with pytest.raises(ValueError, match="pretokenize"):
-            fertility_by(d, "text", "lang", vocab)
-        with pytest.raises(ValueError, match="byte_level"):
-            encode_docs_with_rules(
-                d, "doc_id", "text", rules, vocab,
-                pretokenize=True, byte_level=True,  # trained char-level
-            )
-        # matching flags pass
-        assert (
-            encode_docs(d, "doc_id", "text", vocab, pretokenize=True).count()
-            == 2
+    with pytest.raises(ValueError, match="pretokenize"):
+        encode_docs(d, "doc_id", "text", vocab)  # default False
+    with pytest.raises(ValueError, match="pretokenize"):
+        fertility_by(d, "text", "lang", vocab)
+    with pytest.raises(ValueError, match="byte_level"):
+        encode_docs_with_rules(
+            d, "doc_id", "text", rules, vocab,
+            pretokenize=True, byte_level=True,  # trained char-level
         )
-    finally:
-        vocab.unpersist()
+    # matching flags pass
+    assert (
+        encode_docs(d, "doc_id", "text", vocab, pretokenize=True).count()
+        == 2
+    )
 
 
 def test_encode_unstamped_vocab_falls_back_to_contract(spark, tmp_path):
@@ -201,7 +196,6 @@ def test_encode_unstamped_vocab_falls_back_to_contract(spark, tmp_path):
     rules, vocab = bpe_train(d, "text", n_merges=2)
     p = str(tmp_path / "vocab")
     vocab.select("word", "cnt", "sym").write.parquet(p)
-    vocab.unpersist()
     stored = spark.read.parquet(p)
     assert encode_docs(d, "doc_id", "text", stored).count() == 2
 
@@ -499,51 +493,6 @@ def test_unigram_bytelevel_pieces_stay_byte_aligned(spark):
         assert all(len(p) % 2 == 0 for p in r["pieces"])
 
 
-# --------------------------- cache-hygiene contract (round-12 new)
-
-
-_R12_QUERIES = (
-    "pretraining_pipeline_v2_persisted",
-    "token_budget_bpe_tokens",
-    "packed_shards_versioned_table",
-    "packed_shards_incremental_append",
-    "sft_pack_loss_mask",
-    "mixture_budget_sampling",
-    "packed_windows_training_order",
-    "unigram_bytelevel_holdout",
-    "image_header_dims_patch_grid",
-    "lm_perplexity_buckets",
-    "epoch_mixture_plan",
-    "epoch_plan_execution",
-    "stream_lm_perplexity_scores",
-    "lm_artifact_roundtrip",
-    "lm_trigram_vs_bigram",
-    "quality_gated_budget_selection",
-    "lm_quality_cutoff_buckets",
-    "lm_per_language_quality",
-    "dpo_preference_pairs_report",
-    "dpo_tokenized_records",
-    "epoch_shuffled_consumption",
-)
-
-
-def test_round12_queries_leave_no_persistent_rdds(spark, sf_dir):
-    """The round-11 cache-hygiene contract extends to every round-12
-    query: run + collect, then zero persistent RDDs."""
-    from parquet_rewriter_spark import catalog
-
-    def sweep():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(False)
-
-    for name in _R12_QUERIES:
-        sweep()
-        rows = catalog.get(name).fn(spark, sf_dir).collect()
-        assert rows, name
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0, name
-
-
 # --------------------------- incremental packed-shard append
 
 
@@ -803,7 +752,6 @@ def test_heal_skips_missing_rules_artifact(spark, tmp_path):
         .limit(80)
     )
     rules, vocab = bpe_train(d, "text", n_merges=2)
-    vocab.unpersist()
     rp = str(tmp_path / "rules")
     rules_df(spark, rules).write.parquet(rp)
     ref = TokenizerRef(rp)
@@ -1128,21 +1076,18 @@ def test_bytelevel_base_artifact_covers_end_marker(spark):
         df.filter(F2.col("doc_id") % 2 == 0), "text",
         n_merges=2, pretokenize=True, byte_level=True,
     )
-    try:
-        enc = encode_docs_with_rules(
-            df, "doc_id", "text", rules, vocab, unk_id=-1,
-            pretokenize=True, byte_level=True, base_bytes=True,
-        )
-        rows = enc.collect()
-        assert len(rows) == 1 and rows[0]["doc_id"] == 1
-        assert min(rows[0]["input_ids"]) >= 0  # no unk, END included
-        assert rows[0]["n_tokens"] == 2        # byte '30' + END
-        dec = decode_docs(
-            enc, "input_ids", vocab, byte_level=True, base_bytes=True
-        ).collect()
-        assert dec[0]["decoded"] == "0"
-    finally:
-        vocab.unpersist()
+    enc = encode_docs_with_rules(
+        df, "doc_id", "text", rules, vocab, unk_id=-1,
+        pretokenize=True, byte_level=True, base_bytes=True,
+    )
+    rows = enc.collect()
+    assert len(rows) == 1 and rows[0]["doc_id"] == 1
+    assert min(rows[0]["input_ids"]) >= 0  # no unk, END included
+    assert rows[0]["n_tokens"] == 2        # byte '30' + END
+    dec = decode_docs(
+        enc, "input_ids", vocab, byte_level=True, base_bytes=True
+    ).collect()
+    assert dec[0]["decoded"] == "0"
 
 
 def test_quantile_cutoffs_match_python_reference(spark):
@@ -1287,49 +1232,27 @@ def test_encode_word_ids_cached_and_join_reads_cache(spark):
         bpe_train,
         encode_docs_with_rules,
     )
+    from parquet_rewriter_spark.operators.util import cache_scope
+
+    from tests.test_cache_scope import _rdd_ids
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma{i % 3} delta") for i in range(20)],
         "doc_id long, text string",
     )
-    before = {
-        int(r)
-        for r in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-    rules, vocab = bpe_train(docs.filter(F.col("doc_id") % 2 == 0), "text",
-                             n_merges=2)
-    try:
+    before = _rdd_ids(spark)
+    with cache_scope():
+        rules, vocab = bpe_train(docs.filter(F.col("doc_id") % 2 == 0),
+                                 "text", n_merges=2)
         enc = encode_docs_with_rules(
             docs, "doc_id", "text", rules, vocab, unk_id=-1
         )
         plan = enc._jdf.queryExecution().executedPlan().toString()
         assert "InMemory" in plan, plan[:2000]
         # the persisted cache is real (new persistent RDD exists) ...
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        new_ids = [int(r) for r in jmap.keySet().toArray()
-                   if int(r) not in before]
-        assert new_ids
+        assert _rdd_ids(spark) - before
         # ... and the encode result is unchanged by the caching
         got = {(r["doc_id"], tuple(r["input_ids"])) for r in enc.collect()}
         assert len(got) == 20
         assert all(len(ids) > 0 for _, ids in got)
-    finally:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(False)
-
-
-def test_wordpiece_unigram_encode_cache_swept_by_clean_query(spark, sf_dir):
-    """WordPiece and unigram encode persist word_ids too — their
-    catalog queries must sweep it (the @_clean_query contract): run +
-    collect, then zero persistent RDDs."""
-    from parquet_rewriter_spark import catalog
-
-    for name in ("wordpiece_encode_sample", "unigram_encode_sample",
-                 "wordpiece_marked_encode_sample"):
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist(False)
-        rows = catalog.get(name).fn(spark, sf_dir).collect()
-        assert rows, name
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0, name
+    assert _rdd_ids(spark) == before  # the scope released every cache

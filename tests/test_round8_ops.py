@@ -515,7 +515,6 @@ def test_bpe_train_textbook_example(spark):
     syms = {r["word"]: r["sym"] for r in vocab.collect()}
     assert syms["low"] == " low</w> "          # fully merged
     assert syms["lower"] == " low e r </w> "   # prefix merged, tail chars
-    vocab.unpersist()
 
 
 def test_bpe_replace_overlap_semantics_match_duckdb(spark):
@@ -542,7 +541,6 @@ def test_bpe_fertility_by_group(spark):
     # 'lowest' = low+e+s+t+</w> = 5, 'newer' = n+e+w+e+r+</w> = 6
     assert f["a"] == (4, 4, 1.0)
     assert f["b"] == (2, 11, 5.5)
-    vocab.unpersist()
 
 
 def test_bpe_tiebreak_total_order(spark):
@@ -555,7 +553,6 @@ def test_bpe_tiebreak_total_order(spark):
     rules, vocab = bpe_train(docs, "text", n_merges=2)
     got = [(r["lhs"], r["rhs"], r["pair_count"]) for r in rules]
     assert got == [("x", "</w>", 3), ("y", "</w>", 3)]
-    vocab.unpersist()
 
 
 # ------------------------------------------------------------ streaming DSIR
@@ -610,7 +607,6 @@ def test_bpe_encode_docs_hand_example(spark):
     want = [sid["low</w>"], sid["low</w>"],
             sid["low"], sid["e"], sid["s"], sid["t"], sid["</w>"]]
     assert list(out["input_ids"]) == want and out["n_tokens"] == 7
-    vocab.unpersist()
 
 
 def test_bpe_encode_token_counts_match_fertility(spark, sf_dir):
@@ -630,4 +626,3 @@ def test_bpe_encode_token_counts_match_fertility(spark, sf_dir):
         F.sum("n_tokens")
     ).first()[0]
     assert enc_total == fert_total  # two independent paths, one count
-    vocab.unpersist()

@@ -33,7 +33,6 @@ def test_bpe_decode_roundtrips_exactly(spark, sf_dir):
     j = dec.join(norm, "doc_id")
     n_docs = j.count()
     n_exact = j.filter(F.col("decoded") == F.col("expect")).count()
-    vocab.unpersist()
     assert n_docs > 0 and n_exact == n_docs
 
 
@@ -53,7 +52,6 @@ def test_bpe_decode_is_pure_codegen_no_shuffle(spark):
     rules, vocab = bpe_train(docs, "text", n_merges=2)
     enc = spark.createDataFrame([Row(doc_id=0, input_ids=[0, 1, 2])])
     p = plan_of(decode_docs(enc, "input_ids", vocab))
-    vocab.unpersist()
     assert "Exchange" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
@@ -74,7 +72,6 @@ def test_bpe_decode_hand_example(spark):
         r["doc_id"]: r["decoded"]
         for r in decode_docs(enc, "input_ids", vocab).collect()
     }
-    vocab.unpersist()
     # encode normalizes: lowercase, single-space separation
     assert got == {0: "ab ab ab", 1: "ba"}
 

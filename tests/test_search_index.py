@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 
@@ -98,6 +99,30 @@ def test_stats_track_deltas(spark, tmp_path):
     assert idx._read_stats() == {"n_docs": 3, "total_dl": 8}
     idx.remove(spark.createDataFrame([Row(doc_id=2)]))
     assert idx._read_stats() == {"n_docs": 2, "total_dl": 6}
+
+
+def test_stats_write_interrupted_keeps_previous_stats(spark, tmp_path, monkeypatch):
+    """A crash in the middle of the stats write leaves the previous
+    stats readable: the new stats go to a temp file renamed into place."""
+    import json
+
+    from parquet_rewriter_spark.operators import search_index
+    from parquet_rewriter_spark.operators.search_index import SearchIndex
+
+    idx = SearchIndex.build(
+        spark, str(tmp_path / "idx"),
+        _docs(spark, [(1, "a b c"), (2, "d e")]), n_buckets=8,
+    )
+
+    def torn_dump(obj, f):
+        f.write(json.dumps(obj)[:5])  # half the document reaches the file
+        raise OSError("disk full")
+
+    monkeypatch.setattr(search_index.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        idx._write_stats(7, 70)
+    monkeypatch.undo()
+    assert idx._read_stats() == {"n_docs": 2, "total_dl": 5}
 
 
 def test_overwrite_partitions_rewrites_with_fresh_file_names(spark, tmp_path):

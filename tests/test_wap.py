@@ -66,3 +66,25 @@ def test_changed_only_audit_scopes_to_rewritten_files(spark, sf_dir, tmp_path):
     # the audit scanned only the rewritten files (dirty range + their
     # clean neighbors), not the whole table
     assert r["audit"][0]["n_rows"] < o.count()
+
+
+def test_publish_keeps_bloom_registration_and_rows(spark, sf_dir, tmp_path):
+    """Publish inherits main's registered bloom columns (the stage clone
+    carries none), so the commit builds bloom rows for every new file."""
+    from parquet_rewriter_spark.operators.bloom import BLOOM_DIR
+    from parquet_rewriter_spark.operators.sidecar import have_files
+
+    o = load_table(spark, sf_dir, "orders")
+    t = SortedTable.create(
+        spark, str(tmp_path / "t"), o, key="o_orderkey",
+        max_records_per_file=400, bloom_cols=["o_custkey"],
+    )
+    batch = o.filter(F.col("o_orderkey") % 10 == 0).withColumn(
+        "o_totalprice", F.lit(1.0)
+    )
+    r = write_audit_publish(t, batch, {"nonneg": "o_totalprice >= 0"})
+    assert r["published"] is True
+    m = t.manifest()
+    assert m.bloom_cols == ["o_custkey"]
+    have = have_files(t, BLOOM_DIR, cols=("file", "col"))
+    assert all((e.name, "o_custkey") in have for e in m.files)
