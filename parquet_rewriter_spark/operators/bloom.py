@@ -12,17 +12,25 @@ from key stats (ParquetRewriter.java:253-301), extended to non-key
 point predicates.
 
 Design, all churn-proportional and cluster-safe:
-- BUILD is one narrow Spark job over NEWLY adopted files only (merge /
-  compact / create touch nothing else): scan (col, input_file_name),
-  compute k=BLOOM_K seeded xxhash64 values JVM-side, fold them into one
-  bitmap per (file, column) inside Arrow-batched mapInPandas (partial
-  per partition), OR the partials per file, append to a sidecar parquet
-  log (``_blooms/``). Clean files keep their existing rows — the
-  sidecar is append-only, like the changelog.
+- BUILD runs inside the commit (operators/sidecar.py:build_new) over
+  NEWLY adopted files only (merge / compact / create touch nothing
+  else), as ONE Spark job with no shuffle: the manifest-pinned reader
+  (no schema-inference job) projects the file name and k=BLOOM_K
+  seeded xxhash64 values per column JVM-side; one ``mapInArrow`` pass
+  folds each task's rows into per-(file, column) bitmaps with numpy;
+  the driver collects those partials, ORs the ones of a file that
+  spanned several tasks, and writes one row per (file, column) as one
+  sidecar parquet file (sidecar.append_rows — no Spark write job). New
+  files go in groups of at most ``_GROUP_BITMAP_BYTES`` of bitmaps,
+  one job and one sidecar file per group, so the driver's share stays
+  bounded however large the commit. Clean files keep their existing
+  rows — the sidecar (``_blooms/``) is append-only, like the
+  changelog.
 - PROBE is a Spark job over the SIDECAR (rows ∝ files, not data): probe
-  values are hashed with the same JVM expression (one tiny local job),
-  the raw hashes broadcast, and each sidecar row tests its own bitmap
-  in pandas. Only candidate file NAMES return to the driver. At a
+  values are hashed with the same JVM expression (literals, or a
+  broadcast relation for large probe sets), and each sidecar row tests
+  its own bitmap with JVM higher-order functions. Only candidate file
+  NAMES return to the driver. At a
   million files the probe scans megabytes of bloom rows, never the
   table.
 - sizing: m = rows × BLOOM_BITS_PER_KEY bits (~1% false positives at
@@ -39,19 +47,32 @@ import os
 from typing import Any, Iterator, Sequence, TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 if TYPE_CHECKING:
     from parquet_rewriter_spark.table import Manifest, ManifestEntry, SortedTable
 
-from parquet_rewriter_spark.operators.sidecar import SIDECARS, have_files
+from parquet_rewriter_spark.operators.sidecar import (
+    SIDECARS,
+    append_rows,
+    have_files,
+)
 
 BLOOM_DIR = SIDECARS["bloom"].dirname
 BLOOM_K = 7
 BLOOM_BITS_PER_KEY = 10
 
 _SIDECAR_SCHEMA = "file string, col string, m long, bits binary"
+_ARROW_SCHEMA = pa.schema([
+    ("file", pa.string()), ("col", pa.string()),
+    ("m", pa.int64()), ("bits", pa.binary()),
+])
+
+# bitmap bytes (m/8 per file per column) one build job may collect:
+# a commit's new files are built in groups under this bound
+_GROUP_BITMAP_BYTES = 256 << 20
 
 # probe-value count at or under which the hashes inline as literal
 # expressions (zero extra jobs); above it they ride a broadcast
@@ -98,65 +119,81 @@ def build_blooms(
 ) -> int:
     """Build and append sidecar bloom rows for ``entries`` (new files)
     over every column in ``m.bloom_cols`` — the commit-time upkeep
-    (operators/sidecar.py).
-
-    One job: scan only those files, project (file, k hashes per col),
-    fold into per-(file, col) bitmaps in mapInPandas (each task sees
-    one file's rows in practice — file-sized input splits — so partials
-    are few), OR partials per file, append to the sidecar.
-    """
+    (operators/sidecar.py). One shuffle-free job per group of files
+    whose bitmaps fit ``_GROUP_BITMAP_BYTES`` (one group at any
+    ordinary commit size). Returns files built."""
     cols = list(m.bloom_cols or [])
     if not entries or not cols:
         return 0
-    spark = table.spark
-    paths = [os.path.join(table.path, e.name) for e in entries]
-    m_by_file = {e.name: _m_for_rows(e.rows) for e in entries}
-    bc = spark.sparkContext.broadcast(m_by_file)
+    group: list = []
+    size = 0
+    for e in entries:
+        nbytes = _m_for_rows(e.rows) // 8 * len(cols)
+        if group and size + nbytes > _GROUP_BITMAP_BYTES:
+            _build_group(table, group, cols, m)
+            group, size = [], 0
+        group.append(e)
+        size += nbytes
+    _build_group(table, group, cols, m)
+    return len(entries)
 
-    proj = [F.element_at(F.split(F.input_file_name(), "/"), -1).alias("__f")]
+
+def _build_group(
+    table: "SortedTable", entries: list["ManifestEntry"], cols: list[str],
+    m: "Manifest",
+) -> None:
+    """One job: scan ``entries`` with the pinned reader, fold (file,
+    k hashes per col) into per-task bitmaps in ``mapInArrow``, collect
+    the partials, OR them per (file, col) on the driver, append one
+    sidecar file."""
+    spark = table.spark
+    bc = spark.sparkContext.broadcast(
+        {e.name: _m_for_rows(e.rows) for e in entries}
+    )
+    proj = [F.col("_metadata.file_name").alias("__f")]
     for c in cols:
         proj += [h.alias(f"__h_{c}_{s}") for s, h in enumerate(_hash_exprs(c))]
-    df = spark.read.parquet(*paths).select(*proj)
+    scan = table._reader(m).parquet(
+        *[os.path.join(table.path, e.name) for e in entries]
+    ).select(*proj)
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         m_map = bc.value
-        acc: dict[tuple[str, str], np.ndarray] = {}
-        for pdf in batches:
-            for fname, grp in pdf.groupby("__f"):
-                m = m_map[fname]
+        acc: dict[tuple[str, str], np.ndarray] = {}  # one bool per bit
+        for b in batches:
+            names = b.column(0)
+            files = pc.unique(names).to_pylist()  # one, unless packed
+            for fname in files:
+                part = b if len(files) == 1 else b.filter(pc.equal(names, fname))
+                nbits = m_map[fname]
                 for c in cols:
-                    bm = acc.setdefault(
-                        (fname, c), np.zeros(m // 8, dtype=np.uint8)
-                    )
+                    bits = acc.get((fname, c))
+                    if bits is None:
+                        bits = acc[(fname, c)] = np.zeros(nbits, dtype=bool)
                     for s in range(BLOOM_K):
                         # nulls hash to a constant; a null probe value is
                         # legal and simply matches null-bearing files
-                        pos = grp[f"__h_{c}_{s}"].to_numpy(dtype=np.int64) % m
-                        np.bitwise_or.at(bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        out = [
-            {"file": f, "col": c, "m": len(bm) * 8, "bits": bm.tobytes()}
-            for (f, c), bm in acc.items()
-        ]
-        yield pd.DataFrame(out, columns=["file", "col", "m", "bits"])
+                        bits[part.column(f"__h_{c}_{s}").to_numpy() % nbits] = True
+        yield pa.RecordBatch.from_pylist([
+            {"file": f, "col": c, "m": len(bits),
+             "bits": np.packbits(bits, bitorder="little").tobytes()}
+            for (f, c), bits in acc.items()
+        ], schema=_ARROW_SCHEMA)
 
-    partials = df.mapInPandas(fold, schema=_SIDECAR_SCHEMA)
-
-    def merge(key, pdf):  # (no hints: Spark's eval-type inference warns on partial ones)
-        bm = None
-        m = 0
-        for b in pdf.itertuples():
-            arr = np.frombuffer(b.bits, dtype=np.uint8)
-            bm = arr.copy() if bm is None else (bm | arr)
-            m = b.m
-        return pd.DataFrame(
-            [{"file": key[0], "col": key[1], "m": m, "bits": bm.tobytes()}]
-        )
-
-    final = partials.groupBy("file", "col").applyInPandas(merge, schema=_SIDECAR_SCHEMA)
-    out_dir = os.path.join(table.path, BLOOM_DIR)
-    final.write.mode("append").parquet(out_dir)
-    bc.unpersist()
-    return len(entries)
+    try:
+        parts = scan.mapInArrow(fold, _SIDECAR_SCHEMA).toArrow()
+    finally:
+        bc.unpersist()
+    # a file split over several tasks arrives as several partials
+    merged: dict[tuple[str, str], np.ndarray] = {}
+    for r in parts.to_pylist():
+        arr = np.frombuffer(r["bits"], dtype=np.uint8)
+        prev = merged.get((r["file"], r["col"]))
+        merged[(r["file"], r["col"])] = arr if prev is None else prev | arr
+    append_rows(table, BLOOM_DIR, pa.Table.from_pylist([
+        {"file": f, "col": c, "m": len(bm) * 8, "bits": bm.tobytes()}
+        for (f, c), bm in sorted(merged.items())
+    ], schema=_ARROW_SCHEMA))
 
 
 def heal_blooms(table: "SortedTable", m: "Manifest") -> int:

@@ -28,10 +28,12 @@ from __future__ import annotations
 import os
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from parquet_rewriter_spark.operators.sidecar import (
     SIDECARS,
+    append_rows,
     have_files,
     semi_join_files,
 )
@@ -55,27 +57,30 @@ def _have_rows(table, pcols: list[str]) -> set[tuple[str, str]]:
     )
 
 
-def _build_for(table, names: list[str], pcols: list[str], lgk: int) -> int:
-    """Sketch exactly ``names`` (file names, PHYSICAL cols): one job
-    over just those files — group by source file, one HLL aggregate per
-    column — append to the sidecar. Duplicate (file, col) rows are
-    harmless: HLL union is idempotent, so a racing double-build cannot
-    skew estimates."""
+def _build_for(table, m, names: list[str], pcols: list[str], lgk: int) -> int:
+    """Sketch exactly ``names`` (file names, PHYSICAL cols): one
+    aggregate over just those files, read with ``m``'s pinned schema —
+    group by source file, one HLL aggregate per column — collected and
+    appended to the sidecar as one file on the driver (rows are ~2.5 KB
+    per file per column). Duplicate (file, col) rows are harmless: HLL
+    union is idempotent, so a racing double-build cannot skew
+    estimates."""
     if not names or not pcols:
         return 0
-    spark = table.spark
-    src = spark.read.parquet(*[os.path.join(table.path, n) for n in names])
-    fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    per_file = src.groupBy(fname.alias("file")).agg(
+    per_file = table._reader(m).parquet(
+        *[os.path.join(table.path, n) for n in names]
+    ).groupBy(F.col("_metadata.file_name").alias("file")).agg(
         *[F.hll_sketch_agg(F.col(c), F.lit(lgk)).alias(c) for c in pcols]
-    )
-    rows = None
-    for c in pcols:
-        part = per_file.select(
-            "file", F.lit(c).alias("col"), F.col(c).alias("sketch")
-        )
-        rows = part if rows is None else rows.unionByName(part)
-    rows.write.mode("append").parquet(_sidecar(table))
+    ).toArrow()
+    files = per_file.column("file")
+    append_rows(table, SKETCH_DIR, pa.concat_tables([
+        pa.table({
+            "file": files,
+            "col": pa.array([c] * len(files), pa.string()),
+            "sketch": per_file.column(c),
+        })
+        for c in pcols
+    ]))
     return len(names)
 
 
@@ -95,7 +100,7 @@ def _build_missing(table, m, pcols: list[str], lgk: int) -> int:
         e.name for e in m.files
         if any((e.name, c) not in have for c in pcols)
     ]
-    return _build_for(table, todo, pcols, lgk)
+    return _build_for(table, m, todo, pcols, lgk)
 
 
 def build_sketches_for(table, entries, m) -> int:
@@ -103,7 +108,7 @@ def build_sketches_for(table, entries, m) -> int:
     of ``m`` — the commit-time upkeep (operators/sidecar.py): its cost
     is proportional to the files the commit wrote, never the table."""
     return _build_for(
-        table, [e.name for e in entries], list(m.sketch_cols or []),
+        table, m, [e.name for e in entries], list(m.sketch_cols or []),
         DEFAULT_LGK,
     )
 
@@ -190,7 +195,7 @@ def approx_distinct_range(
     have = _have_rows(table, [pcol])
     missing = [n for n in keep if (n, pcol) not in have]
     if missing:
-        _build_for(table, missing, [pcol], DEFAULT_LGK)
+        _build_for(table, m, missing, [pcol], DEFAULT_LGK)
     side = _sidecar(table)
     est = (
         semi_join_files(

@@ -79,15 +79,17 @@ def _have_files(table, sid: str) -> set[str]:
     return have_files(table, DRIFT_DIR, where=F.col("spec") == sid)
 
 
-def _build_for(table, names: list[str], pv: str, pg: str,
+def _build_for(table, m, names: list[str], pv: str, pg: str,
                edges: Sequence[Any], sid: str) -> int:
+    """Count matrices of ``names`` (read with ``m``'s pinned schema, so
+    no inference job), appended with a distributed Spark write: unlike
+    bloom/sketch rows they scale with groups × bins, not files."""
     if not names:
         return 0
-    spark = table.spark
-    src = spark.read.parquet(
+    src = table._reader(m).parquet(
         *[os.path.join(table.path, n) for n in names]
     ).select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
+        F.col("_metadata.file_name").alias("file"),
         F.col(pg).alias("grp"),
         _bin_expr(pv, edges).alias("bin"),
     )
@@ -117,7 +119,7 @@ def _build_missing(table, m, spec: dict) -> int:
     sid = _spec_id(pv, pg, edges)
     have = _have_files(table, sid)
     todo = [e.name for e in m.files if e.name not in have]
-    return _build_for(table, todo, pv, pg, edges, sid)
+    return _build_for(table, m, todo, pv, pg, edges, sid)
 
 
 def build_drift_for(table, entries, m) -> int:
@@ -130,7 +132,7 @@ def build_drift_for(table, entries, m) -> int:
     for spec in m.drift_specs or []:
         pv, pg, edges = spec["value"], spec["group"], spec["edges"]
         total += _build_for(
-            table, names, pv, pg, edges, _spec_id(pv, pg, edges)
+            table, m, names, pv, pg, edges, _spec_id(pv, pg, edges)
         )
     return total
 
@@ -296,7 +298,7 @@ def _histogram_at(table, m, pv: str, pg: str, edges: Sequence[Any],
     have = _have_files(table, sid)
     missing = [n for n in names if n not in have]
     if missing:
-        _build_for(table, missing, pv, pg, edges, sid)
+        _build_for(table, m, missing, pv, pg, edges, sid)
     rows = (
         semi_join_files(
             table.spark.read.parquet(_sidecar(table))
@@ -378,7 +380,7 @@ def _group_matrices(table, value_col: str, group_col: str,
     have = _have_files(table, sid)
     missing = [n for n in live if n not in have]
     if missing:
-        _build_for(table, missing, pv, pg, edges, sid)
+        _build_for(table, m, missing, pv, pg, edges, sid)
     cells = (
         semi_join_files(
             table.spark.read.parquet(_sidecar(table))
@@ -713,7 +715,7 @@ def _version_cells(table, value_col: str, group_col: str,
     have = _have_files(table, sid)
     missing = [n for n in names if n not in have]
     if missing:
-        _build_for(table, missing, pv, pg, edges, sid)
+        _build_for(table, m_new, missing, pv, pg, edges, sid)
     mem_df = table.spark.createDataFrame(
         membership, "version long, file string"
     )

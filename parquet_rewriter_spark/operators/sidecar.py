@@ -33,6 +33,17 @@ obligations live here:
   DataFrame of names and broadcast left-semi-joins it: the plan stays
   O(1) in file count, the names travel as broadcast DATA.
 
+* **One driver-side write.** :func:`append_rows` is the one place the
+  driver publishes sidecar rows: the builder collects its rows (one small
+  row per file and column) and the driver writes them as ONE parquet
+  file — first to a ``.tmp-`` file at the table's top level (where
+  ``fsck`` finds it if the process dies), then moved into the sidecar
+  directory with ``os.replace``. A reader sees all of that file's rows or
+  none, and no Spark write job runs. The bloom and distinct-sketch
+  builders use it. Drift count matrices do not: their rows scale with
+  groups × bins per file, not with files, so they keep a distributed
+  Spark append.
+
 The per-file rows themselves stay manifest-scale by design (one small
 row per file); it is only the *plan* representation of the live set
 this module keeps bounded.
@@ -42,9 +53,12 @@ from __future__ import annotations
 
 import importlib
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -110,6 +124,22 @@ def heal_all(table, m) -> dict:
         for module, s in SIDECARS.items()
         if s.heal
     }
+
+
+def append_rows(table, dirname: str, rows: pa.Table) -> None:
+    """Publish ``rows`` as one new parquet file of the table's
+    ``dirname`` sidecar: write a ``.tmp-`` file beside the sidecar
+    directory, then ``os.replace`` it in. A crash between the two
+    leaves only the temp file, which ``fsck`` reports under
+    ``orphan_tmp``; no reader ever sees a partial file."""
+    if rows.num_rows == 0:
+        return
+    side = os.path.join(table.path, dirname)
+    tag = uuid.uuid4().hex
+    tmp = f"{side}.tmp-{tag}.parquet"
+    pq.write_table(rows, tmp)
+    os.makedirs(side, exist_ok=True)
+    os.replace(tmp, os.path.join(side, f"part-{tag}.parquet"))
 
 
 # Below this many names an In-literal is the cheaper plan (Spark

@@ -529,9 +529,10 @@ class SortedTable:
         build_new(self, [e for e in m.files if e.name not in old], m)
         t_sidecar = time.monotonic() - t0
         m.committed_at = datetime.datetime.now(datetime.timezone.utc).isoformat()
+        body = m.to_json()  # O(files): serialized once for both writes
         tmp = snap + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            fh.write(m.to_json())
+            fh.write(body)
         try:
             os.link(tmp, snap)  # atomic claim: fails iff the version exists
         except FileExistsError:
@@ -540,7 +541,7 @@ class SortedTable:
         os.remove(tmp)
         tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            fh.write(m.to_json())
+            fh.write(body)
         os.replace(tmp, self._manifest_path)
         return t_sidecar
 

@@ -22,7 +22,10 @@ from parquet_rewriter_spark.sources.readers import load_table
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return load_table(spark, sf_dir, "embeddings").cache()
+    # module-scoped: outside the per-test cache scope, so released here
+    df = load_table(spark, sf_dir, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -37,13 +37,6 @@ def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _module_start(spark):
-    # tests in other modules may hold caches of their own (a direct
-    # ``.persist()`` in test code); this module starts from none
-    spark.catalog.clearCache()
-
-
 # ------------------------------------------------------------ the scope
 
 
@@ -161,11 +154,10 @@ def _scoped_queries() -> list[str]:
 
 @pytest.fixture
 def _isolated(spark):
-    """Teardown only: whatever a failing case left behind is dropped,
-    so each case is judged on its own query."""
+    """Teardown only: persistent RDDs a failing case left behind are
+    dropped, so each case is judged on its own query."""
     start = _rdd_ids(spark)
     yield
-    spark.catalog.clearCache()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in list(jmap.keySet().toArray()):
         if int(rid) not in start:

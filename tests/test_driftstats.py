@@ -192,8 +192,8 @@ def test_racing_double_build_collapses(spark, tmp_path):
     m = t.manifest()
     sid = _spec_id("v", "g", EDGES)
     names = [e.name for e in m.files]
-    _build_for(t, names, "v", "g", EDGES, sid)
-    _build_for(t, names, "v", "g", EDGES, sid)  # duplicate sidecar rows
+    _build_for(t, m, names, "v", "g", EDGES, sid)
+    _build_for(t, m, names, "v", "g", EDGES, sid)  # duplicate sidecar rows
     got = {r["g"]: (r["n_group"], r["n_rest"], r["psi"])
            for r in psi_from_stats(t, "v", "g", EDGES).collect()}
     assert got == _psi_reference(rows, EDGES)

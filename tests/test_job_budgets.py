@@ -7,11 +7,13 @@ exactly. Jobs are counted per job group through the status tracker
 (works with the UI disabled).
 
 Pins: a plain merge runs 4 jobs and a plain compact 3 — so a commit
-with no registered sidecar never lists or reads a sidecar directory —
-and a merge with bloom + distinct sketch + drift monitor registered
-stays within 13. A catalog query that owns a cache scope leaves no
-cache behind, so re-running it in the same session runs exactly the
-jobs its first run did.
+with no registered sidecar never lists or reads a sidecar directory.
+With bloom + distinct sketch + drift monitor registered the sidecars
+add 5 jobs to either (bloom 1, sketch 2, drift 2): a merge runs 9 and
+a compact 8. The bloom build of ``create`` is exactly one job — one
+shuffle-free scan whose rows the driver writes. A catalog query that
+owns a cache scope leaves no cache behind, so re-running it in the
+same session runs exactly the jobs its first run did.
 """
 
 from __future__ import annotations
@@ -76,10 +78,15 @@ def test_plain_merge_and_compact_job_budgets(spark, tmp_path):
     )
 
 
-def test_three_sidecar_merge_job_budget(spark, tmp_path):
-    t = _table(spark, str(tmp_path / "t"), bloom_cols=["grp"])
+def _three_sidecar_table(spark, path) -> SortedTable:
+    t = _table(spark, path, bloom_cols=["grp"])
     enable_distinct_sketches(t, ["grp"])
     enable_drift_monitor(t, "v", "grp", [3, 6, 9])
+    return t
+
+
+def test_three_sidecar_merge_job_budget(spark, tmp_path):
+    t = _three_sidecar_table(spark, str(tmp_path / "t"))
     res: dict = {}
     n = _jobs(
         spark,
@@ -87,8 +94,30 @@ def test_three_sidecar_merge_job_budget(spark, tmp_path):
             merge_into_table(t, _mutations(spark), allow_splice=False)
         ),
     )
-    assert n <= 13
+    assert n == 9
     assert res["files_written"] > 0 and res["t_sidecar_s"] > 0
+
+
+def test_three_sidecar_compact_job_budget(spark, tmp_path):
+    t = _three_sidecar_table(spark, str(tmp_path / "t"))
+    assert _jobs(spark, lambda: compact(t, max_records_per_file=3_000)) == 8
+
+
+def test_create_builds_blooms_in_one_job(spark, tmp_path, monkeypatch):
+    from parquet_rewriter_spark.operators import bloom
+
+    counted: list[int] = []
+    build = bloom.build_blooms
+
+    def counting(*a):
+        out: list = []
+        counted.append(_jobs(spark, lambda: out.append(build(*a))))
+        return out[0]
+
+    monkeypatch.setattr(bloom, "build_blooms", counting)
+    t = _table(spark, str(tmp_path / "t"), bloom_cols=["grp", "v"])
+    assert counted == [1]
+    assert len(t.manifest().files) == 10
 
 
 @pytest.mark.parametrize(

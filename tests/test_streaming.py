@@ -30,7 +30,10 @@ from parquet_rewriter_spark.streaming import (
 
 @pytest.fixture(scope="module")
 def batch_events(spark, sf_dir):
-    return load_table(spark, sf_dir, "events").cache()
+    # module-scoped: outside the per-test cache scope, so released here
+    df = load_table(spark, sf_dir, "events").cache()
+    yield df
+    df.unpersist()
 
 
 def _rows(df, cols):
