@@ -14,6 +14,13 @@ changed rows, and merges the per-group deltas into the view — itself a
 SortedTable keyed by the group column, so the view update enjoys the
 same dirty-file pruning as any merge. Cost tracks churn twice over.
 
+The view's state is its own manifest: the base version it reflects is
+the ``"matview"`` transaction watermark (``Manifest.txns``), recorded by
+the build's create and by every refresh merge in the same flip as the
+view rows. A refresh that dies anywhere leaves the watermark at the last
+committed state, so the next refresh re-diffs from there and converges;
+there is no side file to fall out of step with the data.
+
 Supported aggregates are the self-maintainable (commutative-group) ones:
 ``count`` and ``sum`` — avg derives as sum/count at read time. MIN/MAX
 are NOT self-maintainable under deletes (retracting the current min
@@ -22,9 +29,7 @@ needs the base table) and are deliberately out of scope.
 
 from __future__ import annotations
 
-import json
 import os
-from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -38,7 +43,7 @@ from parquet_rewriter_spark.operators.merge import (
 from parquet_rewriter_spark.operators.util import cache_scope, persist
 from parquet_rewriter_spark.table import SortedTable
 
-_STATE_NAME = "_mv_state.json"
+_TXN = "matview"  # Manifest.txns app id of the base-version watermark
 
 
 class MaterializedAggregate:
@@ -74,21 +79,6 @@ class MaterializedAggregate:
         self.max_records_per_file = max_records_per_file
         self._count_col = counts[0]
 
-    # ---------- state ----------
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.path, _STATE_NAME)
-
-    def _load_state(self) -> dict[str, Any]:
-        with open(self._state_path) as fh:
-            return json.load(fh)
-
-    def _save_state(self, base_version: int) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"base_version": base_version}, fh)
-        os.replace(tmp, self._state_path)
-
     # ---------- build / read / refresh ----------
     def _agg_exprs(self, sign=None) -> list:
         """Aggregate expressions; with ``sign`` (+1/-1 per change row),
@@ -119,11 +109,10 @@ class MaterializedAggregate:
             if self.max_records_per_file
             else {}
         )
-        mv = SortedTable.create(
-            self.base.spark, self.path, agg, key=self.group_col, **kw
+        return SortedTable.create(
+            self.base.spark, self.path, agg, key=self.group_col,
+            txn=(_TXN, v), **kw
         )
-        self._save_state(v)
-        return mv
 
     def table(self) -> SortedTable:
         return SortedTable(self.base.spark, self.path)
@@ -140,10 +129,14 @@ class MaterializedAggregate:
         deltas with the view's CURRENT values for affected groups only
         (left join against a semi-pruned view read) → upsert the new
         values / delete count-zero groups via merge_into_table, which
-        zone-map-prunes the view's files to the touched groups.
+        zone-map-prunes the view's files to the touched groups, and
+        whose commit advances the watermark to the current base version.
+
+        A refresh whose delta is empty commits nothing and leaves the
+        watermark behind; the next one diffs from there, which is still
+        exact because snapshot_diff compares two snapshots.
         """
-        state = self._load_state()
-        from_v = state["base_version"]
+        from_v = self.table().manifest().txns[_TXN]
         cur_v = self.base.manifest().version
         if cur_v == from_v:
             return {"refreshed": False, "base_from": from_v, "base_to": cur_v}
@@ -197,6 +190,5 @@ class MaterializedAggregate:
                     F.lit(OP_UPSERT)
                 ),
             )
-            metrics = merge_into_table(mv, muts)
-        self._save_state(cur_v)
+            metrics = merge_into_table(mv, muts, txn=(_TXN, cur_v))
         return {"refreshed": True, "base_from": from_v, "base_to": cur_v, **metrics}

@@ -3,31 +3,42 @@
 ``bm25_topk`` (operators/search.py) tokenizes the WHOLE corpus per
 query — right for ad-hoc exploration, wrong for a serving index at
 100 TB where the corpus mutates forever. ``SearchIndex`` keeps the
-index itself as engine-managed state, split across the two layouts a
-real search system needs:
+index itself as two engine-managed :class:`SortedTable`\\ s:
 
-1. **Document table** (source of truth): a :class:`SortedTable` keyed
-   by doc id holding (doc_id, text). Maintained by the engine's own
-   mutation core — upsert/delete batches pay zone-map dirty-file
-   pruning, atomic commits, time travel. This is where writes go.
-2. **Postings layout** (derived, query-optimized): (term, doc_id, tf,
-   dl) hive-partitioned by ``bucket = pmod(xxhash64(term), n_buckets)``.
-   A query's terms map to a handful of buckets, so search is a
-   PARTITION-PRUNED scan of |query-term buckets|, never the corpus.
-3. **Corpus stats** (tiny): (n_docs, total_dl) as one parquet row,
-   versioned next to the postings; BM25's N and avgdl come from here —
-   no corpus scan at query time.
+1. **Docs** (``docs/``, source of truth): keyed by doc id, holding
+   (doc_id, text). Writes go here, through the mutation core —
+   zone-map dirty-file pruning, atomic commits, time travel.
+2. **Postings** (``postings/``, derived, query-optimized): one row per
+   (bucket, doc), keyed ``bucket * BUCKET_BASE + doc_id`` with
+   ``bucket = crc32(term) mod n_buckets`` — the cell-major key of
+   operators/ann_index.py. Columns: ``dl`` (the doc's length) and
+   ``terms``, the doc's (term, tf) pairs that fall in the bucket. A
+   query's terms map to a handful of buckets, and each bucket is one
+   key range, so ``search`` reads them with ``read_range``: manifest
+   pruning, never the corpus. The build cuts files at the bucket
+   boundaries, so a file starts out holding one bucket.
+3. **Corpus stats** live in the postings table too, as one reserved row
+   (key −1, its own bucket cut) whose pairs are ``n_docs``,
+   ``total_dl`` and ``n_buckets``. BM25's N and avgdl come from it,
+   read on the driver.
 
-The refresh contract is the point: after ``add(batch)`` the derived
-layout is reconciled FROM THE CDC FEED of the doc table
-(operators/cdc.py:snapshot_diff with preimages), so refresh cost is
+Refresh contract: the postings manifest records the docs version it
+reflects as its ``"search"`` transaction watermark (``Manifest.txns``).
+A refresh diffs the docs table from that watermark to its current
+version (operators/cdc.py:snapshot_diff with preimages) and applies ONE
+``merge_into_table(..., txn=("search", docs_version))``: postimage
+(bucket, doc) rows UPSERT, preimage keys the postimage lacks DELETE, and
+the stats row is upserted with the diff's deltas. The merge's zone-map
+planning rewrites only the files of touched buckets, so cost is
 
-    O(batch docs + size of touched term-buckets)
+    O(batch docs + size of touched buckets)
 
-never O(corpus). Buckets untouched by the batch's terms keep their
-files byte-identical on disk (dynamic partition overwrite,
-sources/sinks.py:overwrite_partitions). Deletes retract postings via
-the preimage's terms; updates retract the old terms and insert the new.
+never O(corpus); untouched files keep their names and bytes. Postings,
+stats and watermark flip together, so they never disagree, and a
+refresh that dies anywhere leaves the last committed state: ``add`` /
+``remove`` merge the docs and then refresh from the watermark, and
+``search`` refreshes first (a driver-only check, no Spark job, when the
+index is current) — a lagging index catches up on its next use.
 
 Correctness contract (oracled end-to-end in the catalog): after any
 sequence of add/remove batches, ``search(terms)`` over the incremental
@@ -36,62 +47,105 @@ postings equals BM25 computed from scratch over the final corpus.
 
 from __future__ import annotations
 
-import json
 import os
+import zlib
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from parquet_rewriter_spark.operators.search import term_postings
-from parquet_rewriter_spark.operators.util import persist
+from parquet_rewriter_spark.operators.cdc import CHANGE_TYPE_COL, snapshot_diff
+from parquet_rewriter_spark.operators.merge import (
+    OP_COLUMN,
+    OP_DELETE,
+    OP_UPSERT,
+    merge_into_table,
+)
+from parquet_rewriter_spark.operators.util import cache_scope, persist
 from parquet_rewriter_spark.table import SortedTable
 
 _ID = "doc_id"
+_KEY = "pkey"
+BUCKET_BASE = 1 << 40  # composite key: bucket * BUCKET_BASE + doc_id
+_STATS_KEY = -1
+_TXN = "search"  # Manifest.txns app id of the docs-version watermark
+_NO_STATS = {"n_docs": 0, "total_dl": 0}
 
 
-def _doc_lengths(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias(_ID),
-        F.size(F.filter(F.split(F.col(text_col), " "), lambda x: x != "")).alias("dl"),
+def _postings_mutations(changes: DataFrame, n_buckets: int, stats: dict) -> DataFrame:
+    """Postings mutations for a change feed (doc_id, text, _change_type):
+    one row per (bucket, doc) — UPSERT with the postimage's (term, tf)
+    pairs in that bucket, DELETE where only a preimage had terms there —
+    plus the stats row, ``stats`` folded with the feed's deltas."""
+    words = F.filter(
+        F.split(F.coalesce("text", F.lit("")), " "), lambda x: x != ""
     )
+    post = F.col(CHANGE_TYPE_COL).isin("insert", "update_postimage")
+    rows = changes.select(
+        _ID, CHANGE_TYPE_COL, post.alias("post"), F.size(words).alias("dl"),
+        words.alias("words"),
+    )
+    bucket = F.pmod(F.crc32("term"), F.lit(n_buckets))
+    # one exchange on the row key serves both aggregations below
+    tf = (
+        rows.select(_ID, "post", "dl", F.explode("words").alias("term"))
+        .withColumn(_KEY, bucket * F.lit(BUCKET_BASE) + F.col(_ID))
+        .repartition(_KEY)
+        .groupBy(_KEY, "post", "dl", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    is_post = F.col("post")
+    postings = (
+        tf.groupBy(_KEY)
+        .agg(
+            F.max(F.when(is_post, F.col("dl"))).alias("dl"),
+            F.array_sort(
+                F.collect_list(F.when(is_post, F.struct("term", "tf")))
+            ).alias("terms"),
+            F.max(is_post).alias("post"),
+        )
+        .select(
+            _KEY, "dl", "terms",
+            F.when(is_post, F.lit(OP_UPSERT)).otherwise(F.lit(OP_DELETE)).alias(OP_COLUMN),
+        )
+    )
+    ct = F.col(CHANGE_TYPE_COL)
+    delta = rows.agg(
+        F.coalesce(F.sum(
+            F.when(ct == "insert", 1).when(ct == "delete", -1).otherwise(0)
+        ), F.lit(0)).alias("n_docs"),
+        F.coalesce(F.sum(F.when(is_post, F.col("dl")).otherwise(-F.col("dl"))),
+                   F.lit(0)).alias("total_dl"),
+    )
+
+    def pair(name, value):
+        return F.struct(F.lit(name).alias("term"), value.cast("long").alias("tf"))
+
+    stats_row = delta.select(
+        F.lit(_STATS_KEY).cast("long").alias(_KEY),
+        F.lit(None).cast("int").alias("dl"),
+        F.array(
+            pair("n_buckets", F.lit(n_buckets)),
+            pair("n_docs", F.lit(stats["n_docs"]) + F.col("n_docs")),
+            pair("total_dl", F.lit(stats["total_dl"]) + F.col("total_dl")),
+        ).alias("terms"),
+        F.lit(OP_UPSERT).alias(OP_COLUMN),
+    )
+    return postings.unionByName(stats_row)
+
+
+def _check_ids(batch: DataFrame) -> None:
+    """The composite key needs 0 <= doc_id < BUCKET_BASE: a larger id
+    would run into the next bucket's key range."""
+    bad = (F.col(_ID) < 0) | (F.col(_ID) >= BUCKET_BASE)
+    if not batch.filter(bad).isEmpty():
+        raise ValueError("SearchIndex doc ids must lie in [0, 2**40)")
 
 
 class SearchIndex:
-    def __init__(self, table: SortedTable, path: str, n_buckets: int = 64) -> None:
-        self.table = table
+    def __init__(self, table: SortedTable, postings: SortedTable, path: str) -> None:
+        self.table = table  # docs
+        self.postings = postings
         self.path = path
-        self.n_buckets = n_buckets
-
-    # ---------------------------------------------------------- layout
-
-    @property
-    def _postings_path(self) -> str:
-        return os.path.join(self.path, "postings")
-
-    @property
-    def _stats_path(self) -> str:
-        return os.path.join(self.path, "stats.json")
-
-    def _bucket(self, term_col):
-        return F.pmod(F.xxhash64(term_col), F.lit(self.n_buckets)).cast("int")
-
-    def _postings_of(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        post = term_postings(docs, id_col, text_col)
-        lens = _doc_lengths(docs, id_col, text_col)
-        return (
-            post.join(lens, _ID)
-            .select(self._bucket(F.col("term")).alias("bucket"), "term", _ID, "tf", "dl")
-        )
-
-    def _write_stats(self, n_docs: int, total_dl: int) -> None:
-        # temp file + rename: a crash mid-write leaves the old stats
-        tmp = self._stats_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n_docs": int(n_docs), "total_dl": int(total_dl)}, f)
-        os.replace(tmp, self._stats_path)
-
-    def _read_stats(self) -> dict:
-        with open(self._stats_path) as f:
-            return json.load(f)
 
     # ----------------------------------------------------------- build
 
@@ -107,234 +161,135 @@ class SearchIndex:
         max_records_per_file: int = 100_000,
     ) -> "SearchIndex":
         base = docs.select(F.col(id_col).alias(_ID), F.col(text_col).alias("text"))
+        _check_ids(base)
         table = SortedTable.create(
             spark, os.path.join(path, "docs"), base, key=_ID,
             max_records_per_file=max_records_per_file,
         )
-        idx = cls(table, path, n_buckets=n_buckets)
-        from parquet_rewriter_spark.sources.sinks import write_partitioned
-
-        write_partitioned(
-            idx._postings_of(base, _ID, "text"), idx._postings_path, ["bucket"]
+        idx = cls(table, SortedTable(spark, os.path.join(path, "postings")), path)
+        SortedTable.create(
+            spark, idx.postings.path,
+            _postings_mutations(idx._snapshot(0), n_buckets, _NO_STATS).drop(OP_COLUMN),
+            key=_KEY,
+            bucket_cuts=[_STATS_KEY] + [b * BUCKET_BASE - 1 for b in range(1, n_buckets)],
+            txn=(_TXN, 0),
         )
-        agg = _doc_lengths(base, _ID, "text").agg(
-            F.count(F.lit(1)), F.coalesce(F.sum("dl"), F.lit(0))
-        ).first()
-        idx._write_stats(agg[0], agg[1])
         return idx
 
+    def _snapshot(self, version: int) -> DataFrame:
+        """Docs snapshot ``version`` as a change feed of inserts."""
+        return self.table.read(version).withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+
     @classmethod
-    def open(cls, spark: SparkSession, path: str, n_buckets: int = 64) -> "SearchIndex":
-        return cls(SortedTable(spark, os.path.join(path, "docs")), path, n_buckets)
+    def open(cls, spark: SparkSession, path: str) -> "SearchIndex":
+        return cls(
+            SortedTable(spark, os.path.join(path, "docs")),
+            SortedTable(spark, os.path.join(path, "postings")),
+            path,
+        )
+
+    def stats(self, m=None) -> dict:
+        """The reserved stats row ({n_docs, total_dl, n_buckets}) of the
+        postings snapshot ``m`` (default: current), read on the driver
+        from its first file — key −1 is the table's smallest key."""
+        import pyarrow.parquet as pq
+
+        first = (m or self.postings.manifest()).files[0]
+        t = pq.read_table(
+            os.path.join(self.postings.path, first.name),
+            columns=["terms"], filters=[(_KEY, "=", _STATS_KEY)],
+        )
+        return {p["term"]: p["tf"] for p in t.column("terms")[0].as_py()}
 
     # -------------------------------------------------------- mutation
 
     def add(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict:
-        """Upsert a document batch, then reconcile the derived postings
-        from the doc table's CDC feed. Returns the merge metrics plus
-        ``buckets_refreshed``."""
-        from parquet_rewriter_spark.operators.merge import OP_COLUMN, merge_into_table
-
+        """Upsert a document batch, then refresh the postings. Returns
+        the docs merge metrics, with the postings refresh's under
+        ``postings``."""
         batch = docs.select(
             F.col(id_col).alias(_ID), F.col(text_col).alias("text")
-        ).withColumn(OP_COLUMN, F.lit("UPSERT"))
-        return self._mutate(batch, merge_into_table)
+        ).withColumn(OP_COLUMN, F.lit(OP_UPSERT))
+        return self._mutate(batch)
 
     def remove(self, ids: DataFrame, id_col: str = "doc_id") -> dict:
         """Delete retired docs; their postings retract via the preimage."""
-        from parquet_rewriter_spark.operators.merge import OP_COLUMN, merge_into_table
-
         batch = (
             ids.select(F.col(id_col).alias(_ID))
             .withColumn("text", F.lit(None).cast("string"))
-            .withColumn(OP_COLUMN, F.lit("DELETE"))
+            .withColumn(OP_COLUMN, F.lit(OP_DELETE))
         )
-        return self._mutate(batch, merge_into_table)
+        return self._mutate(batch)
 
-    def _mutate(self, batch: DataFrame, merge_into_table) -> dict:
-        from parquet_rewriter_spark.operators.cdc import snapshot_diff
-
-        v0 = self.table.manifest().version
+    def _mutate(self, batch: DataFrame) -> dict:
+        _check_ids(batch)
         metrics = merge_into_table(self.table, batch)
-        diff = persist(snapshot_diff(self.table, v0, include_preimage=True))
+        return {**metrics, "postings": self.refresh()}
 
-        # retractions: preimages + deletes; additions: postimages + inserts
-        new_rows = diff.filter(
-            F.col("_change_type").isin("insert", "update_postimage")
-        )
-        churned_ids = diff.select(_ID).distinct()
-        # ONE map-side-combinable aggregation serves every bounded fold
-        # over the persisted diff — the touched-bucket set AND the
-        # stats deltas. Affected buckets = buckets of every term the
-        # change touches (old terms must retract even if the new text
-        # drops them); with n_buckets ≤ 64 the per-row bucket set is a
-        # BITMASK folded with bit_or, so the former explode → distinct
-        # shuffle (term-scale rows) disappears entirely (guide §2.3 —
-        # aggregate before you shuffle; the shuffle now carries ≤ 4
-        # 4-long rows).
-        words = F.filter(
-            F.split(F.coalesce("text", F.lit("")), " "), lambda x: x != ""
-        )
-        if self.n_buckets <= 64:
-            mask = F.expr(
-                "aggregate(filter(split(coalesce(text, ''), ' '),"
-                " x -> x != ''), 0L, (acc, w) -> acc |"
-                " shiftleft(1L, cast(pmod(xxhash64(w),"
-                f" {self.n_buckets}) as int)))"
+    def refresh(self) -> dict:
+        """Fold every docs commit since the postings' watermark into the
+        postings with one merge. An index that is current returns after
+        two manifest reads, with no Spark job."""
+        to_v = self.table.manifest().version
+        m = self.postings.manifest()
+        from_v = m.txns[_TXN]
+        out = {"refreshed": from_v != to_v, "docs_from": from_v, "docs_to": to_v}
+        if from_v == to_v:
+            return out
+        st = self.stats(m)
+        try:
+            changes = snapshot_diff(self.table, from_v, to_v, include_preimage=True)
+            muts = _postings_mutations(changes, st["n_buckets"], st)
+        except ValueError:
+            # docs history vacuumed past the watermark: the delta is
+            # unrecoverable, so the merge rewrites the postings from the
+            # snapshot and deletes every key the snapshot no longer has
+            muts = _postings_mutations(self._snapshot(to_v), st["n_buckets"], _NO_STATS)
+            stale = self.postings.read().select(_KEY).join(muts, _KEY, "left_anti")
+            muts = muts.unionByName(
+                stale.withColumn(OP_COLUMN, F.lit(OP_DELETE)), allowMissingColumns=True
             )
-            fused = (
-                diff.select(
-                    "_change_type", F.size(words).alias("dl"), mask.alias("bm")
-                )
-                .groupBy("_change_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("dl"), F.lit(0)).alias("dl"),
-                    F.bit_or("bm").alias("bm"),
-                )
-                .collect()
-            )
-            all_mask = 0
-            for r in fused:
-                all_mask |= int(r["bm"] or 0)
-            buckets = [b for b in range(self.n_buckets) if all_mask >> b & 1]
-        else:
-            touched = (
-                diff.select(F.explode(words).alias("term"))
-                .select(self._bucket(F.col("term")).alias("bucket"))
-                .distinct()
-            )
-            stat_rows = (
-                diff.select("_change_type", F.size(words).alias("dl"))
-                .groupBy("_change_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("dl"), F.lit(0)).alias("dl"),
-                )
-            )
-            fused = touched.select(
-                F.lit(None).cast("string").alias("_change_type"),
-                F.col("bucket").cast("long").alias("bucket"),
-                F.lit(None).cast("long").alias("n"),
-                F.lit(None).cast("long").alias("dl"),
-            ).unionByName(
-                stat_rows.select(
-                    "_change_type",
-                    F.lit(None).cast("long").alias("bucket"),
-                    F.col("n").cast("long").alias("n"),
-                    F.col("dl").cast("long").alias("dl"),
-                )
-            ).collect()
-            buckets = [
-                int(r["bucket"]) for r in fused if r["_change_type"] is None
-            ]  # ≤ n_buckets ints
-        if buckets:
-            spark = self.table.spark
-            existing = spark.read.parquet(self._postings_path).filter(
-                F.col("bucket").isin(buckets)
-            )
-            kept = existing.join(churned_ids, _ID, "anti")
-            fresh = self._postings_of(new_rows, _ID, "text").filter(
-                F.col("bucket").isin(buckets)
-            )
-            from parquet_rewriter_spark.sources.sinks import write_partitioned
-
-            # ONE materialization: the refreshed buckets write straight
-            # to a temp root (underscore-prefixed — never listed as
-            # data) and the touched bucket DIRECTORIES swap in
-            # driver-side. The former shape paid the rows twice — an
-            # eager localCheckpoint job (to break the read-your-own-
-            # overwrite cycle) and then the dynamic-overwrite write —
-            # and detected all-retracted buckets with a listing diff
-            # that leaned on the committer's fresh-file-name contract.
-            # Writing besides the live path breaks the cycle for free,
-            # and an emptied bucket simply writes no partition dir, so
-            # the swap removes it: no second pass, no naming contract.
-            # Each live bucket moves aside (into the temp root) before
-            # the fresh one renames in, and every rename is checked: a
-            # failed swap raises with the old postings put back.
-            import uuid as _uuid
-
-            refreshed = kept.unionByName(fresh).select(
-                "bucket", "term", _ID, "tf", "dl"
-            )
-            tmp = os.path.join(
-                self.path, f"_postings-refresh-{_uuid.uuid4().hex}"
-            )
-            write_partitioned(refreshed, tmp, ["bucket"])
-            jvm = spark.sparkContext._jvm
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            HPath = jvm.org.apache.hadoop.fs.Path
-            tmp_p = HPath(tmp)
-            fs = tmp_p.getFileSystem(hconf)
-            aside_root = HPath(f"{tmp}/_aside")
-            if not fs.mkdirs(aside_root):
-                raise OSError(f"search index: cannot create {aside_root}")
-            for b in buckets:
-                dst = HPath(f"{self._postings_path}/bucket={b}")
-                src = HPath(f"{tmp}/bucket={b}")
-                aside = HPath(f"{tmp}/_aside/bucket={b}")
-                had_dst = fs.exists(dst)
-                if had_dst and not fs.rename(dst, aside):
-                    raise OSError(f"search index: cannot move {dst} aside")
-                if fs.exists(src) and not fs.rename(src, dst):
-                    if had_dst and not fs.rename(aside, dst):
-                        raise OSError(
-                            f"search index: cannot rename {src} to {dst}; "
-                            f"the old postings are left at {aside}"
-                        )
-                    raise OSError(f"search index: cannot rename {src} to {dst}")
-            fs.delete(tmp_p, True)
-
-        # stats deltas came from the same fused collect (no corpus scan)
-        diff.unpersist()
-        d = [r for r in fused if r["_change_type"] is not None]
-        n_of = {r["_change_type"]: r["n"] for r in d}
-        dl_of = {r["_change_type"]: r["dl"] for r in d}
-        st = self._read_stats()
-        n_docs = st["n_docs"] + n_of.get("insert", 0) - n_of.get("delete", 0)
-        total_dl = (
-            st["total_dl"]
-            + dl_of.get("insert", 0)
-            + dl_of.get("update_postimage", 0)
-            - dl_of.get("update_preimage", 0)
-            - dl_of.get("delete", 0)
-        )
-        self._write_stats(n_docs, total_dl)
-        metrics["buckets_refreshed"] = len(buckets)
-        return metrics
+            out["rebuilt"] = True
+        # the merge's planning and write passes both read the mutations;
+        # the postings files are bucket-aligned, so the write exchanges on
+        # their key ranges without a range-sampling job
+        with cache_scope():
+            return {**out, **merge_into_table(
+                self.postings, persist(muts), txn=(_TXN, to_v), bucket_write_min_bytes=0
+            )}
 
     # ----------------------------------------------------------- query
 
     def search(
         self, query_terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75
     ) -> DataFrame:
-        """BM25 top-k over the derived postings: reads ONLY the buckets
-        of the query's terms (hive partition pruning on ``bucket``), so
-        per-query cost is independent of corpus size. Returns
-        (doc_id, score, n_hit_terms) — same contract as bm25_topk."""
+        """BM25 top-k over the postings: catches up first, then reads
+        ONLY the key ranges of the query terms' buckets, so per-query
+        cost is independent of corpus size. Returns (doc_id, score,
+        n_hit_terms) — same contract as bm25_topk."""
+        self.refresh()
         terms = [t for t in query_terms if t]
-        spark = self.table.spark
-        st = self._read_stats()
+        st = self.stats()
         n_docs, avg_dl = st["n_docs"], st["total_dl"] / max(st["n_docs"], 1)
-        # bucket pruning WITHOUT a separate hashing job: each term's
-        # bucket is a FOLDABLE expression (xxhash64 of a literal — the
-        # exact expression the layout used), so Catalyst constant-folds
-        # the disjunction to `bucket IN (…)` before partition pruning —
-        # the former 1-row Spark job per search is gone
-        from functools import reduce
-
-        bucket_pred = reduce(
-            lambda a, b: a | b,
-            [F.col("bucket") == self._bucket(F.lit(t)) for t in terms],
-            F.lit(False),
-        )
+        # crc32 is the same function in zlib and Spark, so the buckets
+        # are known on the driver (an empty query still plans one scan)
+        buckets = sorted({zlib.crc32(t.encode()) % st["n_buckets"] for t in terms})
         post = (
-            spark.read.parquet(self._postings_path)
-            .filter(bucket_pred)
+            reduce(
+                DataFrame.unionByName,
+                [
+                    self.postings.read_range(c * BUCKET_BASE, (c + 1) * BUCKET_BASE - 1)
+                    for c in buckets or [0]
+                ],
+            )
+            .select(
+                (F.col(_KEY) % F.lit(BUCKET_BASE)).alias(_ID), "dl",
+                F.explode("terms").alias("p"),
+            )
+            .select(_ID, "dl", "p.term", "p.tf")
             .filter(F.col("term").isin(terms))
         )
-        df_t = post.groupBy("term").agg(F.count_distinct(_ID).alias("df"))
+        df_t = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         idf = F.log(
             F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         )

@@ -93,8 +93,12 @@ class SortedTableDataSource(DataSource):
     def _manifest(self) -> dict:
         path = self.options["path"]
         version = self.options.get("version")
-        name = "_manifest.json" if version is None else f"_manifest.v{int(version)}.json"
-        with open(os.path.join(path, name)) as f:
+        if version is None:  # current = SortedTable.manifest()'s roll-forward
+            with open(os.path.join(path, "_manifest.json")) as f:
+                version = json.load(f)["version"]
+            while os.path.exists(os.path.join(path, f"_manifest.v{version + 1}.json")):
+                version += 1
+        with open(os.path.join(path, f"_manifest.v{int(version)}.json")) as f:
             return json.load(f)
 
     def schema(self) -> StructType:

@@ -486,20 +486,19 @@ def stream_maintain_aggregate(
     into the view's BASE table, then folds that commit's signed deltas
     into the view (operators/matview.py) — the view stays current with
     the stream at churn-proportional cost per batch, never re-reading
-    the base. The upstream merge + the view merge are both idempotent
-    manifest flips, so checkpoint replay after a crash re-applies
-    cleanly.
+    the base. Checkpoint replay after a crash is safe: the base merge
+    skips replayed epochs (txn watermark), and the refresh catches the
+    view up from its own committed watermark — so it runs even for a
+    replayed epoch, whose base commit may have landed just before the
+    crash, and is a driver-only no-op when the view is current.
     """
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         from parquet_rewriter_spark.operators.merge import merge_into_table
 
         mut = epoch_fn(batch_df, epoch_id) if epoch_fn else batch_df
-        res = merge_into_table(
-            matview.base, mut, txn=("matview_stream", epoch_id)
-        )
-        if not res.get("skipped_txn_replay"):
-            matview.refresh()
+        merge_into_table(matview.base, mut, txn=("matview_stream", epoch_id))
+        matview.refresh()
 
     q = (
         stream.writeStream.foreachBatch(apply)

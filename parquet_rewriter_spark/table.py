@@ -149,12 +149,16 @@ class Manifest:
     # what produced this snapshot (create/merge/compact/...) — shown by
     # history(); writers pass it via Manifest(..., operation=...)
     operation: str | None = None
-    # streaming transaction watermarks: app_id → highest epoch applied.
-    # The Delta txn (appId, version) pattern on plain parquet: a merge
-    # tagged (app, epoch) is SKIPPED when epoch ≤ txns[app], which makes
+    # transaction watermarks: app_id → highest epoch applied. The Delta
+    # txn (appId, version) pattern on plain parquet: a merge tagged
+    # (app, epoch) is SKIPPED when epoch ≤ txns[app], which makes
     # foreachBatch replays after a crash exactly-once even for
-    # NON-idempotent mutation streams (signed matview deltas). Writers
-    # that don't set it inherit the previous snapshot's map at commit.
+    # NON-idempotent mutation streams. Derived tables keep their source
+    # watermark here too: the matview's base version ("matview") and
+    # the search postings' docs version ("search") commit in the same
+    # flip as the refreshed rows, so a crashed refresh re-diffs from
+    # the last committed watermark. Writers that don't set it inherit
+    # the previous snapshot's map at commit.
     txns: dict[str, int] = field(default_factory=dict)
     # metadata-only RENAME COLUMN (Delta-style column mapping): physical
     # (in-file) column name → logical (user-visible) name. Files are
@@ -257,20 +261,25 @@ class SortedTable:
         a tagged snapshot by ref name (``manifest("v1.0")``)."""
         if isinstance(version, str):
             version = self.resolve_ref(version)
-        path = (
-            self._manifest_path
-            if version is None
-            else os.path.join(self.path, f"_manifest.v{version}.json")
-        )
+        if version is None:
+            with open(self._manifest_path) as fh:
+                m = Manifest.from_json(fh.read())
+            # the claimed snapshot is the commit point: a writer that
+            # died between its claim and the pointer write left
+            # v{n+1} committed, so the current version rolls past it
+            while os.path.exists(self._snapshot_path(m.version + 1)):
+                m = self.manifest(m.version + 1)
+            return m
         try:
-            with open(path) as fh:
+            with open(self._snapshot_path(version)) as fh:
                 return Manifest.from_json(fh.read())
         except FileNotFoundError:
-            if version is None:
-                raise
             raise ValueError(
                 f"no snapshot v{version} at {self.path} (vacuumed or never existed)"
             ) from None
+
+    def _snapshot_path(self, version: int) -> str:
+        return os.path.join(self.path, f"_manifest.v{version}.json")
 
     # ---------------------------------------------------- named refs
     # Iceberg-style tags: a human name pinned to a snapshot version,
@@ -517,7 +526,7 @@ class SortedTable:
             # don't know about them (compact, DDL, WAP, DV deletes…) —
             # otherwise a compaction would reopen the door to replays
             m.txns = dict(parent.txns)
-        snap = os.path.join(self.path, f"_manifest.v{m.version}.json")
+        snap = self._snapshot_path(m.version)
         lost = (
             f"version {m.version} of {self.path} was committed by another "
             "writer; reload the manifest and retry"
@@ -562,6 +571,7 @@ class SortedTable:
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         bucket_cuts=None,
+        txn: tuple[str, int] | None = None,
     ) -> "SortedTable":
         """Write ``df`` as a new sorted table (R12 sorted write).
 
@@ -579,6 +589,9 @@ class SortedTable:
         and used by ``read_where`` for driver-side file pruning.
         ``bloom_cols`` opts columns into per-file Bloom filters (sidecar
         ``_blooms/``) for point-lookup skipping (operators/bloom.py).
+        ``txn=(app, epoch)`` records the first watermark in ``txns``, as
+        ``merge_into_table(txn=)`` does — a derived table built from
+        version ``epoch`` of its source says so in the same commit.
         """
         os.makedirs(path, exist_ok=True)
         t = cls(spark, path)
@@ -607,6 +620,7 @@ class SortedTable:
                 stats_cols=stats_cols,
                 bloom_cols=bloom_cols,
                 operation="create",
+                txns={txn[0]: txn[1]} if txn else {},
             )
         )
         return t
@@ -1155,7 +1169,7 @@ class SortedTable:
         keep_versions.sort()
         for v in versions:
             if v not in keep_versions:
-                os.remove(os.path.join(self.path, f"_manifest.v{v}.json"))
+                os.remove(self._snapshot_path(v))
         live = {e.name for e in self.manifest().files}
         live_dv: set[str] = set(self.manifest().dv_files)
         for v in keep_versions:

@@ -131,6 +131,37 @@ def test_dynamic_partition_overwrite_touches_only_incoming(spark, tmp_path, sf_d
 # ---------------- write-side changelog + streaming tail ----------------
 
 
+def test_overwrite_partitions_rewrites_with_fresh_file_names(spark, tmp_path):
+    """overwrite_partitions contract: a partition it WRITES comes back
+    with FRESH part-file names (task-UUID naming), while a partition
+    absent from the written frame keeps its files untouched (dynamic
+    overwrite). Callers may therefore tell a rewritten partition from
+    a skipped one by its file set."""
+    path = str(tmp_path / "part_table")
+    df = spark.createDataFrame(
+        [(0, "a"), (0, "b"), (1, "c")], "bucket int, v string"
+    )
+    overwrite_partitions(df, path, ["bucket"])
+
+    def files_of(b: int) -> frozenset:
+        return frozenset(
+            f for f in os.listdir(os.path.join(path, f"bucket={b}"))
+            if not f.startswith(("_", "."))
+        )
+
+    before_0, before_1 = files_of(0), files_of(1)
+    assert before_0 and before_1
+    # rewrite bucket 0 with IDENTICAL content; bucket 1 untouched
+    overwrite_partitions(
+        df.filter(F.col("bucket") == 0), path, ["bucket"]
+    )
+    after_0, after_1 = files_of(0), files_of(1)
+    # the written partition carries fresh names — zero overlap
+    assert after_0 and not (after_0 & before_0), (before_0, after_0)
+    # the skipped partition is bit-for-bit untouched
+    assert after_1 == before_1
+
+
 def test_changelog_written_and_streamed(spark, table):
     from parquet_rewriter_spark.operators.cdc import (
         CHANGE_TYPE_COL,

@@ -11,9 +11,11 @@ with no registered sidecar never lists or reads a sidecar directory.
 With bloom + distinct sketch + drift monitor registered the sidecars
 add 5 jobs to either (bloom 1, sketch 2, drift 2): a merge runs 9 and
 a compact 8. The bloom build of ``create`` is exactly one job — one
-shuffle-free scan whose rows the driver writes. A catalog query that
-owns a cache scope leaves no cache behind, so re-running it in the
-same session runs exactly the jobs its first run did.
+shuffle-free scan whose rows the driver writes. One ``SearchIndex.add``
+(doc-id check, docs merge, one postings merge) runs 10 jobs and a
+search of a current index 4 (its catch-up check runs none). A catalog
+query that owns a cache scope leaves no cache behind, so re-running it
+in the same session runs exactly the jobs its first run did.
 """
 
 from __future__ import annotations
@@ -118,6 +120,24 @@ def test_create_builds_blooms_in_one_job(spark, tmp_path, monkeypatch):
     t = _table(spark, str(tmp_path / "t"), bloom_cols=["grp", "v"])
     assert counted == [1]
     assert len(t.manifest().files) == 10
+
+
+def test_search_index_add_job_budget(spark, tmp_path):
+    from pyspark.sql import Row
+
+    from parquet_rewriter_spark.operators.search_index import SearchIndex
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"w{i % 13} w{i % 7} common") for i in range(200)]
+    )
+    idx = SearchIndex.build(spark, str(tmp_path / "idx"), docs, n_buckets=8)
+    batch = spark.createDataFrame(
+        [Row(doc_id=i, text=f"fresh{i} w{i % 3}") for i in (5, 50, 500, 501)]
+    )
+    res: dict = {}
+    assert _jobs(spark, lambda: res.update(idx.add(batch))) == 10
+    assert res["postings"]["refreshed"]
+    assert _jobs(spark, lambda: idx.search(["fresh5", "common"]).collect()) == 4
 
 
 @pytest.mark.parametrize(

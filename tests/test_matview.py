@@ -3,6 +3,8 @@ churn-proportional refresh, and the preimage CDC form it rides on."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -192,4 +194,76 @@ def test_refresh_rebuilds_after_history_vacuum(spark, base, tmp_path):
     merge_into_table(base, muts)
     res2 = mv.refresh()
     assert res2["refreshed"] and not res2.get("rebuilt")
+    assert _actual(mv) == _expected(base)
+
+
+def test_watermark_commits_with_the_view(spark, base, tmp_path):
+    mv = _mv(base, tmp_path)
+    mv.build()
+    assert mv.table().manifest().txns == {"matview": 0}
+    assert not os.path.exists(os.path.join(mv.path, "_mv_state.json"))
+    merge_into_table(
+        base,
+        base.read().filter(F.col("id") < 10).withColumn("val", F.lit(0.0))
+        .withColumn(OP_COLUMN, F.lit("UPSERT")),
+    )
+    mv.refresh()
+    assert mv.table().manifest().txns == {"matview": 1}
+
+
+def test_crash_after_view_commit_does_not_double_count(
+    spark, base, tmp_path, monkeypatch
+):
+    """The refresh dies right after the view merge returns: the view
+    already holds the deltas, and the next refresh must not add them
+    again — the watermark committed with them."""
+    from parquet_rewriter_spark.operators import matview
+
+    mv = _mv(base, tmp_path)
+    mv.build()
+    # 100 rows move to a new group; the groups they leave shrink
+    merge_into_table(
+        base,
+        base.read().filter(F.col("id") < 100).withColumn("grp", F.lit(777).cast("long"))
+        .withColumn(OP_COLUMN, F.lit("UPSERT")),
+    )
+    real = matview.merge_into_table
+
+    def commit_then_crash(*a, **k):
+        real(*a, **k)
+        raise RuntimeError("injected crash after the view commit")
+
+    monkeypatch.setattr(matview, "merge_into_table", commit_then_crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        mv.refresh()
+    monkeypatch.undo()
+    mv.refresh()
+    got = _actual(mv)
+    assert got == _expected(base)
+    assert {n for g, n, _ in got if g == 777} == {100}
+
+
+def test_empty_delta_leaves_watermark_behind_and_stays_exact(spark, base, tmp_path):
+    """A base commit with no net row change gives an empty delta: the
+    view merge commits nothing, so the watermark stays at the older
+    version. The next refresh diffs from there — snapshot_diff compares
+    two snapshots, it does not replay a log — and is still exact."""
+    mv = _mv(base, tmp_path)
+    mv.build()
+    same = base.read().filter(F.col("id") < 50).withColumn(OP_COLUMN, F.lit("UPSERT"))
+    merge_into_table(base, same)  # rewrites a file, changes no row
+    assert base.manifest().version == 1
+    res = mv.refresh()
+    assert res["refreshed"] and res["files_written"] == 0
+    assert mv.table().manifest().version == 0
+    assert mv.table().manifest().txns == {"matview": 0}
+
+    merge_into_table(
+        base,
+        base.read().filter(F.col("id") % 100 == 7).withColumn("val", F.col("val") + 1.0)
+        .withColumn(OP_COLUMN, F.lit("UPSERT")),
+    )
+    res = mv.refresh()
+    assert (res["base_from"], res["base_to"]) == (0, 2)
+    assert mv.table().manifest().txns == {"matview": 2}
     assert _actual(mv) == _expected(base)

@@ -299,6 +299,51 @@ def test_stream_maintain_aggregate_end_to_end(spark, tmp_path, sf_dir):
     assert tbl.read().count() == ev_batch.count()
 
 
+def test_stream_maintain_aggregate_refreshes_a_replayed_epoch(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after an epoch's base commit but before the view refresh:
+    the replayed epoch's base merge is skipped, and the view must still
+    catch up (it was the drain's last batch, so nothing else would)."""
+    from parquet_rewriter_spark.operators.matview import MaterializedAggregate
+    from parquet_rewriter_spark.streaming import stream_maintain_aggregate
+    from parquet_rewriter_spark.table import SortedTable
+
+    df = spark.range(0, 1_000).select(
+        F.col("id"), (F.col("id") % 10).alias("grp"), F.lit(1.0).alias("val")
+    )
+    tbl = SortedTable.create(spark, str(tmp_path / "base"), df, key="id",
+                             max_records_per_file=250)
+    mv = MaterializedAggregate(
+        tbl, str(tmp_path / "mv"), group_col="grp",
+        aggs={"n": ("count",), "total": ("sum", "val")},
+    )
+    mv.build()
+    src = str(tmp_path / "src")
+    df.filter(F.col("id") % 4 == 0).withColumn("grp", F.lit(42).cast("long")) \
+        .coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+
+    def crash(self):
+        raise RuntimeError("injected crash before the view refresh")
+
+    monkeypatch.setattr(MaterializedAggregate, "refresh", crash)
+    with pytest.raises(Exception, match="injected"):
+        stream_maintain_aggregate(stream, mv, checkpoint_dir=ckpt, timeout_s=120)
+    monkeypatch.undo()
+    assert tbl.manifest().txns == {"matview_stream": 0}  # the base commit landed
+
+    stream_maintain_aggregate(stream, mv, checkpoint_dir=ckpt, timeout_s=120)
+    want = {
+        (r["grp"], r["n"], r["total"])
+        for r in tbl.read().groupBy("grp")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("val").alias("total")).collect()
+    }
+    assert {(r["grp"], r["n"], r["total"]) for r in mv.read().collect()} == want
+    assert (42, 250, 250.0) in want
+
+
 def test_stream_heavy_hitters_matches_exact_across_batches(spark, tmp_path, sf_dir):
     """State carries across micro-batches: 3 files, one per trigger; the
     final per-shard summaries (capacity >> distinct) hold exact counts."""

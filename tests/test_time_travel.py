@@ -149,11 +149,20 @@ def test_commit_conflict_detection(spark, tmp_path):
     df = spark.range(0, 2_000).select(F.col("id"), (F.col("id") * 3).alias("v"))
     t = SortedTable.create(spark, str(tmp_path / "occ"), df, key="id")
 
-    # simulate a competing writer claiming version 1 first
+    # simulate a competing writer claiming version 1 while the merge
+    # runs: after it planned against v0, before its own claim (a claim
+    # made before the merge starts is simply the current version)
     winner = t.manifest()
     winner.version = 1
-    with open(os.path.join(t.path, "_manifest.v1.json"), "w") as fh:
-        fh.write(winner.to_json())
+    adopt = t._adopt_staged
+
+    def adopt_then_lose_the_race(*a, **k):
+        out = adopt(*a, **k)
+        with open(os.path.join(t.path, "_manifest.v1.json"), "w") as fh:
+            fh.write(winner.to_json())
+        return out
+
+    t._adopt_staged = adopt_then_lose_the_race
 
     muts = (
         spark.range(0, 5)

@@ -209,3 +209,40 @@ def test_concurrent_writers_with_retry_lose_nothing(spark, tmp_path):
             for i in range(50):
                 expected[i + 2000 + w * 1000 + j * 100] = float(w * 10 + j)
     assert got == expected
+
+
+def test_crash_between_claim_and_pointer_write_does_not_wedge(
+    spark, table, monkeypatch
+):
+    """The claimed snapshot is the commit point: a writer that dies after
+    claiming v1 but before moving the ``_manifest.json`` pointer leaves
+    v1 committed, and the next writer commits v2 on top of it."""
+    import os
+
+    m1, m2 = _mut(spark, table, -1, 11), _mut(spark, table, -2, 22)
+    real = os.replace
+    fired = []
+
+    def crash_at_pointer(src, dst, *a, **k):
+        if os.path.basename(dst) == "_manifest.json" and not fired:
+            fired.append(dst)
+            raise OSError("injected crash before the pointer write")
+        return real(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "replace", crash_at_pointer)
+    with pytest.raises(OSError, match="injected"):
+        merge_into_table(table, m1, txn=("app", 1))
+    monkeypatch.undo()
+    assert fired
+    m = table.manifest()
+    assert (m.version, m.txns) == (1, {"app": 1})
+    assert merge_into_table(table, m1, txn=("app", 1))["skipped_txn_replay"]
+    merge_into_table(table, m2)
+    assert table.manifest().version == 2
+    got = {
+        r["o_orderkey"]: r["o_custkey"]
+        for r in table.read().filter(F.col("o_orderkey") < 0).collect()
+    }
+    assert got == {-1: 11, -2: 22}
+    table.fsck(repair=True, min_age_s=0)
+    assert table.validate()["ok"]
