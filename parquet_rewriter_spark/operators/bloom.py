@@ -299,14 +299,6 @@ def read_point(table: "SortedTable", col: str, values: Sequence[Any]) -> DataFra
     cand = candidate_files(table, pcol, values)
     if cand is None:
         return table.read().filter(F.col(col).isin(list(values)))
-    if not cand:
-        import json
-
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(m.schema_json))
-        return table._to_logical(table.spark.createDataFrame([], schema), m)
-    df = table.apply_dv(
-        table._reader(m).parquet(*[os.path.join(table.path, n) for n in cand]), m
-    )
+    keep = set(cand)
+    df = table.read_physical(m=m, entries=[e for e in m.files if e.name in keep])
     return table._to_logical(df.filter(F.col(pcol).isin(list(values))), m)

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
@@ -105,16 +106,20 @@ def branch_diff(table: SortedTable, name: str) -> DataFrame:
     return snapshot_diff(get_branch(table, name), 0)
 
 
-def _adopt(table: SortedTable, src: SortedTable, operation: str) -> int:
-    """Link ``src``'s files missing from the main dir, then commit
-    ``src``'s head manifest as main's next version (WAP's publish
-    step, shared verbatim semantics)."""
-    main_m = table.manifest()
+def _adopt(
+    table: SortedTable, src: SortedTable, base: Manifest, operation: str
+) -> int:
+    """Publish ``src``'s head as main's next version after ``base``, the
+    main snapshot ``src`` was cloned from (the one publish path of
+    branches and WAP): link ``src``'s files and tombstone parts main
+    lacks, then commit ``base``'s successor with ``src``'s data, schema
+    and names; main's sidecar registrations live on and the txn
+    watermarks of both merge. Claiming ``base.version + 1`` raises
+    ``CommitConflictError`` when main committed since the clone."""
     src_m = src.manifest()
-    have = {e.name for e in main_m.files}
     for e in src_m.files:
         dst = os.path.join(table.path, e.name)
-        if e.name not in have and not os.path.exists(dst):
+        if not os.path.exists(dst):
             os.link(os.path.join(src.path, e.name), dst)
     for rel in src_m.dv_files:
         src_dir, dst_dir = os.path.join(src.path, rel), os.path.join(table.path, rel)
@@ -124,22 +129,21 @@ def _adopt(table: SortedTable, src: SortedTable, operation: str) -> int:
                 os.path.join(dst_dir, part)
             ):
                 os.link(os.path.join(src_dir, part), os.path.join(dst_dir, part))
-    new_v = main_m.version + 1
     table._commit_manifest(
-        Manifest(
-            version=new_v,
+        replace(
+            base,
+            version=base.version + 1,
             key=src_m.key,
-            files=list(src_m.files),
+            files=src_m.files,
             schema_json=src_m.schema_json,
-            stats_cols=list(src_m.stats_cols),
-            bloom_cols=list(main_m.bloom_cols),  # main's sidecar lives on
-            dv_files=list(src_m.dv_files),
+            stats_cols=src_m.stats_cols,
+            dv_files=src_m.dv_files,
+            rename_map=src_m.rename_map,
+            txns={**base.txns, **src_m.txns},
             operation=operation,
-            rename_map=dict(src_m.rename_map or {}),
-            txns={**(main_m.txns or {}), **(src_m.txns or {})},
         )
     )
-    return new_v
+    return base.version + 1
 
 
 def fast_forward(table: SortedTable, name: str) -> dict[str, Any]:
@@ -153,7 +157,10 @@ def fast_forward(table: SortedTable, name: str) -> dict[str, Any]:
             f"since branch {name!r} forked; rebase_branch() first"
         )
     br = get_branch(table, name)
-    v = _adopt(table, br, operation=f"branch-publish {name}")
+    v = _adopt(
+        table, br, table.manifest(st["base_version"]),
+        operation=f"branch-publish {name}",
+    )
     table._set_branch_ref(name, {"base_version": v})
     return {**st, "published_version": v}
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import MapType
@@ -69,40 +70,26 @@ def snapshot_diff(
 
     old_names = {e.name for e in m_old.files}
     new_names = {e.name for e in m_new.files}
-    removed = [os.path.join(table.path, n) for n in sorted(old_names - new_names)]
-    added = [os.path.join(table.path, n) for n in sorted(new_names - old_names)]
+    removed = [e for e in m_old.files if e.name not in new_names]
 
-    # PHYSICAL-name frame: the diff below reads churned files through
-    # _reader (physical) and unions against this schema; renames are
+    # PHYSICAL-name frames of the churned files: renames are
     # presentation-layer and applied (when requested) as the very last
     # projection, so changelog STORAGE stays physical (like Delta's CDF
-    # under column mapping) while direct consumers see logical names
-    schema_df = table.read_physical(
-        version=m_new.version if to_version is not None else None
+    # under column mapping) while direct consumers see logical names.
+    # Both sides are read with the TO-version schema PINNED (files
+    # written before an additive schema evolution null-fill the newer
+    # columns) and minus their own snapshot's tombstones — each
+    # snapshot's logical contents are (files − tombstones); a key
+    # tombstoned in BOTH versions was already dead before the window
+    # and emits nothing.
+    old = table.read_physical(
+        m=replace(m_old, schema_json=m_new.schema_json), entries=removed
     )
-    cols = schema_df.columns
+    new = table.read_physical(
+        m=m_new, entries=[e for e in m_new.files if e.name not in old_names]
+    )
+    cols = new.columns
     payload_cols = [c for c in cols if c != key]
-
-    spark = table.spark
-    empty = spark.createDataFrame([], schema_df.schema)
-    # read churned files with the TO-version schema PINNED: files written
-    # before an additive schema evolution lack the newer columns and must
-    # null-fill (a bare read would fail selecting them); pinning also
-    # skips footer inference
-    reader = table._reader(m_new)
-    old = reader.parquet(*removed) if removed else empty
-    new = reader.parquet(*added) if added else empty
-
-    # Merge-on-read deletion vectors: each snapshot's logical contents
-    # are (files − tombstones), so subtract each side's own DV set from
-    # its churned-file read. A key tombstoned in BOTH versions was
-    # already dead before the window and emits nothing.
-    dv_old = table.dv_keys(m_old)
-    dv_new = table.dv_keys(m_new)
-    if dv_old is not None:
-        old = old.join(dv_old.select(key).distinct(), on=key, how="left_anti")
-    if dv_new is not None:
-        new = new.join(dv_new.select(key).distinct(), on=key, how="left_anti")
 
     # A DV-only delete commit changes NO data files — the churn scope
     # must additionally include rows tombstoned (between the versions)
@@ -116,10 +103,14 @@ def snapshot_diff(
         if e.name in old_names and e.dv_rows > old_dv_rows.get(e.name, 0)
     ]
     if grown:
-        delta = dv_new.filter(F.col("file").isin(grown)).select(key).distinct()
+        delta = (
+            table.dv_keys(m_new).filter(F.col("file").isin(grown))
+            .select(key).distinct()
+        )
+        dv_old = table.dv_keys(m_old)
         if dv_old is not None:
             delta = delta.join(dv_old.select(key), on=key, how="left_anti")
-        tomb_rows = reader.parquet(
+        tomb_rows = table._reader(m_new).parquet(
             *[os.path.join(table.path, n) for n in grown]
         ).join(delta, on=key, how="left_semi")
         old = old.unionByName(tomb_rows) if removed else tomb_rows

@@ -93,7 +93,7 @@ def compact(
     m = table.manifest()
     # physical-name read: compaction rewrites files, and files keep
     # PHYSICAL column names forever (rename_map is metadata-only)
-    df = table.read_physical()  # applies merge-on-read DVs: the rewrite makes them physical
+    df = table.read_physical(m=m)  # applies merge-on-read DVs: the rewrite makes them physical
     t0 = time.monotonic()
     staging = _write_rechunked(
         table, df, m, m.files, max_records_per_file, num_files
@@ -101,16 +101,9 @@ def compact(
     entries = table._adopt_staged(staging, m.key)
     t_write = time.monotonic() - t0
     t0 = time.monotonic()
-    t_sidecar = table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=m.key,
-            files=sorted(entries, key=lambda e: (e.key_min, e.name)),
-            schema_json=m.schema_json or df.schema.json(),
-            stats_cols=m.stats_cols,
-            dv_files=[],  # every tombstone materialized by the full rewrite
-            operation="compact",
-        )
+    t_sidecar = table._commit_rewrite(
+        m, m.files, entries,
+        schema_json=m.schema_json or df.schema.json(), operation="compact",
     )
     t_commit = time.monotonic() - t0 - t_sidecar
     return {
@@ -173,29 +166,10 @@ def purge_columns(
     total_rows = sum(e.rows for e in dirty)
     if max_records_per_file is None:
         max_records_per_file = max(1, -(-total_rows // len(dirty)))
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in dirty]
-    )
-    dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-    if dv is not None:
-        from pyspark.sql import functions as F
-
-        df = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    df = table.read_physical(m=m, entries=dirty)
     staging = _write_rechunked(table, df, m, dirty, max_records_per_file)
     new_entries = table._adopt_staged(staging, m.key)
-    from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
-
-    table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=m.key,
-            files=sorted(keep + new_entries, key=lambda e: (e.key_min, e.name)),
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
-            dv_files=retain_dv(table, m, {e.name for e in keep}),
-            operation="purge-columns",
-        )
-    )
+    table._commit_rewrite(m, dirty, new_entries, operation="purge-columns")
     return {
         "version": m.version + 1,
         "files_rewritten": len(dirty),
@@ -249,11 +223,7 @@ def backfill_column(
     batch = missing if batch_files is None else missing[:batch_files]
     if not batch:
         return {"version": m.version, "files_rewritten": 0, "files_remaining": 0}
-    batch_names = {e.name for e in batch}
-    keep = [e for e in m.files if e.name not in batch_names]
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in batch]
-    )
+    df = table.read_physical(m=m, entries=batch)
     # expr speaks LOGICAL names; files keep physical ones forever
     logical = table._to_logical(df, m)
     filled = logical.withColumn(name, expr)
@@ -262,25 +232,12 @@ def backfill_column(
     filled = filled.select(
         *[F.col(c).alias(back.get(c, c)) for c in filled.columns]
     )
-    dv = table.dv_keys(m, files={e.name for e in batch if e.dv_rows})
-    if dv is not None:
-        filled = filled.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
     staging = _write_rechunked(
         table, filled, m, batch, None, num_files=len(batch)
     )
     new_entries = table._adopt_staged(staging, m.key)
-    from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
-
-    table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=m.key,
-            files=sorted(keep + new_entries, key=lambda e: (e.key_min, e.name)),
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
-            dv_files=retain_dv(table, m, {e.name for e in keep}),
-            operation=f"backfill-column {name}",
-        )
+    table._commit_rewrite(
+        m, batch, new_entries, operation=f"backfill-column {name}"
     )
     return {
         "version": m.version + 1,
@@ -306,12 +263,9 @@ def compact_incremental(
     zone maps stay exact, pruning marginally looser; the alternative,
     one job per run, does not survive manifests with thousands of runs.)
     """
-    import os
-
     m = table.manifest()
     threshold = max(1, int(target_records_per_file * min_fill))
     small = [e for e in m.files if e.rows < threshold]
-    keep = [e for e in m.files if e.rows >= threshold]
     if len(small) < 2:  # nothing to heal (a single small file can't merge with itself)
         return {
             "version": m.version,
@@ -323,36 +277,19 @@ def compact_incremental(
         }
     total_rows = sum(e.rows for e in small)
     n_files = max(1, -(-total_rows // target_records_per_file))  # ceil
-    df = table.spark.read.parquet(*[os.path.join(table.path, e.name) for e in small])
     # tombstones of the rewritten subset become physical here; tombstones
-    # of passthrough files carry forward via retain_dv
-    dv = table.dv_keys(m, files={e.name for e in small if e.dv_rows})
-    if dv is not None:
-        from pyspark.sql import functions as F
-
-        df = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    # of passthrough files carry forward
+    df = table.read_physical(m=m, entries=small)
     staging = _write_rechunked(
         table, df, m, small, target_records_per_file, num_files=n_files
     )
     new_entries = table._adopt_staged(staging, m.key)
-    from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
-
-    table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=m.key,
-            files=sorted(keep + new_entries, key=lambda e: (e.key_min, e.name)),
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
-            dv_files=retain_dv(table, m, {e.name for e in keep}),
-            operation="compact-incremental",
-        )
-    )
+    table._commit_rewrite(m, small, new_entries, operation="compact-incremental")
     return {
         "version": m.version + 1,
         "files_before": len(m.files),
         "files_compacted": len(small),
-        "files_passthrough": len(keep),
+        "files_passthrough": len(m.files) - len(small),
         "files_written": len(new_entries),
         "rows_rewritten": sum(e.rows for e in new_entries),
     }

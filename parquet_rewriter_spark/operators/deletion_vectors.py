@@ -22,7 +22,7 @@ row lives in a new, untombstoned file).
 
 Lifecycle:
 - ``delete_keys_mor``     — write tombstones (no data file touched)
-- ``SortedTable.read``    — subtracts tombstones (table.py:apply_dv)
+- ``SortedTable.read``    — subtracts tombstones (table.py:read_physical)
 - ``merge_into_table``    — applies + drops tombstones of rewritten
                             files (operators/merge.py)
 - ``materialize_deletes`` — rewrites ONLY tombstoned files, physically
@@ -37,10 +37,11 @@ from __future__ import annotations
 
 import os
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, functions as F
 
-from parquet_rewriter_spark.table import Manifest, ManifestEntry, SortedTable
+from parquet_rewriter_spark.table import Manifest, SortedTable
 
 DV_DIR = "_dv"
 
@@ -76,15 +77,11 @@ def delete_keys_mor(table: SortedTable, keys: DataFrame) -> dict:
     # Resolve (file, key) for keys that exist and are not already
     # tombstoned. Only the key column is read (columnar projection) —
     # the scan touches one column of the covered files.
-    paths = [os.path.join(table.path, e.name) for e in covered]
     base = (
-        spark.read.parquet(*paths)
-        .select(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"), key)
+        table.read_physical(m=m, entries=covered)
+        .select(F.col("_metadata.file_name").alias("file"), key)
         .join(keys, on=key, how="left_semi")
     )
-    existing = table.dv_keys(m)
-    if existing is not None:
-        base = base.join(existing.select(key), on=key, how="left_anti")
 
     rel = f"{DV_DIR}/dv-{uuid.uuid4().hex}"
     out = os.path.join(table.path, rel)
@@ -102,25 +99,14 @@ def delete_keys_mor(table: SortedTable, keys: DataFrame) -> dict:
         shutil.rmtree(out, ignore_errors=True)
         return {"version": m.version, "files_covered": len(covered), "dv_rows_added": 0}
 
-    files = [
-        ManifestEntry(
-            name=e.name,
-            rows=e.rows,
-            bytes=e.bytes,
-            key_min=e.key_min,
-            key_max=e.key_max,
-            col_stats=e.col_stats,
-            dv_rows=e.dv_rows + per_file.get(e.name, 0),
-        )
-        for e in m.files
-    ]
     table._commit_manifest(
-        Manifest(
+        replace(
+            m,
             version=m.version + 1,
-            key=key,
-            files=files,
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
+            files=[
+                replace(e, dv_rows=e.dv_rows + per_file.get(e.name, 0))
+                for e in m.files
+            ],
             dv_files=m.dv_files + [rel],
             operation="delete (merge-on-read)",
         )
@@ -192,28 +178,13 @@ def materialize_deletes(table: SortedTable, max_records_per_file: int | None = N
     if not dvd:
         return {"version": m.version, "files_rewritten": 0, "rows_dropped": 0}
 
-    dv = table.dv_keys(m)
-    assert dv is not None
-    reader = table._reader(m)
-    df = reader.parquet(*[os.path.join(table.path, e.name) for e in dvd])
-    live = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
-
     mrpf = max_records_per_file or max((e.rows for e in m.files), default=1_000_000)
     from parquet_rewriter_spark.operators.compact import _write_rechunked
 
+    live = table.read_physical(m=m, entries=dvd)
     staging = _write_rechunked(table, live, m, dvd, mrpf)
     new_entries = table._adopt_staged(staging, m.key)
-    table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=m.key,
-            files=sorted(clean + new_entries, key=lambda e: (e.key_min, e.name)),
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
-            dv_files=[],  # every tombstone is now physical
-            operation="materialize-deletes",
-        )
-    )
+    table._commit_rewrite(m, dvd, new_entries, operation="materialize-deletes")
     return {
         "version": m.version + 1,
         "files_rewritten": len(dvd),

@@ -26,6 +26,7 @@ lgConfigK=12 gives ~1.6% standard error at ~2.5 KB per sketch.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 from typing import Any
 
 import pyarrow as pa
@@ -132,21 +133,13 @@ def enable_distinct_sketches(
     it writes and ``maintain()`` heals any gaps, so
     ``approx_distinct_range`` stays scan-free and current without
     explicit refresh calls."""
-    from parquet_rewriter_spark.table import Manifest
-
     m = table.manifest()
     pcols = [table.to_physical(c, m) for c in cols]
-    want = sorted(set(m.sketch_cols or []) | set(pcols))
-    if want != sorted(m.sketch_cols or []):
+    want = sorted(set(m.sketch_cols) | set(pcols))
+    if want != sorted(m.sketch_cols):
         table._commit_manifest(
-            Manifest(
-                version=m.version + 1,
-                key=m.key,
-                files=list(m.files),
-                schema_json=m.schema_json,
-                stats_cols=m.stats_cols,
-                sketch_cols=want,
-                dv_files=list(m.dv_files),
+            replace(
+                m, version=m.version + 1, sketch_cols=want,
                 operation=f"enable-distinct-sketches {','.join(cols)}",
             )
         )

@@ -37,6 +37,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+from dataclasses import replace
 from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, functions as F
@@ -156,8 +157,6 @@ def enable_drift_monitor(
     JSON-native (numbers or strings) — they persist in the manifest.
     The spec stores PHYSICAL column names (rename-safe, like
     sketch_cols)."""
-    from parquet_rewriter_spark.table import Manifest
-
     for e in edges:
         if not isinstance(e, (int, float, str)) or isinstance(e, bool):
             raise ValueError(
@@ -172,17 +171,9 @@ def enable_drift_monitor(
     have = list(m.drift_specs or [])
     if spec not in have:
         table._commit_manifest(
-            Manifest(
-                version=m.version + 1,
-                key=m.key,
-                files=list(m.files),
-                schema_json=m.schema_json,
-                stats_cols=m.stats_cols,
-                drift_specs=have + [spec],
-                dv_files=list(m.dv_files),
-                operation=(
-                    f"enable-drift-monitor {value_col} by {group_col}"
-                ),
+            replace(
+                m, version=m.version + 1, drift_specs=have + [spec],
+                operation=f"enable-drift-monitor {value_col} by {group_col}",
             )
         )
     return build_drift_stats(table, value_col, group_col, edges)
@@ -200,8 +191,6 @@ def disable_drift_monitor(
     import shutil
     import uuid
 
-    from parquet_rewriter_spark.table import Manifest
-
     m = table.manifest()
     pv = table.to_physical(value_col, m)
     pg = table.to_physical(group_col, m)
@@ -210,14 +199,9 @@ def disable_drift_monitor(
     if spec not in have:
         return False
     table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=m.key,
-            files=list(m.files),
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
+        replace(
+            m, version=m.version + 1,
             drift_specs=[s for s in have if s != spec],
-            dv_files=list(m.dv_files),
             operation=f"disable-drift-monitor {value_col} by {group_col}",
         )
     )

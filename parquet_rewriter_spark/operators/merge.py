@@ -32,6 +32,7 @@ collect to the driver.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 from typing import Iterator, Sequence
 
@@ -729,7 +730,6 @@ def merge_into_table(
     splitter (operators/quality.py). DELETE rows are exempt (their
     payload columns are not being written).
     """
-    import os
     import time
 
     spark = table.spark
@@ -851,8 +851,9 @@ def merge_into_table(
         # always pin the (possibly widened) stored schema: files written
         # before a previous ADD COLUMN need it to null-fill on read
         read_schema = StructType(widened_fields + new_fields)
+        m_read = dataclasses.replace(m, schema_json=read_schema.json())
     else:
-        read_schema = None
+        read_schema, m_read = None, m
     # The mutation stream is consumed twice — a key-only planning pass,
     # then the merge itself. Do NOT persist the full mutation rows for
     # that: caching materializes every column before planning can start,
@@ -890,16 +891,10 @@ def merge_into_table(
             return res
 
     if dirty:
-        reader = spark.read if read_schema is None else spark.read.schema(read_schema)
-        base_dirty = reader.parquet(*[os.path.join(table.path, e.name) for e in dirty])
-        # merge-on-read deletion vectors: subtract tombstones of the
-        # dirty files before merging — the rewrite makes them physical
-        # (their sidecar entries are retired at commit below)
-        dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-        if dv is not None:
-            base_dirty = base_dirty.join(
-                dv.select(key).distinct(), on=key, how="left_anti"
-            )
+        # the dirty files minus their tombstones, read with the widened
+        # schema — the rewrite makes those deletes physical (their DV
+        # entries retire at commit below)
+        base_dirty = table.read_physical(m=m_read, entries=dirty)
         min_bytes = (
             BUCKET_WRITE_MIN_BYTES
             if bucket_write_min_bytes is None
@@ -1028,25 +1023,11 @@ def merge_into_table(
     t0 = time.monotonic()
     t_sidecar = 0.0
     if dirty or new_entries:
-        from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
-
-        files = sorted(clean + new_entries, key=lambda e: (e.key_min, e.name))
-        t_sidecar = table._commit_manifest(
-            Manifest(
-                version=m.version + 1,
-                key=key,
-                files=files,
-                schema_json=(
-                    read_schema.json()
-                    if read_schema is not None
-                    else (m.schema_json
-                          or merged.drop(_BUCKET).schema.json())
-                ),
-                stats_cols=m.stats_cols,
-                dv_files=retain_dv(table, m, {e.name for e in clean}),
-                operation="merge",
-                txns={**m.txns, txn[0]: txn[1]} if txn else {},
-            )
+        t_sidecar = table._commit_rewrite(
+            m, dirty, new_entries,
+            schema_json=m_read.schema_json or merged.drop(_BUCKET).schema.json(),
+            operation="merge",
+            txns={**m.txns, **dict([txn] if txn else ())},
         )
         version = m.version + 1
     else:
@@ -1115,20 +1096,11 @@ def _try_splice(table, m, dirty, clean, mutations, key, t_plan, txn=None) -> dic
         return None  # any dtype/stats/overlap surprise → distributed path
 
     t0 = time.monotonic()
-    files = sorted(clean + new_entries, key=lambda e: (e.key_min, e.name))
     # splice is only taken when no DIRTY file is tombstoned, so every
-    # dv'd file survives in `clean` and the sidecar list carries over
-    t_sidecar = table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=key,
-            files=files,
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
-            dv_files=list(m.dv_files),
-            operation="merge (rowgroup-splice)",
-            txns={**m.txns, txn[0]: txn[1]} if txn else {},
-        )
+    # dv'd file survives and the sidecar list carries over
+    t_sidecar = table._commit_rewrite(
+        m, dirty, new_entries, operation="merge (rowgroup-splice)",
+        txns={**m.txns, **dict([txn] if txn else ())},
     )
     t_commit = time.monotonic() - t0 - t_sidecar
     return {

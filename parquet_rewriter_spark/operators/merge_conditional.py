@@ -182,13 +182,10 @@ def merge_conditional_into_table(
     name. With them, every base row is a candidate and the whole table
     goes dirty — stated cost, same as Delta.
     """
-    import os
     import time
 
-    from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
     from parquet_rewriter_spark.operators.merge import plan_dirty_files
     from parquet_rewriter_spark.operators.util import cache_scope, persist
-    from parquet_rewriter_spark.table import Manifest
 
     from pyspark import StorageLevel
 
@@ -205,21 +202,7 @@ def merge_conditional_into_table(
             dirty, clean = plan_dirty_files(spark, m, source)
         t_plan = time.monotonic() - t0
 
-        if dirty:
-            base = table._reader(m).parquet(
-                *[os.path.join(table.path, e.name) for e in dirty]
-            )
-            dv = table.dv_keys(m, files={e.name for e in dirty if e.dv_rows})
-            if dv is not None:
-                base = base.join(dv.select(key).distinct(), on=key, how="left_anti")
-        else:
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            base = spark.createDataFrame(
-                [], StructType.fromJson(_json.loads(m.schema_json))
-            )
+        base = table.read_physical(m=m, entries=dirty)
         merged = conditional_merge(
             base, source, key, matched, not_matched, not_matched_by_source
         )
@@ -236,18 +219,7 @@ def merge_conditional_into_table(
     new_entries = table._adopt_staged(staging, key)
     t_write = time.monotonic() - t0
 
-    files = sorted(clean + new_entries, key=lambda e: (e.key_min, e.name))
-    table._commit_manifest(
-        Manifest(
-            version=m.version + 1,
-            key=key,
-            files=files,
-            schema_json=m.schema_json,
-            stats_cols=m.stats_cols,
-            dv_files=retain_dv(table, m, {e.name for e in clean}),
-            operation="merge (conditional)",
-        )
-    )
+    table._commit_rewrite(m, dirty, new_entries, operation="merge (conditional)")
     return {
         "version": m.version + 1,
         "files_dirty": len(dirty),

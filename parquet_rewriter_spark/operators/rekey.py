@@ -42,11 +42,12 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 
 from parquet_rewriter_spark.stats import collect_file_stats
-from parquet_rewriter_spark.table import Manifest, ManifestEntry, SortedTable
+from parquet_rewriter_spark.table import Manifest, SortedTable
 
 STATE_FILE = "_rekey.json"
 
@@ -77,10 +78,7 @@ def _check_unique_key(table: SortedTable, m: Manifest, pkey: str) -> None:
     """One scan, run once at migration start: merge semantics require
     the sort key to be unique and non-null — discovering that 80% of
     the way through a 100 TB rewrite would be operationally brutal."""
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in m.files]
-    )
-    col = table.apply_dv(df, m).select(F.col(pkey).alias("__k"))
+    col = table.read_physical(m=m).select(F.col(pkey).alias("__k"))
     # ONE pass answers both preconditions: the duplicate check needed
     # the full per-key groupBy anyway (a limit(1) after a groupBy
     # still pays the whole shuffle), and the null probe folds into the
@@ -174,17 +172,15 @@ def rekey_table(
         entries = []
         for e in m.files:
             s = by_path[e.name]
-            entries.append(ManifestEntry(
-                name=e.name, rows=e.rows, bytes=e.bytes,
-                key_min=s.key_min, key_max=s.key_max,
+            entries.append(replace(
+                e, key_min=s.key_min, key_max=s.key_max,
                 col_stats={c: list(mm) for c, mm in s.col_stats.items()},
-                dv_rows=e.dv_rows,
             ))
-        table._commit_manifest(Manifest(
+        table._commit_manifest(replace(
+            m,
             version=m.version + 1,
             key=pkey_new,
             files=sorted(entries, key=lambda e: (e.key_min, e.name)),
-            schema_json=m.schema_json,
             stats_cols=stats_cols,
             # sidecars key tombstones by the OLD physical key; the guard
             # above re-rewrote every dv-bearing file, so whatever is left
@@ -198,17 +194,9 @@ def rekey_table(
                 "files_rewritten": 0, "files_remaining": 0}
 
     batch = todo if batch_files is None else todo[:batch_files]
-    batch_names = {e.name for e in batch}
-    keep = [e for e in m.files if e.name not in batch_names]
-
-    df = table._reader(m).parquet(
-        *[os.path.join(table.path, e.name) for e in batch]
-    )
-    # make merge-on-read tombstones physical for the batch (their DV
-    # entries retire at commit, like merge/backfill do)
-    dv = table.dv_keys(m, files={e.name for e in batch if e.dv_rows})
-    if dv is not None:
-        df = df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
+    # the batch minus its merge-on-read tombstones: the rewrite makes
+    # them physical (their DV entries retire at commit, like merge's)
+    df = table.read_physical(m=m, entries=batch)
 
     import time
 
@@ -225,18 +213,10 @@ def rekey_table(
     new_entries = table._adopt_staged(staging, m.key)
     t_write = time.monotonic() - t0
 
-    from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
-
     t0 = time.monotonic()
-    table._commit_manifest(Manifest(
-        version=m.version + 1,
-        key=m.key,
-        files=sorted(keep + new_entries, key=lambda e: (e.key_min, e.name)),
-        schema_json=m.schema_json,
-        stats_cols=m.stats_cols,
-        dv_files=retain_dv(table, m, {e.name for e in keep}),
-        operation=f"rekey-batch ({m.key} -> {pkey_new})",
-    ))
+    table._commit_rewrite(
+        m, batch, new_entries, operation=f"rekey-batch ({m.key} -> {pkey_new})"
+    )
     # state AFTER the commit: a crash in between re-rewrites this batch
     # (idempotent) rather than skipping an uncommitted one (data loss)
     state["done"] = done + [e.name for e in new_entries]

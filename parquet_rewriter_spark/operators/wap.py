@@ -32,7 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from parquet_rewriter_spark.operators.quality import check_constraints
-from parquet_rewriter_spark.table import Manifest, SortedTable
+from parquet_rewriter_spark.table import SortedTable
 
 
 def write_audit_publish(
@@ -49,6 +49,7 @@ def write_audit_publish(
     the right choice for row-local rules (non-null, ranges); global
     rules (uniqueness across the table) need the default full scan.
     """
+    from parquet_rewriter_spark.operators.branch import _adopt
     from parquet_rewriter_spark.operators.merge import merge_into_table
 
     base_m = table.manifest()
@@ -64,8 +65,8 @@ def write_audit_publish(
         base_names = {e.name for e in base_m.files}
         new_entries = [e for e in stage_m.files if e.name not in base_names]
         if audit_changed_only and new_entries:
-            audit_df = stage.spark.read.parquet(
-                *[os.path.join(stage.path, e.name) for e in new_entries]
+            audit_df = stage._to_logical(
+                stage.read_physical(m=stage_m, entries=new_entries), stage_m
             )
         else:
             audit_df = stage.read()
@@ -80,37 +81,15 @@ def write_audit_publish(
                 "version": base_m.version,  # table unchanged
             }
         # publish: link the new files into the table dir, commit the
-        # staged manifest as the next main-table version
-        for e in new_entries:
-            dst = os.path.join(table.path, e.name)
-            if not os.path.exists(dst):
-                os.link(os.path.join(stage.path, e.name), dst)
-        for rel in stage_m.dv_files:
-            src_dir = os.path.join(stage.path, rel)
-            dst_dir = os.path.join(table.path, rel)
-            os.makedirs(dst_dir, exist_ok=True)
-            for part in os.listdir(src_dir):
-                if not part.startswith(("_", ".")) and not os.path.exists(
-                    os.path.join(dst_dir, part)
-                ):
-                    os.link(os.path.join(src_dir, part), os.path.join(dst_dir, part))
-        table._commit_manifest(
-            Manifest(
-                version=base_m.version + 1,
-                key=stage_m.key,
-                files=list(stage_m.files),
-                schema_json=stage_m.schema_json,
-                stats_cols=stage_m.stats_cols,
-                dv_files=list(stage_m.dv_files),
-                operation="wap-publish",
-            )
-        )
+        # staged manifest as the next main-table version — the claim
+        # fails if main committed since the stage was cloned
+        version = _adopt(table, stage, base_m, operation="wap-publish")
         return {
             **stats,
             "published": True,
             "failed_rules": [],
             "audit": audit,
-            "version": base_m.version + 1,
+            "version": version,
         }
     finally:
         shutil.rmtree(stage_path, ignore_errors=True)

@@ -35,7 +35,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -111,43 +111,45 @@ def _decode_key_bound(v: Any) -> Any:
 
 @dataclass
 class Manifest:
+    """One snapshot of the table. A writer builds version N+1 from
+    version N with ``dataclasses.replace``, naming only the fields its
+    operation changes (``SortedTable._commit_rewrite`` for a file
+    rewrite); every other field — renames, sidecar registrations, txn
+    watermarks — carries from the parent by construction."""
+
     version: int
     key: str
     files: list[ManifestEntry] = field(default_factory=list)
-    # StructType JSON — lets an all-rows-deleted (zero-file) snapshot
-    # still be read as an empty, correctly-typed relation
+    # StructType JSON in PHYSICAL names — the pinned read schema: lets a
+    # zero-file snapshot read as an empty, correctly-typed relation and
+    # null-fills columns added after a file was written
     schema_json: str | None = None
     # columns (beyond the key) whose per-file min/max zone maps are
     # maintained across merges/compactions for read_where pruning
     stats_cols: list[str] = field(default_factory=list)
     # Sidecar registrations (operators/sidecar.py:SIDECARS): every
     # commit builds rows for the files it adds in each registered
-    # sidecar. ``None`` means "writer didn't think about it":
-    # _commit_manifest inherits the parent snapshot's value (same
-    # contract as rename_map/txns), so no commit drops a registration.
-    # columns with per-file Bloom filters (sidecar _blooms/) for
-    # point-lookup file skipping — see operators/bloom.py
-    bloom_cols: list[str] | None = None
-    # PHYSICAL column names with per-file distinct-count HLL sketches
-    # (sidecar _distinct/) — see operators/distinct_sketch.py
-    sketch_cols: list[str] | None = None
-    # registered drift monitors (sidecar _driftstats/) — each a
-    # JSON-native dict {"value": <physical col>, "group": <physical
-    # col>, "edges": [...numbers/strings...]}; see
-    # operators/driftstats.py:enable_drift_monitor
-    drift_specs: list | None = None
+    # sidecar. Columns with per-file Bloom filters (_blooms/, see
+    # operators/bloom.py); PHYSICAL columns with per-file distinct-count
+    # HLL sketches (_distinct/, operators/distinct_sketch.py); drift
+    # monitors (_driftstats/), each a JSON-native dict {"value": <physical
+    # col>, "group": <physical col>, "edges": [...]} (see
+    # operators/driftstats.py:enable_drift_monitor).
+    bloom_cols: list[str] = field(default_factory=list)
+    sketch_cols: list[str] = field(default_factory=list)
+    drift_specs: list = field(default_factory=list)
     # merge-on-read deletion-vector sidecars (relative paths under the
     # table dir, each a parquet dir of (file, <key>) tombstones) active
     # for THIS snapshot — see operators/deletion_vectors.py. Append-only
-    # across delete commits; rewritten (filtered) when a merge/compact
-    # drops a tombstoned file. Versioned like data files: historical
+    # across delete commits; a rewrite retires the tombstones of the
+    # files it replaced (deletion_vectors.retain_dv). Historical
     # manifests keep their own list, so time travel sees pre-delete rows.
     dv_files: list[str] = field(default_factory=list)
     # commit wall-time (ISO-8601 UTC), stamped at _commit_manifest —
     # lets read_asof() time-travel by timestamp, not just version
     committed_at: str | None = None
     # what produced this snapshot (create/merge/compact/...) — shown by
-    # history(); writers pass it via Manifest(..., operation=...)
+    # history()
     operation: str | None = None
     # transaction watermarks: app_id → highest epoch applied. The Delta
     # txn (appId, version) pattern on plain parquet: a merge tagged
@@ -157,20 +159,14 @@ class Manifest:
     # watermark here too: the matview's base version ("matview") and
     # the search postings' docs version ("search") commit in the same
     # flip as the refreshed rows, so a crashed refresh re-diffs from
-    # the last committed watermark. Writers that don't set it inherit
-    # the previous snapshot's map at commit.
+    # the last committed watermark.
     txns: dict[str, int] = field(default_factory=dict)
     # metadata-only RENAME COLUMN (Delta-style column mapping): physical
     # (in-file) column name → logical (user-visible) name. Files are
     # NEVER rewritten on rename — they keep writing/reading the physical
     # name forever; readers project physical→logical as their last step
     # and writers translate logical→physical mutations at entry.
-    # ``None`` means "writer didn't think about renames": _commit_manifest
-    # inherits the previous snapshot's map (same contract as txns), so a
-    # compact/merge/DDL commit can't silently drop a mapping. Writers
-    # that CHANGE the mapping (rename, drop of a renamed column) pass an
-    # explicit dict — possibly empty.
-    rename_map: dict[str, str] | None = None
+    rename_map: dict[str, str] = field(default_factory=dict)
 
     def to_json(self) -> str:
         files = []
@@ -189,14 +185,14 @@ class Manifest:
                 "key": self.key,
                 "schema_json": self.schema_json,
                 "stats_cols": self.stats_cols,
-                "bloom_cols": self.bloom_cols or [],
-                "sketch_cols": self.sketch_cols or [],
-                "drift_specs": self.drift_specs or [],
+                "bloom_cols": self.bloom_cols,
+                "sketch_cols": self.sketch_cols,
+                "drift_specs": self.drift_specs,
                 "dv_files": self.dv_files,
                 "committed_at": self.committed_at,
                 "operation": self.operation,
                 "txns": self.txns,
-                "rename_map": self.rename_map or {},
+                "rename_map": self.rename_map,
                 "files": files,
             },
             indent=1,
@@ -500,12 +496,14 @@ class SortedTable:
         then an ordinary atomic rename; it only ever moves forward,
         because every writer must win its version claim first.
 
-        ``parent`` is the snapshot ``m`` derives from (default: this
-        table's version ``m.version - 1``). Fields left ``None`` inherit
-        its values, and before the claim every sidecar ``m`` registers
-        gets rows for the files ``m`` adds over it
-        (operators/sidecar.py:build_new) — so a committed version never
-        lacks them. Returns the seconds spent on that sidecar upkeep.
+        ``m`` is the whole snapshot: a writer derives it from its
+        parent with ``dataclasses.replace`` (``_commit_rewrite`` for a
+        file rewrite), so nothing is filled in here. ``parent`` (default:
+        this table's version ``m.version - 1``) names the files already
+        covered: before the claim every sidecar ``m`` registers gets rows
+        for the files ``m`` adds over it (operators/sidecar.py:build_new)
+        — so a committed version never lacks them. Returns the seconds
+        spent on that sidecar upkeep.
         """
         from parquet_rewriter_spark.operators.sidecar import build_new
 
@@ -514,18 +512,6 @@ class SortedTable:
                 parent = self.manifest(m.version - 1)
             except ValueError:  # vacuumed history
                 pass
-        # carry what a writer didn't think about (column renames,
-        # sidecar registrations) — a merge/compact/DDL commit must not
-        # silently resurface physical names or stop sidecar upkeep
-        for name, kind in (("rename_map", dict), ("bloom_cols", list),
-                           ("sketch_cols", list), ("drift_specs", list)):
-            if getattr(m, name) is None:
-                setattr(m, name, kind(getattr(parent, name, None) or ()))
-        if not m.txns and parent is not None:
-            # carry the txn watermarks forward through commits that
-            # don't know about them (compact, DDL, WAP, DV deletes…) —
-            # otherwise a compaction would reopen the door to replays
-            m.txns = dict(parent.txns)
         snap = self._snapshot_path(m.version)
         lost = (
             f"version {m.version} of {self.path} was committed by another "
@@ -553,6 +539,31 @@ class SortedTable:
             fh.write(body)
         os.replace(tmp, self._manifest_path)
         return t_sidecar
+
+    def _commit_rewrite(
+        self, m: Manifest, replaced, new_entries, **changes: Any
+    ) -> float:
+        """Commit ``m``'s successor with ``replaced`` swapped for
+        ``new_entries`` — the commit of every rewrite (merge, compaction,
+        DV materialize, rekey batch). Untouched files pass through by
+        name, the replaced files' tombstones retire with them
+        (``deletion_vectors.retain_dv``: the rewrite read them through
+        ``read_physical``, which subtracted those tombstones), and every
+        other field is ``m``'s unless ``changes`` sets it. Returns
+        ``_commit_manifest``'s sidecar seconds."""
+        from parquet_rewriter_spark.operators.deletion_vectors import retain_dv
+
+        gone = {e.name for e in replaced}
+        keep = [e for e in m.files if e.name not in gone]
+        return self._commit_manifest(
+            replace(
+                m,
+                version=m.version + 1,
+                files=sorted(keep + list(new_entries), key=lambda e: (e.key_min, e.name)),
+                dv_files=retain_dv(self, m, {e.name for e in keep}),
+                **changes,
+            )
+        )
 
     def file_paths(self, m: Manifest | None = None) -> list[str]:
         m = m or self.manifest()
@@ -638,22 +649,45 @@ class SortedTable:
         return self._to_logical(self.read_physical(version, m=m), m)
 
     def read_physical(
-        self, version: int | None = None, m: Manifest | None = None
+        self,
+        version: int | None = None,
+        m: Manifest | None = None,
+        entries: "list[ManifestEntry] | None" = None,
     ) -> DataFrame:
         """Snapshot read in PHYSICAL column names — the frame internal
         rewrite paths (merge/compact/DV-materialize) must use, because
         files and the pinned schema keep physical names forever; only
-        the user-facing ``read`` projects to logical names."""
+        the user-facing ``read`` projects to logical names.
+
+        ``entries`` reads just that subset of ``m``'s files — the one
+        reader of every path that rewrites, deletes or prunes files: the
+        schema-pinned reader (``_reader``) over the subset, minus only
+        those files' merge-on-read tombstones (one anti-join on the key,
+        broadcast under the usual threshold since the DV set is small;
+        keys are unique, so a tombstone can only match the row it was
+        written for). An empty subset, or a zero-file snapshot, reads as
+        an empty relation typed by the manifest's stored schema."""
         m = m or self.manifest(version)
-        paths = self.file_paths(m)
-        if not paths:
+        if entries is None:
+            entries, dv = m.files, self.dv_keys(m)
+        else:
+            dv = self.dv_keys(m, files={e.name for e in entries if e.dv_rows})
+        if not entries:
             if m.schema_json is None:
                 raise ValueError(f"empty table at {self.path} (no schema recorded)")
             from pyspark.sql.types import StructType
 
             schema = StructType.fromJson(json.loads(m.schema_json))
             return self.spark.createDataFrame([], schema)
-        return self.apply_dv(self._reader(m).parquet(*paths), m)
+        df = self._reader(m).parquet(
+            *[os.path.join(self.path, e.name) for e in entries]
+        )
+        if dv is None:
+            return df
+        dv = dv.select(m.key).distinct()
+        # a join condition, not ``on=<name>``: the USING form's output
+        # projection would hide the scan's ``_metadata`` columns
+        return df.join(dv, df[m.key] == dv[m.key], "left_anti")
 
     # ---------- column-rename mapping (metadata-only RENAME COLUMN) ----------
     def _to_logical(self, df: DataFrame, m: Manifest) -> DataFrame:
@@ -700,15 +734,9 @@ class SortedTable:
         if new != p:
             rm[p] = new
         self._commit_manifest(
-            Manifest(
-                version=m.version + 1,
-                key=m.key,
-                files=m.files,
-                schema_json=m.schema_json,
-                stats_cols=m.stats_cols,
-                dv_files=list(m.dv_files),
+            replace(
+                m, version=m.version + 1, rename_map=rm,
                 operation=f"rename column ({old} -> {new})",
-                rename_map=rm,
             )
         )
         return m.version + 1
@@ -730,19 +758,6 @@ class SortedTable:
         if files is not None:
             dv = dv.filter(F.col("file").isin(sorted(files)))
         return dv
-
-    def apply_dv(self, df: DataFrame, m: Manifest | None = None) -> DataFrame:
-        """Drop tombstoned rows from a snapshot scan (one anti-join on
-        the key; correct table-wide because keys are unique, so a
-        tombstone can only ever match the row it was written for). The
-        DV set is tiny relative to the table — Spark auto-broadcasts it
-        under the usual threshold, so at scale this is a broadcast anti
-        join on the scan, not a shuffle."""
-        m = m or self.manifest()
-        dv = self.dv_keys(m)
-        if dv is None:
-            return df
-        return df.join(dv.select(m.key).distinct(), on=m.key, how="left_anti")
 
     def _reader(self, m: Manifest):
         """Reader pinned to the snapshot's stored schema: files written
@@ -778,17 +793,7 @@ class SortedTable:
             if (upper is None or e.key_min <= upper)
             and (lower is None or e.key_max >= lower)
         ]
-        if not entries:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m.schema_json))
-            return self.spark.createDataFrame([], schema)
-        df = self.apply_dv(
-            self._reader(m).parquet(
-                *[os.path.join(self.path, e.name) for e in entries]
-            ),
-            m,
-        )
+        df = self.read_physical(m=m, entries=entries)
         # residual predicate (pushed to the parquet scan) — manifest
         # pruning is file-granular, rows outside the bound remain
         if lower is not None:
@@ -817,18 +822,7 @@ class SortedTable:
         """
         m = self.manifest(version)
         entries = [e for e in m.files if self.zone_keep(m, e, predicates)]
-        if not entries:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(m.schema_json))
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.apply_dv(
-                self._reader(m).parquet(
-                    *[os.path.join(self.path, e.name) for e in entries]
-                ),
-                m,
-            )
+        df = self.read_physical(m=m, entries=entries)
         for col, (lo, hi) in predicates.items():
             pcol = self.to_physical(col, m)
             if lo is not None:
@@ -1003,25 +997,15 @@ class SortedTable:
                 if not part.startswith(("_", ".")):
                     os.link(os.path.join(src_dir, part), os.path.join(dst_dir, part))
         t = SortedTable(self.spark, dst_path)
+        # pure-metadata state carries: the cloned files hold PHYSICAL
+        # column names (rename_map), and txns keep exactly-once replay
+        # skipping intact when a stream is pointed at the clone (WAP
+        # stages, branches); sidecars are not cloned, so their
+        # registrations are dropped (re-enable to rebuild)
         t._commit_manifest(
-            Manifest(
-                version=0,
-                key=m.key,
-                files=list(m.files),
-                schema_json=m.schema_json,
-                stats_cols=list(m.stats_cols),
-                bloom_cols=[],  # sidecar not cloned; re-enable to rebuild
-                dv_files=list(m.dv_files),
+            replace(
+                m, version=0, bloom_cols=[], sketch_cols=[], drift_specs=[],
                 operation=f"clone of {self.path}@v{m.version}",
-                # pure-metadata state MUST carry: the cloned files hold
-                # PHYSICAL column names, so dropping rename_map would
-                # surface them (different columns than the source);
-                # txns keep exactly-once replay skipping intact when a
-                # stream is pointed at the clone (WAP stages, branches)
-                rename_map=dict(m.rename_map or {}),
-                txns=dict(m.txns or {}),
-                # a v0 commit has no parent to inherit from, so sketch/
-                # drift registrations do not carry either
             )
         )
         return t
@@ -1031,20 +1015,26 @@ class SortedTable:
         """Roll the table back to snapshot ``version`` as a NEW commit
         (the prior history stays intact — restore is itself
         time-travelable and vacuum-safe). No data file is rewritten:
-        the commit re-lists the old snapshot's immutable files (and,
-        like any commit, builds registered sidecar rows for the
-        re-listed files the current snapshot lacks)."""
+        the commit re-lists the old snapshot's immutable files with its
+        schema, column names (``rename_map``), zone-map columns, Bloom
+        columns and tombstones, so ``restore(v).read()`` reads as
+        ``read(v)``. The txn watermarks and the sketch/drift
+        registrations stay the current snapshot's, and, like any
+        commit, it builds registered sidecar rows for the re-listed
+        files the current snapshot lacks."""
         target = self.manifest(version)
         cur = self.manifest()
         self._commit_manifest(
-            Manifest(
+            replace(
+                cur,
                 version=cur.version + 1,
                 key=target.key,
-                files=list(target.files),
+                files=target.files,
                 schema_json=target.schema_json,
-                stats_cols=list(target.stats_cols),
-                bloom_cols=list(target.bloom_cols),
-                dv_files=list(target.dv_files),
+                stats_cols=target.stats_cols,
+                bloom_cols=target.bloom_cols,
+                dv_files=target.dv_files,
+                rename_map=target.rename_map,
                 operation=f"restore-v{version}",
             )
         )
@@ -1101,24 +1091,19 @@ class SortedTable:
         )
 
     def _commit_schema(
-        self, m: Manifest, schema, operation: str,
-        rename_map: dict[str, str] | None = None,
+        self, m: Manifest, schema, operation: str, **changes: Any
     ) -> int:
+        names = {f.name for f in schema.fields}
         self._commit_manifest(
-            Manifest(
+            replace(
+                m,
                 version=m.version + 1,
-                key=m.key,
-                files=list(m.files),
                 schema_json=schema.json(),
-                stats_cols=[c for c in m.stats_cols if c in {f.name for f in schema.fields}],
-                bloom_cols=[c for c in m.bloom_cols if c in {f.name for f in schema.fields}],
-                sketch_cols=[
-                    c for c in (m.sketch_cols or [])
-                    if c in {f.name for f in schema.fields}
-                ],
-                dv_files=list(m.dv_files),
+                stats_cols=[c for c in m.stats_cols if c in names],
+                bloom_cols=[c for c in m.bloom_cols if c in names],
+                sketch_cols=[c for c in m.sketch_cols if c in names],
                 operation=operation,
-                rename_map=rename_map,
+                **changes,
             )
         )
         return m.version + 1

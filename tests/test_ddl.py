@@ -29,19 +29,36 @@ def test_add_column_null_fills_without_rewrite(spark, sf_dir, tmp_path):
 
 
 def test_add_column_then_merge_fills_values(spark, sf_dir, tmp_path):
+    from parquet_rewriter_spark.operators.compact import compact_incremental
+
     o = load_table(spark, sf_dir, "orders")
     t = SortedTable.create(spark, str(tmp_path / "t"), o, key="o_orderkey",
-                           max_records_per_file=500)
+                           max_records_per_file=100)
     t.add_column("o_score", "double")
     muts = o.filter(F.col("o_orderkey") % 5 == 0).withColumn(
         "o_score", F.col("o_totalprice") / 1000
     )
     merge_into_table(t, muts)
-    got = t.read()
-    assert got.filter((F.col("o_orderkey") % 5 == 0)
-                      & F.col("o_score").isNull()).count() == 0
-    assert got.filter((F.col("o_orderkey") % 5 != 0)
-                      & F.col("o_score").isNotNull()).count() == 0
+
+    def check():
+        got = t.read()
+        assert got.filter((F.col("o_orderkey") % 5 == 0)
+                          & F.col("o_score").isNull()).count() == 0
+        assert got.filter((F.col("o_orderkey") % 5 != 0)
+                          & F.col("o_score").isNotNull()).count() == 0
+
+    check()
+    # a column written into ONE file keeps its values through a
+    # compaction of all of them (a re-read with a schema inferred from
+    # one file would drop them)
+    t.add_column("o_flag", "int")
+    merge_into_table(
+        t, t.read().filter(F.col("o_orderkey") < 5).withColumn("o_flag", F.lit(1))
+    )
+    n = len(t.manifest().files)
+    assert compact_incremental(t, 1_000)["files_compacted"] == n > 2
+    check()
+    assert t.read().filter(F.col("o_flag").isNotNull()).count() == 5
 
 
 def test_drop_column_metadata_only_and_merge_sheds_it(spark, sf_dir, tmp_path):
@@ -89,6 +106,11 @@ def test_restore_rolls_back_as_new_commit(spark, sf_dir, tmp_path):
     assert t.read().agg(F.sum("o_totalprice")).first()[0] == total0
     # the undone version is still reachable (history intact)
     assert t.read(version=v2 - 1).filter(F.col("o_totalprice") == 0.0).count() == 100
+    # restoring across a rename brings back the old column names too
+    t.rename_column("o_totalprice", "total")
+    v4 = t.restore(v2)
+    assert t.read().columns == t.read(v2).columns
+    assert "o_totalprice" in t.read().columns and t.manifest().version == v4
 
 
 def test_type_widening_merge(spark, sf_dir, tmp_path):

@@ -1,16 +1,20 @@
-"""Crash consistency of the derived refreshes (matview, search index).
+"""Crash consistency of the derived refreshes (matview, search index)
+and of the shared rewrite path (``read_physical`` subset read, sorted
+write, ``_adopt_staged``, ``_commit_rewrite``).
 
-Each case raises once at one step of ``MaterializedAggregate.refresh``
-or ``SearchIndex.add`` / ``remove``: the CDC diff, the distributed data
-write, ``_commit_manifest`` before its version claim, and the pointer
-write after the claim. ``nth`` picks which commit of the operation the
-fault hits (a search-index add commits the docs, then the postings).
-After the fault:
+Each case raises once at one step: the CDC diff, the distributed data
+write, ``_adopt_staged``, the commit's sidecar build
+(``sidecar.build_new``), ``_commit_manifest`` before its version claim,
+the claim itself (the snapshot ``os.link``), and the pointer write after
+the claim. ``nth`` picks which commit of the operation the fault hits
+(a search-index add commits the docs, then the postings). After the
+fault:
 
 - every table reads as its pre-state or its post-state;
 - retrying the operation converges to the from-scratch answer (the
   matview equals a full build of the final base, search equals
-  ``bm25_topk`` over the final corpus);
+  ``bm25_topk`` over the final corpus, a rewrite reaches its target
+  layout with the same rows);
 - ``fsck(repair=True, min_age_s=0)`` followed by ``validate()`` passes.
 """
 
@@ -21,7 +25,13 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
-from parquet_rewriter_spark.operators import matview, search_index, splice
+from parquet_rewriter_spark.operators import matview, search_index, sidecar, splice
+from parquet_rewriter_spark.operators.bloom import BLOOM_DIR
+from parquet_rewriter_spark.operators.compact import compact_incremental
+from parquet_rewriter_spark.operators.deletion_vectors import (
+    delete_keys_mor,
+    materialize_deletes,
+)
 from parquet_rewriter_spark.operators.matview import MaterializedAggregate
 from parquet_rewriter_spark.operators.merge import OP_COLUMN, merge_into_table
 from parquet_rewriter_spark.operators.search import bm25_topk
@@ -57,8 +67,14 @@ def _inject(monkeypatch, step: str, module, nth: int) -> list:
         # the distributed merge on any error; fault the distributed write
         monkeypatch.setattr(splice, "MAX_SPLICE_FILES", 0)
         arm(SortedTable, "_write_sorted")
+    elif step == "adopt":
+        arm(SortedTable, "_adopt_staged")
+    elif step == "sidecar":
+        arm(sidecar, "build_new")
     elif step == "claim":
         arm(SortedTable, "_commit_manifest")
+    elif step == "link":
+        arm(os, "link", lambda src, dst, *a, **k: os.path.basename(dst).startswith("_manifest.v"))
     elif step == "pointer":
         arm(os, "replace", lambda src, dst, *a, **k: os.path.basename(dst) == MANIFEST_NAME)
     return calls
@@ -192,3 +208,38 @@ def test_search_index_fault(spark, tmp_path, monkeypatch, reference, op, step, n
     assert _postings(idx) == post_post
     assert _top(idx.search(_TERMS, k=50)) == want
     _heal_and_validate(idx.table, idx.postings)
+
+
+# ------------------------------------------------- shared rewrite path
+
+
+@pytest.mark.parametrize("step", ["write", "adopt", "sidecar", "link", "pointer"])
+@pytest.mark.parametrize("op", ["compact_incremental", "materialize_deletes"])
+def test_rewrite_fault(spark, tmp_path, monkeypatch, op, step):
+    df = spark.range(0, 400).select(F.col("id"), (F.col("id") % 7).alias("grp"))
+    t = SortedTable.create(spark, str(tmp_path / "t"), df, key="id",
+                           max_records_per_file=100, bloom_cols=["grp"])
+    delete_keys_mor(t, spark.range(0, 400, 9))
+    m = t.manifest()
+    rows = sorted(tuple(r) for r in t.read().collect())
+    if op == "compact_incremental":
+        run = lambda: compact_incremental(t, 1_000)  # noqa: E731
+        done = lambda m: len(m.files) == 1  # noqa: E731
+    else:
+        run = lambda: materialize_deletes(t)  # noqa: E731
+        done = lambda m: not m.dv_files and not any(e.dv_rows for e in m.files)  # noqa: E731
+    assert not done(m)
+
+    calls = _inject(monkeypatch, step, None, nth=1)
+    with pytest.raises(Crash):
+        run()
+    monkeypatch.undo()
+    assert calls
+    assert t.manifest().version in (m.version, m.version + 1)
+    assert sorted(tuple(r) for r in t.read().collect()) == rows
+
+    run()
+    assert done(t.manifest())
+    assert sorted(tuple(r) for r in t.read().collect()) == rows
+    assert {e.name for e in t.manifest().files} <= sidecar.have_files(t, BLOOM_DIR)
+    _heal_and_validate(t)

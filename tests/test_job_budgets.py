@@ -10,8 +10,12 @@ Pins: a plain merge runs 4 jobs and a plain compact 3 — so a commit
 with no registered sidecar never lists or reads a sidecar directory.
 With bloom + distinct sketch + drift monitor registered the sidecars
 add 5 jobs to either (bloom 1, sketch 2, drift 2): a merge runs 9 and
-a compact 8. The bloom build of ``create`` is exactly one job — one
-shuffle-free scan whose rows the driver writes. One ``SearchIndex.add``
+a compact 8. The other rewrites read through the same subset reader
+(``read_physical``) and commit through ``_commit_rewrite``:
+``compact_incremental`` and ``purge_columns`` run 3 jobs,
+``delete_keys_mor`` and ``materialize_deletes`` 6 each. The bloom
+build of ``create`` is exactly one job — one shuffle-free scan whose
+rows the driver writes. One ``SearchIndex.add``
 (doc-id check, docs merge, one postings merge) runs 10 jobs and a
 search of a current index 4 (its catch-up check runs none). A catalog
 query that owns a cache scope leaves no cache behind, so re-running it
@@ -27,7 +31,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from parquet_rewriter_spark import catalog
-from parquet_rewriter_spark.operators.compact import compact
+from parquet_rewriter_spark.operators.compact import (
+    compact,
+    compact_incremental,
+    purge_columns,
+)
+from parquet_rewriter_spark.operators.deletion_vectors import (
+    delete_keys_mor,
+    materialize_deletes,
+)
 from parquet_rewriter_spark.operators.distinct_sketch import (
     enable_distinct_sketches,
 )
@@ -78,6 +90,19 @@ def test_plain_merge_and_compact_job_budgets(spark, tmp_path):
     assert not any(
         os.path.exists(os.path.join(t.path, d)) for d in SIDECAR_DIRS
     )
+
+
+def test_subset_rewrite_job_budgets(spark, tmp_path):
+    t = _table(spark, str(tmp_path / "a"))
+    assert _jobs(spark, lambda: compact_incremental(t, 10_000)) == 3
+    t = _table(spark, str(tmp_path / "b"))
+    t.drop_column("v")
+    assert _jobs(spark, lambda: purge_columns(t)) == 3
+    t = _table(spark, str(tmp_path / "c"))
+    keys = spark.range(0, 20_000, 40).select(F.col("id").alias("k"))
+    assert _jobs(spark, lambda: delete_keys_mor(t, keys)) == 6
+    assert _jobs(spark, lambda: materialize_deletes(t)) == 6
+    assert not t.manifest().dv_files
 
 
 def _three_sidecar_table(spark, path) -> SortedTable:
