@@ -997,11 +997,10 @@ class SortedTable:
                 if not part.startswith(("_", ".")):
                     os.link(os.path.join(src_dir, part), os.path.join(dst_dir, part))
         t = SortedTable(self.spark, dst_path)
-        # pure-metadata state carries: the cloned files hold PHYSICAL
-        # column names (rename_map), and txns keep exactly-once replay
-        # skipping intact when a stream is pointed at the clone (WAP
-        # stages, branches); sidecars are not cloned, so their
-        # registrations are dropped (re-enable to rebuild)
+        # rename_map and txns carry: the cloned files hold PHYSICAL
+        # column names, and txns keep exactly-once replay skipping
+        # intact when a stream is pointed at the clone (WAP stages,
+        # branches)
         t._commit_manifest(
             replace(
                 m, version=0, bloom_cols=[], sketch_cols=[], drift_specs=[],
